@@ -311,9 +311,6 @@ def _verify_broadcast_bytes() -> int:
     return min(mb * 1024 * 1024, 7 * 1024 * 1024 * 1024)
 
 
-_VERIFY_BROADCAST_BYTES = _verify_broadcast_bytes()
-
-
 def _shingle_int_bytes(docs: DataFrame) -> int:
     """TRUE serialized size of the int-shingle verify table, measured
     (not estimated): 8 B per element + 32 B per-row overhead. One agg
@@ -336,7 +333,7 @@ def _shingle_int_bytes(docs: DataFrame) -> int:
 
 
 def _verify_attach(shi_side: DataFrame, docs: DataFrame, n: int, fallback) -> DataFrame:
-    """The verify-join attachment policy (see _VERIFY_BROADCAST_BYTES):
+    """The verify-join attachment policy (see _verify_broadcast_bytes):
     explicit broadcast when the measured table fits, the caller's
     memory-safe scale hint otherwise, Catalyst-planned below the gate
     (small-SF plans bit-identical to the pre-r18 hash-matched ones)."""
@@ -362,9 +359,10 @@ def _verify_broadcasts(docs: DataFrame, n: int) -> bool:
     (>= 32 B/row by the formula) -- that short-circuit skips the
     corpus-wide measurement job in exactly the regime where it would
     be most expensive."""
-    if 2 * n * 32 > _VERIFY_BROADCAST_BYTES:
+    budget = _verify_broadcast_bytes()
+    if 2 * n * 32 > budget:
         return False
-    return 2 * _shingle_int_bytes(docs) <= _VERIFY_BROADCAST_BYTES
+    return 2 * _shingle_int_bytes(docs) <= budget
 
 
 def _pair_id_range(docs: DataFrame):
@@ -834,7 +832,7 @@ def _prefix_candidates(
         # below-gate two-column form pair-for-pair). Past the stats
         # budget (the 100 TB regime: billions of docs) the doubles
         # ride the exchange as before -- memory-safe, no new joins.
-        if 2 * n * 32 <= _VERIFY_BROADCAST_BYTES:
+        if 2 * n * 32 <= _verify_broadcast_bytes():
             pair_rows = joined.select(
                 pk, core.alias("_core")
             ).repartition(parts, "_pk")

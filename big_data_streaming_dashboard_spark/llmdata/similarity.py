@@ -328,8 +328,9 @@ def ivf_centroids(corpus: DataFrame) -> DataFrame:
     assignment, from a (cluster, vec, ...) frame -- the probe-ranking
     side of the IVF family, defined ONCE (r15 review: this block and
     the probe/score rules below were verbatim-copied between
-    `ivf_topk` and the streaming `ivf_topk_batches`; parity claims
-    must rest on shared code, the `_dense_cosine_topk` precedent)."""
+    `ivf_topk` and the streaming IVF sink, now
+    `llm_ingest.dense_topk_batches`; parity claims must rest on shared
+    code, the `_dense_cosine_topk` precedent)."""
     return (
         corpus.select("cluster", F.posexplode("vec").alias("pos", "x"))
         .groupBy("cluster", "pos")
@@ -348,7 +349,7 @@ def ivf_probe_rank(qs: DataFrame, cents: DataFrame, n_probe: int) -> DataFrame:
     distance to the query, keep the ``n_probe`` nearest; ties
     (d2, cluster). qs must carry (query_id, qvec); returns
     (query_id, qvec, probe_cluster). Shared by `ivf_topk` and
-    `llm_ingest.ivf_topk_batches`."""
+    `llm_ingest.dense_topk_batches`."""
     qc = qs.select("query_id", "qvec").crossJoin(F.broadcast(cents)).select(
         "query_id",
         "qvec",
@@ -973,8 +974,8 @@ def embedding_neardup_pairs(
     # corpus-sized side OOMs the driver); below the threshold the
     # Catalyst-planned broadcast is safe and faster
     from .dedup import (
-        _VERIFY_BROADCAST_BYTES,
         BROADCAST_SAFE_ROWS,
+        _verify_broadcast_bytes,
         corpus_count,
         scale_hint,
     )
@@ -1034,7 +1035,7 @@ def embedding_neardup_pairs(
     def _vec_attach(side: DataFrame) -> DataFrame:
         if n <= BROADCAST_SAFE_ROWS:
             return side
-        if 2 * n * (dim * 8 + 32) <= _VERIFY_BROADCAST_BYTES:
+        if 2 * n * (dim * 8 + 32) <= _verify_broadcast_bytes():
             return F.broadcast(side)
         return scale_hint(side, n)
 
@@ -1332,7 +1333,7 @@ def _pq_assign_col(cents: list[list[float]], sub: Column) -> Column:
     the LOWEST code via array_position-of-min. Defined ONCE at module
     level: `pq_encode` assigns with it during training and for the
     final encode, and `pq_code_col` (the frozen-model delta encoder
-    behind `streaming.llm_ingest.append_pq_index`) reuses it -- so an
+    behind `streaming.llm_ingest.append_dense_index`) reuses it -- so an
     appended vector's codes are bit-identical to what a rebuild under
     the SAME codebooks would assign, by shared code rather than by
     re-derivation."""
@@ -1375,7 +1376,7 @@ def pq_lut(qv: list[float], codebooks: list[list[list[float]]]) -> list[list[flo
     """Per-query ADC lookup table: lut[s][c] = squared distance of the
     query's s-th sub-vector to codebook centroid c -- Python-float
     arithmetic in left-to-right order, defined ONCE and shared by the
-    batch `pq_topk` (as literals) and the streaming `pq_topk_batches`
+    batch `pq_topk` (as literals) and the streaming `dense_topk_batches`
     (as broadcast rows), so the two paths' ADC scores are bit-equal
     by construction."""
     d_sub = len(codebooks[0][0])
@@ -1521,7 +1522,7 @@ def pq_topk(
     for b in branches[1:]:
         scored = scored.unionByName(b)
     # shortlist + exact re-rank on unit vectors (cosine == dot):
-    # shared tail with the streaming pq_topk_batches
+    # shared tail with the streaming dense_topk_batches
     return pq_shortlist_rerank(scored, k, shortlist)
 
 

@@ -1514,77 +1514,78 @@ WHERE s._emit""",
 # ---------------------------------------------------------------------------
 
 DRIVER_WINDOW: list[str] = [
-    # r19 window, computed by plans/rotation.py (pasted verbatim,
-    # per the standing r19 swap plan recorded in the r18 comment).
-    # 2 rows-only + ALL 37 r16-attested queries (mandatory at their
-    # 3-round bound, newest driver row r16) + the 11 stalest
-    # (alphabetically-first, all tied at newest-row r17) of the
-    # 48-query r17/r18-attested block = exactly 50 slots, ZERO
-    # slack. The registry remains FROZEN at 135 (binding capacity
-    # arithmetic, r14 verdict item 2): 135 = 50 (r18) + 48 (r17)
-    # + 37 (r16); steady state cycles three blocks (50/48/37).
-    # New work ships as depth on existing slots; unfreezing
+    # r20 window, computed by plans/rotation.py against the
+    # CORRECTNESS_r01..r19 ledgers and pasted verbatim, executing the
+    # r20 swap plan recorded in the r19 comment: 2 rows-only + ALL 37
+    # r17-attested queries left out of the r19 window (mandatory at
+    # their 3-round bound, newest attested row r17) + the 11 stalest
+    # (alphabetically-first, all tied at newest-row r18) of the
+    # 48-query r18-attested block = exactly 50 slots, ZERO slack.
+    # Left-out set verified by the tool: the other 37 r18-attested
+    # queries and the 48 r19-attested ones, nothing at or past its
+    # bound. The registry remains FROZEN at 135 (binding capacity
+    # arithmetic, r14 verdict item 2); steady state cycles three
+    # blocks. New work ships as depth on existing slots; unfreezing
     # requires amending the bound to 4 rounds here as an explicit
     # documented decision.
-    # r20 swap plan (run the tool; it accounts for this): after a
-    # successful r19 run the 37 r17-attested queries left out here
-    # reach their bound in r20 staggered (11 rotate here; the
-    # remaining 37 hit the bound next round).
+    # r21 swap plan (run the tool; it accounts for this): after a
+    # successful r20 run the 37 r18-attested queries left out here
+    # reach their bound in r21.
     # rows-only by design -- permanently in-window per r3 advice
     "approx_aggregates",
     "media_feature_census",
-    # --- 37 mandatory: the r16-attested block, at its 3-round
-    # LRU bound (newest driver row r16) ---
-    "doc_corpus_mixture",
-    "doc_curation",
-    "doc_curation_extended",
-    "doc_curation_full",
-    "doc_domain_cap",
-    "doc_exact_dedup",
-    "doc_gopher_rules",
-    "doc_importance_weights",
-    "doc_minhash_calibration",
-    "doc_minhash_signature",
-    "doc_neardup_clusters",
-    "doc_neardup_pairs",
-    "doc_neardup_recall",
-    "doc_ngram_jaccard",
-    "doc_packing_efficiency",
-    "doc_repeated_passages",
-    "doc_repeated_passages_exact",
-    "doc_repetition",
-    "doc_semantic_neardup",
-    "doc_stratified_sample",
-    "doc_token_stats",
-    "dominant_suppliers",
-    "emb_ann_recall",
-    "emb_ivf_topk",
-    "emb_kmeans_inertia",
-    "emb_source_drift",
-    "events_by_hour",
-    "gapfill_5min",
-    "grouping_sets_shipping",
-    "large_volume_orders",
-    "late_lines_priority",
-    "order_priority_exists",
-    "region_market_share",
-    "revenue_by_nation",
-    "sole_late_supplier",
-    "top_customers",
-    "unpivot_event_metrics",
-    # --- 11 stalest others: alphabetically-first of the 48-query
-    # r17-attested block (all tied at newest-row r17) ---
-    "above_user_avg",
-    "bi_nation_volume",
-    "brand_supplier_variety",
-    "bronze_radiation",
-    "cube_order_stats",
-    "dedup_first_occurrence",
-    "disjunctive_brand_revenue",
-    "doc_bm25_topk",
-    "doc_bpe_encode",
-    "doc_bpe_merges",
-    "doc_chunk_spans",
+    # --- 37 mandatory: the r17-attested block, at its 3-round
+    # LRU bound (newest attested row r17) ---
+    "doc_containment_pairs",
+    "doc_contamination",
+    "doc_corpus_census",
+    "doc_hybrid_rrf_topk",
+    "doc_source_overlap",
+    "doc_split_leakage_safe",
+    "doc_subword_stats",
+    "downsample_5min",
+    "emb_hamming_topk",
+    "emb_ivf_topk_tuned",
+    "emb_knn_label_vote",
+    "emb_label_centroids",
+    "emb_lsh_topk",
+    "emb_matryoshka_recall",
+    "emb_neardup_pairs",
+    "emb_pq_topk",
+    "emb_quant_recall",
+    "emb_quantize_int8",
+    "emb_rerank_topk",
+    "emb_topk_cosine",
+    "flagship_event_stats",
+    "local_supplier_volume",
+    "moving_avg_events",
+    "national_part_share",
+    "promo_revenue_share",
+    "range_join_signup_events",
+    "recent_points",
+    "regional_min_quote",
+    "returned_top_customers",
+    "rolling_stats",
+    "route_counts",
+    "routed_records",
+    "session_window_events",
+    "silver_error_breakdown",
+    "silver_validate",
+    "user_sessions",
+    "value_percentiles",
+    # --- 11 stalest others: alphabetically-first of the r18-attested
+    # block (all tied at newest-row r18) ---
+    "activity_reconcile",
+    "alerts_active",
+    "alerts_cooldown",
+    "alerts_cooldown_exact",
+    "alerts_ws_messages",
+    "asof_latest_order",
+    "brand_supplier_margin",
+    "customer_order_histogram",
+    "customer_revenue_pareto",
+    "discount_band_revenue",
+    "doc_bigram_lm",
 ]
 
 # Fail fast at import: a DRIVER_WINDOW name with no QUERIES entry would

@@ -59,6 +59,7 @@ majority vote), each exactly matching its batch twin.
 from __future__ import annotations
 
 from collections.abc import Iterator
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -974,1219 +975,193 @@ def write_ann_index(
     return path
 
 
-def write_ivf_index(
-    embeddings: DataFrame,
-    path: str,
-    n_lists: int = 8,
-    kmeans_iterations: int = 3,
+# --- the dense serving-index family: one spec, three entry points ----------
+
+
+class _DenseKind(NamedTuple):
+    """One row of the dense family's spec table. Every dense kind is a
+    partitioning choice (flat, or k-means ``cells`` PARTITIONED BY the
+    cluster id plus the frozen ``centroids`` a probe ranks to prune its
+    scan to n_probe cell directories) times a coarse codec over the
+    scan directory; every codec but ``raw`` stores the unit float
+    vectors in ``vecs`` and re-ranks a per-query shortlist exactly from
+    them (`pq_shortlist_rerank`). The frozen model an append encodes
+    under is ``centroids`` (when ``ivf``) plus ``codebooks`` (when the
+    codec is ``pq``); the other codecs are per-row facts given their
+    stamped knob."""
+
+    display: str  # the kind's name in refusal messages
+    scan: str  # the coarse-scan directory
+    ivf: bool  # cluster-partitioned cells + a frozen centroids model
+    codec: str  # raw | pq | prefix | quant -- see `_dense_encode`
+    knobs: dict  # build knob -> default, stamped in this order
+
+
+_IVF_KNOBS = {"n_lists": 8, "kmeans_iterations": 3}
+_PQ_KNOBS = {"n_subspaces": 8, "n_codes": 16, "iterations": 3}
+
+# kind -> spec; the keys are the stamped ``kind`` strings, so every
+# existing root keeps its layout and fingerprint keys
+_DENSE_KINDS: dict[str, _DenseKind] = {
+    "ivf": _DenseKind("IVF", "cells", True, "raw", _IVF_KNOBS),
+    "pq": _DenseKind("PQ", "codes", False, "pq", _PQ_KNOBS),
+    "matryoshka": _DenseKind(
+        "matryoshka", "prefixes", False, "prefix", {"probe_dim": 16}
+    ),
+    "quant": _DenseKind("quant", "codes", False, "quant", {"bits": 8}),
+    "ivfpq": _DenseKind(
+        "IVF-PQ", "cells", True, "pq", {**_IVF_KNOBS, **_PQ_KNOBS}
+    ),
+    "ivfmat": _DenseKind(
+        "IVF-matryoshka", "cells", True, "prefix",
+        {**_IVF_KNOBS, "probe_dim": 16},
+    ),
+    "ivfquant": _DenseKind(
+        "IVF-quant", "cells", True, "quant", {**_IVF_KNOBS, "bits": 8}
+    ),
+}
+
+
+class _DenseIndex(NamedTuple):
+    """A dense root as frames plus its frozen codec model -- what the
+    per-batch plan reads. The writer builds one with no frames (only
+    the model, to encode with); tests build one over in-memory frames
+    to exercise the plan I/O-free."""
+
+    kind: str
+    scan: DataFrame | None
+    vecs: DataFrame | None = None
+    centroids: DataFrame | None = None
+    codebooks: list | None = None
+    probe_dim: int | None = None
+    max_code: int | None = None
+
+
+def _max_code(bits) -> int | None:
+    return None if bits is None else (1 << (int(bits) - 1)) - 1
+
+
+def write_dense_index(
+    embeddings: DataFrame, path: str, kind: str, **knobs: int
 ) -> str:
-    """Persist the IVF (inverted-file) ANN artifact the streaming
-    probe reads -- the cell-partitioned sibling of `write_ann_index`,
-    giving the serving family the faiss-style nprobe trade
-    (`similarity.ivf_topk`'s knobs) online:
+    """Persist a dense serving index of the stamped ``kind``:
 
-      ``path/cells`` -- (vec_id, label, vec), written PARTITIONED BY
-      the k-means cluster id, so a probe's scan prunes to its
-      n_probe cell directories (the BM25 term-bucket layout applied
-      to vector cells -- at 100 TB the cluster id is the partition
-      key and a probe touches n_probe partitions, never the corpus).
-      ``path/centroids`` -- (cluster, centroid), the k tiny rows a
-      batch ranks to choose its cells; per-cluster means of the FINAL
-      assignment, the same frame `similarity.ivf_topk` computes
-      in-flight (shared rule, so stream and batch probe the same
-      cells).
+      - ``ivf`` -- raw float cells under k-means partitioning;
+      - ``pq`` / ``ivfpq`` -- product-quantization codes (the codebooks
+        are trained by `similarity.pq_encode` on the full corpus);
+      - ``matryoshka`` / ``ivfmat`` -- the first ``probe_dim`` dims of
+        each unit vector, so a probe reads probe_dim/dim of the float
+        bytes by construction;
+      - ``quant`` / ``ivfquant`` -- symmetric ``bits``-bit tinyint codes
+        (the `similarity._quant_code_vectors` rule).
 
-    The assignment bakes the build knobs in (same argument as the
-    split index), so n_lists / kmeans_iterations are stamped into the
-    fingerprint. A corpus delta appends exactly under the FROZEN
-    stored centroids (`append_ivf_index` -- the cell of a vector is a
-    per-row fact given the means); what moves the means -- reTRAINING
-    -- is a rebuild + nonce re-stamp, failing over pinned probe
-    streams by the family rule.
-
-    Reference parity: the probe over this artifact reproduces
-    `similarity.ivf_topk`'s multi-probe ranking through the SHARED
-    `ivf_centroids` / `ivf_probe_rank` / `ivf_exact_rank` rules (see
-    `ivf_topk_batches`)."""
-    from ..llmdata.similarity import _dvec, ivf_centroids, kmeans_assign
-
-    spark = embeddings.sparkSession
-    assigned = kmeans_assign(
-        embeddings, k=n_lists, iterations=kmeans_iterations
-    )
-    cells = embeddings.select(
-        "vec_id", "label", _dvec("embedding").alias("vec")
-    ).join(assigned, "vec_id")
-    # static overwrite EXPLICITLY (r15 review): under a session-wide
-    # partitionOverwriteMode=dynamic, an in-place rebuild whose new
-    # Lloyd run leaves some cluster empty would keep that cluster's
-    # OLD cells directory -- stale vectors behind a fresh nonce
-    (
-        cells.write.mode("overwrite")
-        .option("partitionOverwriteMode", "static")
-        .partitionBy("cluster")
-        .parquet(path + "/cells")
-    )
-    (
-        ivf_centroids(spark.read.parquet(path + "/cells"))
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(path + "/centroids")
-    )
-    _write_index_fingerprint(
-        spark,
-        path,
-        {
-            "kind": "ivf",
-            "n_lists": n_lists,
-            "kmeans_iterations": kmeans_iterations,
-        },
-    )
-    return path
-
-
-def ivf_topk_batches(
-    queries: DataFrame,
-    index_cells: DataFrame,
-    index_centroids: DataFrame,
-    out_path: str,
-    k: int = 10,
-    n_probe: int = 2,
-    checkpoint: str | None = None,
-    index_path: str | None = None,
-    expected_fingerprint: str | None = None,
-    exclude_self: bool = True,
-):
-    """Streaming IVF top-k: each arriving query vector ranks the k
-    stored centroids (broadcast, tiny), probes its ``n_probe``
-    nearest cells, and exact-scores ONLY those cells' vectors -- the
-    online form of `similarity.ivf_topk`, candidate set ~
-    n_probe/n_lists of the corpus where the brute-force
-    `_dense_cosine_topk` path scans everything.
-
-    Probe rule = the batch multi-probe branch through the SHARED
-    helpers (`similarity.ivf_probe_rank` / `ivf_exact_rank`, defined
-    once -- the `_dense_cosine_topk` discipline): squared distance to
-    the final-assignment means, (d2, cluster) tie order, (cos DESC,
-    vec_id) rank ties -- at n_probe >= 2 the output equals `ivf_topk`
-    for corpus-replayed queries (pinned on the fixture). Caveat the
-    claim rests on (r15 review): the stored centroids are float means
-    materialized by the WRITER's execution, while the batch computes
-    them in-flight -- ULP-level summation-order differences between
-    the two physical plans can flip a probe only for a query
-    near-equidistant between its n_probe-th and (n_probe+1)-th cells,
-    the same margin argument the kmeans oracle pairing rests on; the
-    result either way is a valid IVF probe at the same budget. The
-    n_probe=1 delta is documented: the batch path sends a corpus
-    query to its STORED cell (assigned under the last Lloyd
-    iteration's pre-update centroids), which an external query does
-    not have -- the serving rule is nearest FINAL centroid, the
-    canonical IVF probe.
-
-    Scale: the probed clusters are a bounded driver artifact
-    (<= n_lists ints) turned into a literal IN against the
-    cluster-partitioned cells -- static partition pruning, the BM25
-    term-bucket idiom -- and the per-query probe frame broadcasts.
-    Same ``checkpoint`` / ``index_path`` / ``expected_fingerprint``
-    nonce discipline as the family; ``exclude_self`` as in
-    `_dense_cosine_topk` (True for corpus-replay parity, False for
-    external request ids)."""
-    # kind-checked one-read snapshot (`_kind_snapshot`): the pin
-    # names a root -- verify it IS this kind of root and seed the
-    # unpinned nonce snapshot from the same read
-    _check = _pin_index(
-        queries.sparkSession,
-        index_path,
-        expected_fingerprint,
-        "IVF index at {path} was overwritten under a probe stream "
-        "(fingerprint {now} != snapshot {expected}); rebuild the probe "
-        "stream against the new index instead",
-        snapshot_nonce=_kind_snapshot(
-            queries.sparkSession, index_path, "ivf", "IVF",
-            "ivf_topk_batches",
-        ),
-    )
-    _centroid_count(index_centroids, "ivf_topk_batches")
-
-    def _emit(batch: DataFrame, _epoch: int) -> None:
-        _check(batch.sparkSession)
-        if batch.isEmpty():
-            return
-        # the ONE per-batch IVF plan, shared with the dense-retriever
-        # dispatch (r17)
-        ranked, cleanup = _ivf_ranked_plan(
-            batch, index_cells, index_centroids, k, n_probe, exclude_self
-        )
-        try:
-            ranked.write.mode("append").parquet(out_path)
-        finally:
-            cleanup()
-
-    writer = (
-        queries.writeStream.foreachBatch(_emit)
-        .outputMode("append")
-        .trigger(availableNow=True)
-    )
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
-
-
-def write_pq_index(
-    embeddings: DataFrame,
-    path: str,
-    n_subspaces: int = 8,
-    n_codes: int = 16,
-    iterations: int = 3,
-    dim: int | None = None,
-) -> str:
-    """Persist the product-quantization artifact -- the RAM-bound
-    billion-vector member of the serving-index family (LSH bands /
-    brute vecs / IVF cells / now PQ codes):
-
-      ``path/codes`` -- (vec_id, label, codes array<int>): the scan
-      side, ~n_subspaces bytes per vector vs dim*8 raw. EVERY probe
-      reads only this.
-      ``path/vecs`` -- (vec_id, v): the unit float vectors, read only
-      for the per-query shortlist's exact re-rank.
-      ``path/codebooks`` -- (s, code, centroid): the trained model,
-      n_subspaces x n_codes tiny rows the probe turns into per-query
-      lookup tables.
-
-    Training is `similarity.pq_encode` (sorted-fold means --
-    deterministic in partitioning). A corpus delta appends EXACTLY by
-    encoding with the FROZEN codebooks (`append_pq_index` -- the
-    standard faiss add-with-trained-index practice: codes are per-doc
-    facts given the model); reTRAINING the model is a rebuild. Knobs
-    stamp into the fingerprint."""
-    from ..llmdata.similarity import EMBEDDING_DIM, pq_encode
-
-    dim = EMBEDDING_DIM if dim is None else dim
-    spark = embeddings.sparkSession
-    encoded, codebooks = pq_encode(
-        embeddings, n_subspaces, n_codes, iterations, dim
-    )
-    encoded.select("vec_id", "label", "codes").write.mode(
-        "overwrite"
-    ).parquet(path + "/codes")
-    encoded.select("vec_id", "v").write.mode("overwrite").parquet(
-        path + "/vecs"
-    )
-    rows = [
-        (s, c, codebooks[s][c])
-        for s in range(len(codebooks))
-        for c in range(len(codebooks[s]))
-    ]
-    (
-        spark.createDataFrame(rows, "s int, code int, centroid array<double>")
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(path + "/codebooks")
-    )
-    _write_index_fingerprint(
-        spark,
-        path,
-        {
-            "kind": "pq",
-            "n_subspaces": n_subspaces,
-            "n_codes": n_codes,
-            "iterations": iterations,
-        },
-    )
-    return path
-
-
-def append_pq_index(embeddings: DataFrame, path: str) -> str:
-    """Fold an embedding delta into an existing `write_pq_index` root
-    by encoding the new vectors with the FROZEN stored codebooks --
-    the faiss add-with-trained-index practice. Given the model, a
-    vector's codes are per-row facts (`similarity.pq_code_col`, the
-    same `_pq_assign_col` arithmetic `pq_encode` assigns with), so
-    append-then-probe equals a rebuild that encodes the merged corpus
-    under the SAME codebooks, row-for-row (pinned by
-    tests/test_streaming.py::test_streaming_pq_append_equals_frozen_model_rebuild);
-    what an append deliberately does NOT do is retrain -- the model
-    drifts from the corpus it summarizes as deltas accumulate, and the
-    periodic retrain is a rebuild (the LSM-refresh story, same as IVF).
-
-    Loud premise guards, mirroring the split/BM25 appends:
-      - an unstamped artifact and a non-PQ artifact refuse with
-        DISTINCT messages (the r14 ADVICE rule);
-      - a codebooks/fingerprint subspace-count disagreement refuses
-        (a mixed artifact would encode deltas under a different rule
-        than the stored codes);
-      - delta vectors whose width disagrees with the stored model
-        refuse (a short vector would zip_with-pad to null distances
-        and assign garbage codes silently);
-      - delta vec_ids already present in ``codes`` refuse (a
-        double-append would duplicate shortlist rows and corrupt the
-        per-query rank window);
-      - a TORN artifact (codes/vecs row counts disagree -- the crash
-        window between the two appends below) refuses before writing
-        anything, instead of burying the tear deeper.
-    Write order: codes, vecs, then the nonce re-stamp LAST (the stamp
-    is the completion marker). A crash BETWEEN the data writes leaves
-    the old nonce and the next append's/probe's torn-artifact guard
-    catches it; a crash AFTER both writes but BEFORE the stamp leaves
-    a CONSISTENT artifact under the old nonce -- retrying the delta
-    refuses as a double-append, and pinned probe streams keep passing
-    their stale nonce check, so recover with `restamp_index` once the
-    counts confirm the fold completed. The re-stamp fails over
-    running pinned probe streams per the family rule. An empty delta
-    is a no-op WITHOUT a re-stamp (no pointless stream failover).
-
-    Concurrency delta (applies to the whole append family): appends
-    are not snapshot-isolated -- the data files land BEFORE the
-    re-stamp, so a pinned stream's micro-batch that runs concurrently
-    with an append can read a torn view (e.g. new codes whose vecs
-    rows are not yet visible silently miss the shortlist join) for
-    that one batch before the nonce check fails the stream over.
-    Quiesce probe streams across an append, or drive appends from a
-    cadence loop that serializes them with the probes (the
-    `split_verdicts_with_cadence` pattern)."""
-    from ..llmdata.similarity import _dvec, _normalize, pq_code_col
-
-    spark = embeddings.sparkSession
-    fp = _read_stamped_fingerprint(
-        spark, path, "pq", "PQ", "append_pq_index"
-    )
-    codebooks = _load_codebooks(spark.read.parquet(path + "/codebooks"))
-    if int(fp["n_subspaces"]) != len(codebooks):
-        raise ValueError(
-            f"append_pq_index: fingerprint stamps n_subspaces="
-            f"{fp['n_subspaces']} but the stored codebooks span "
-            f"{len(codebooks)} subspaces -- mixed artifact, rebuild"
-        )
-    dim = len(codebooks) * len(codebooks[0][0])
-
-    new = embeddings.select(
-        "vec_id", "label", _normalize(_dvec("embedding")).alias("v")
-    ).persist()
-    try:
-        if new.isEmpty():
-            return path
-        bad_dim = new.filter(F.size("v") != dim).count()
-        if bad_dim:
-            raise ValueError(
-                f"append_pq_index: {bad_dim} delta vector(s) are not "
-                f"{dim}-dimensional -- the stored model encodes exactly "
-                f"{dim} dims; a ragged delta would assign garbage codes"
-            )
-        codes = spark.read.parquet(path + "/codes")
-        _require_untorn(
-            codes, spark.read.parquet(path + "/vecs"), "codes",
-            "append_pq_index",
-        )
-        _require_disjoint_delta(new, codes, "append_pq_index")
-        encoded = new.withColumn("codes", pq_code_col(codebooks))
-        encoded.select("vec_id", "label", "codes").write.mode(
-            "append"
-        ).parquet(path + "/codes")
-        encoded.select("vec_id", "v").write.mode("append").parquet(
-            path + "/vecs"
-        )
-    finally:
-        new.unpersist()
-    # re-stamp via the ONE nonce-refresh path -- preserves whatever
-    # keys the writer stamped, so a fingerprint-schema change cannot
-    # be silently dropped by a hand-enumerated dict here (r15 review)
-    return restamp_index(spark, path)
-
-
-def pq_topk_batches(
-    queries: DataFrame,
-    index_codes: DataFrame,
-    index_vecs: DataFrame,
-    index_codebooks: DataFrame,
-    out_path: str,
-    k: int = 5,
-    shortlist: int | None = None,
-    checkpoint: str | None = None,
-    index_path: str | None = None,
-    expected_fingerprint: str | None = None,
-    exclude_self: bool = True,
-):
-    """Streaming PQ top-k (shortlist-then-rerank): each arriving query
-    vector gets a per-query ADC lookup table computed driver-side
-    from the stored codebooks (the SAME `similarity.pq_lut` Python
-    arithmetic the batch `pq_topk` bakes into literals -- shared, so
-    the two paths' ADC scores are bit-equal), shipped as broadcast
-    rows; the codes scan sums n_subspaces table lookups per (vector,
-    query) in written subspace order (`pq_adc_dist`, shared); the
-    per-query shortlist joins `vecs` for the exact re-rank
-    (`pq_shortlist_rerank`, shared) -- so for corpus-replayed queries
-    the output equals the batch operator row-for-row (pinned), and
-    NO float vector outside the shortlist is ever read.
-
-    Bounded driver work per batch: the arriving queries collect
-    (micro-batch-sized, the serving analog of the batch path's
-    driver-side query collection) and each costs n_subspaces x
-    n_codes x d_sub float ops for its table. ``shortlist`` defaults
-    to the batch rule max(8k, corpus/8) via one count on the codes
-    artifact at construction. Same ``checkpoint`` / pin / ``exclude_self``
-    discipline as the family."""
-    # kind-checked one-read snapshot (`_kind_snapshot`): the pin
-    # names a root -- verify it IS this kind of root and seed the
-    # unpinned nonce snapshot from the same read
-    _check = _pin_index(
-        queries.sparkSession,
-        index_path,
-        expected_fingerprint,
-        "PQ index at {path} was overwritten under a probe stream "
-        "(fingerprint {now} != snapshot {expected}); rebuild the probe "
-        "stream against the new index instead",
-        snapshot_nonce=_kind_snapshot(
-            queries.sparkSession, index_path, "pq", "PQ",
-            "pq_topk_batches",
-        ),
-    )
-
-    codebooks = _load_codebooks(index_codebooks)
-    n_corpus = _require_untorn(
-        index_codes, index_vecs, "codes", "pq_topk_batches"
-    )
-    if shortlist is None:
-        shortlist = max(8 * k, n_corpus // 8)
-
-    def _emit(batch: DataFrame, _epoch: int) -> None:
-        _check(batch.sparkSession)
-        if batch.isEmpty():
-            return
-        # the ONE per-batch PQ plan, shared with the dense-retriever
-        # dispatch (r17 -- the _ivfpq_ranked_plan precedent)
-        ranked, _ = _pq_ranked_plan(
-            batch, index_codes, index_vecs, codebooks, k, shortlist,
-            exclude_self,
-        )
-        ranked.write.mode("append").parquet(out_path)
-
-    writer = (
-        queries.writeStream.foreachBatch(_emit)
-        .outputMode("append")
-        .trigger(availableNow=True)
-    )
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
-
-
-def write_matryoshka_index(
-    embeddings: DataFrame, path: str, probe_dim: int = 16
-) -> str:
-    """Persist the truncated-width (matryoshka) serving artifact --
-    the physical form of the budget `similarity.matryoshka_recall`
-    evaluates: the evaluator says which prefix width is safe, this
-    index SERVES at that width.
-
-      ``path/prefixes`` -- (vec_id, label, vp): the first
-        ``probe_dim`` dims of each unit vector, the SCAN side. The
-        byte win is structural, not a runtime projection: parquet
-        cannot partially read an array column, so the prefix lives in
-        its own artifact and a probe reads probe_dim/dim of the float
-        bytes by construction.
-      ``path/vecs`` -- (vec_id, v): full-width unit vectors, read
-        only for the per-query shortlist's exact re-rank.
-
-    Serving is the PQ pattern with prefix-cosine as the coarse score
-    (`matryoshka_topk_batches` reuses `pq_shortlist_rerank`
-    verbatim). Prefixes are sliced from the UNIT vector -- cosine is
-    invariant to the per-vector positive rescale, so the prefix
-    ranking is the truncated-embedding ranking the evaluator
-    measures, while dot-on-unit == cosine keeps the shared rerank
-    tail exact. There is NO trained model here, so appends are exact
-    with no premise at all (`append_matryoshka_index` -- prefixes are
-    per-row facts, period); probe_dim stamps into the fingerprint."""
-    from ..llmdata.similarity import _dvec, _normalize
-
-    spark = embeddings.sparkSession
-    unit = embeddings.select(
-        "vec_id", "label", _normalize(_dvec("embedding")).alias("v")
-    ).persist()
-    try:
-        if unit.isEmpty():
-            # refuse (the pq_encode rule): an empty build would stamp a
-            # valid root whose appends/probes then die on a bare
-            # first()=None TypeError instead of a distinct message
-            raise ValueError("write_matryoshka_index: empty embeddings input")
-        # knob guards (the quant bits rule): probe_dim < 1 slices an
-        # EMPTY prefix whose cosine is NULL for every row -- the
-        # shortlist degenerates to lowest-vec_id, silently wrong;
-        # probe_dim > dim silently stores full-width vectors,
-        # negating the byte win the artifact exists for (== dim is
-        # legitimate: the brute-force collapse)
-        dim = len(unit.select("v").first()["v"])
-        if not 1 <= probe_dim <= dim:
-            raise ValueError(
-                f"write_matryoshka_index: probe_dim={probe_dim} out of "
-                f"range [1, {dim}] for this corpus's vector width"
-            )
-        (
-            unit.select(
-                "vec_id",
-                "label",
-                F.slice(F.col("v"), 1, probe_dim).alias("vp"),
-            )
-            .write.mode("overwrite")
-            .parquet(path + "/prefixes")
-        )
-        unit.select("vec_id", "v").write.mode("overwrite").parquet(
-            path + "/vecs"
-        )
-    finally:
-        unit.unpersist()
-    _write_index_fingerprint(
-        spark, path, {"kind": "matryoshka", "probe_dim": probe_dim}
-    )
-    return path
-
-
-def append_matryoshka_index(embeddings: DataFrame, path: str) -> str:
-    """Fold an embedding delta into a `write_matryoshka_index` root.
-    The family's simplest append: there is no model to freeze --
-    a vector's unit form and its prefix are per-row facts -- so
-    append-then-probe equals rebuild-then-probe with NO premise (the
-    BM25 class, not the frozen-model class). Guards: unstamped /
-    non-matryoshka artifacts refuse distinctly; ragged delta dims
-    refuse; duplicate delta vec_ids refuse; a TORN prefixes/vecs
-    artifact refuses. Nonce re-stamps LAST; an empty delta is a
-    no-op. Appends are not snapshot-isolated -- see
-    `append_pq_index`'s concurrency delta."""
-    from ..llmdata.similarity import _dvec, _normalize
-
-    spark = embeddings.sparkSession
-    fp = _read_stamped_fingerprint(
-        spark, path, "matryoshka", "matryoshka", "append_matryoshka_index"
-    )
-    probe_dim = int(fp["probe_dim"])
-    dim = _stored_dim(
-        spark.read.parquet(path + "/vecs"), "v", "vecs",
-        "append_matryoshka_index",
-    )
-
-    new = embeddings.select(
-        "vec_id", "label", _normalize(_dvec("embedding")).alias("v")
-    ).persist()
-    try:
-        if new.isEmpty():
-            return path
-        bad_dim = new.filter(F.size("v") != dim).count()
-        if bad_dim:
-            raise ValueError(
-                f"append_matryoshka_index: {bad_dim} delta vector(s) are "
-                f"not {dim}-dimensional -- the stored corpus is; a ragged "
-                "delta would rank against misaligned prefixes"
-            )
-        vecs = spark.read.parquet(path + "/vecs")
-        _require_untorn(
-            spark.read.parquet(path + "/prefixes"), vecs, "prefixes",
-            "append_matryoshka_index",
-        )
-        _require_disjoint_delta(new, vecs, "append_matryoshka_index")
-        (
-            new.select(
-                "vec_id",
-                "label",
-                F.slice(F.col("v"), 1, probe_dim).alias("vp"),
-            )
-            .write.mode("append")
-            .parquet(path + "/prefixes")
-        )
-        new.select("vec_id", "v").write.mode("append").parquet(
-            path + "/vecs"
-        )
-    finally:
-        new.unpersist()
-    return restamp_index(spark, path)
-
-
-def matryoshka_topk_batches(
-    queries: DataFrame,
-    index_prefixes: DataFrame,
-    index_vecs: DataFrame,
-    out_path: str,
-    k: int = 5,
-    shortlist: int | None = None,
-    checkpoint: str | None = None,
-    index_path: str | None = None,
-    expected_fingerprint: str | None = None,
-    exclude_self: bool = True,
-):
-    """Streaming truncated-width top-k (prefix-shortlist-then-rerank):
-    each arriving query is scored against the prefix artifact by
-    prefix-cosine (the scan reads probe_dim/dim of the float bytes by
-    construction -- the matryoshka budget made physical), the
-    per-query shortlist joins the full-width vectors, and the exact
-    re-rank runs through `pq_shortlist_rerank` VERBATIM -- the PQ
-    serving pattern with prefix-cosine as the coarse score instead of
-    ADC (coarse score rides the `_adc` column negated, so (_adc ASC,
-    vec_id) == (prefix_cos DESC, vec_id)).
-
-    Pinned against a pure-Python recompute of the cascade at
-    probe_dim=16, and at probe_dim == dim (prefix == full vector) the
-    cascade collapses to exact brute-force -- pinned against the same
-    recompute at full width. The probe width is fixed at WRITE time
-    (the artifact is the prefix); the recall the width buys is what
-    `emb_matryoshka_recall` measures, and the shortlist+rerank
-    recovers most of what raw truncation loses (measured in
-    PLANS.md). Default ``shortlist`` = the family's corpus/8 budget.
-    Same pin / checkpoint / ``exclude_self`` discipline as the
-    family."""
-    fp = None
-    if index_path is not None:
-        # one read: kind check, the nonce snapshot, and (below) the
-        # pinned-width authority (r17). The fingerprint read is always
-        # fresh, so it stays valid across a rebuild -- unlike the
-        # caller-supplied frames, whose file listing a rebuild
-        # invalidates; the PIN verification must therefore run before
-        # any frame I/O (a stale pin refuses with the family message,
-        # never FAILED_READ_FILE).
-        fp = _read_stamped_fingerprint(
-            queries.sparkSession, index_path, "matryoshka", "matryoshka",
-            "matryoshka_topk_batches",
-        )
-    _check = _pin_index(
-        queries.sparkSession,
-        index_path,
-        expected_fingerprint,
-        "matryoshka index at {path} was overwritten under a probe stream "
-        "(fingerprint {now} != snapshot {expected}); rebuild the probe "
-        "stream against the new index instead",
-        snapshot_nonce=fp.get("nonce") if fp is not None else None,
-    )
-
-    probe_dim = frame_dim = _stored_dim(
-        index_prefixes, "vp", "prefixes", "matryoshka_topk_batches"
-    )
-    if fp is not None:
-        # frames are caller-supplied, so same_root=False keeps the
-        # frame/path-mismatch message
-        probe_dim = _require_stamped_probe_dim(
-            queries.sparkSession, index_path, "matryoshka", "matryoshka",
-            frame_dim, "matryoshka_topk_batches", fp=fp, same_root=False,
-        )
-    n_corpus = _require_untorn(
-        index_prefixes, index_vecs, "prefixes", "matryoshka_topk_batches"
-    )
-    if shortlist is None:
-        shortlist = max(8 * k, n_corpus // 8)
-
-    def _emit(batch: DataFrame, _epoch: int) -> None:
-        _check(batch.sparkSession)
-        if batch.isEmpty():
-            return
-        # the ONE per-batch matryoshka plan, shared with the
-        # dense-retriever dispatch (r17)
-        ranked, _ = _matryoshka_ranked_plan(
-            batch, index_prefixes, index_vecs, probe_dim, k, shortlist,
-            exclude_self,
-        )
-        ranked.write.mode("append").parquet(out_path)
-
-    writer = (
-        queries.writeStream.foreachBatch(_emit)
-        .outputMode("append")
-        .trigger(availableNow=True)
-    )
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
-
-
-def write_quant_index(
-    embeddings: DataFrame, path: str, bits: int = 8
-) -> str:
-    """Persist the symmetric b-bit quantized serving artifact -- the
-    precision axis of the representation-budget trio (width =
-    `write_matryoshka_index`, product codes = `write_pq_index`,
-    precision = this), the physical form of the budget
-    `similarity.quant_recall` evaluates:
-
-      ``path/codes`` -- (vec_id, label, q array<tinyint>): the scan
-        side, one byte-class code per dimension (vs 8 for the float)
-        via the SHARED `_quant_code_vectors` rule -- per-vector
-        amax/max_code scale, banker's rounding, the exact arithmetic
-        the evaluator ranks with. Cosine is invariant to the
-        per-vector positive rescale, so ranking by cosine against the
-        code vector IS ranking against the dequantized
-        reconstruction; the query side stays float (no query
-        quantization loss -- a documented delta from the evaluator's
-        corpus-replayed code-vs-code form, which the parity pin's
-        pure-Python recompute covers).
-      ``path/vecs`` -- (vec_id, v): full-precision unit vectors, read
-        only for the per-query shortlist's exact re-rank.
-
-    Like matryoshka there is NO trained model -- a vector's codes are
-    per-row facts -- so `append_quant_index` is exact with no premise.
-    ``bits`` stamps into the fingerprint."""
-    from ..llmdata.similarity import _dvec, _normalize
-
-    spark = embeddings.sparkSession
-    if not 2 <= bits <= 8:
-        # codes are stored as tinyint: bits > 8 would WRAP under
-        # Spark's non-ANSI cast (2047 -> -1) and the coarse ranking
-        # would silently collapse; bits < 2 has max_code = 0 (a
-        # divide-by-zero scale). Refuse the knob loudly.
-        raise ValueError(
-            f"write_quant_index: bits={bits} out of range [2, 8] -- "
-            "codes are stored as tinyint, so wider codes would wrap "
-            "silently"
-        )
-    max_code = (1 << (bits - 1)) - 1
-    # persisted: the codes and vecs writes both consume the source
-    # plan (the bpairs lesson). Persist a DERIVED select, never the
-    # caller's frame -- persist/unpersist act on the plan, so
-    # unpersisting `embeddings` itself would silently evict a cache
-    # the caller owns (the family rule; r15 review)
-    src = embeddings.select("vec_id", "label", "embedding").persist()
-    try:
-        if src.isEmpty():
-            raise ValueError("write_quant_index: empty embeddings input")
-        (
-            _quant_tinyint_codes(src, max_code)
-            .write.mode("overwrite")
-            .parquet(path + "/codes")
-        )
-        (
-            src.select("vec_id", _normalize(_dvec("embedding")).alias("v"))
-            .write.mode("overwrite")
-            .parquet(path + "/vecs")
-        )
-    finally:
-        src.unpersist()
-    _write_index_fingerprint(
-        spark, path, {"kind": "quant", "bits": bits}
-    )
-    return path
-
-
-def append_quant_index(embeddings: DataFrame, path: str) -> str:
-    """Fold an embedding delta into a `write_quant_index` root.
-    Premise-free like the matryoshka append: the per-vector scale and
-    codes are per-row facts (`_quant_code_vectors` touches nothing
-    corpus-wide), so append-then-probe equals rebuild-then-probe with
-    NO premise. Guards: unstamped / non-quant artifacts refuse
-    distinctly; ragged delta dims refuse; duplicate delta vec_ids
-    refuse; a TORN codes/vecs artifact refuses. Nonce re-stamps LAST;
-    an empty delta is a no-op. Appends are not snapshot-isolated --
-    see `append_pq_index`'s concurrency delta."""
-    from ..llmdata.similarity import _dvec, _normalize
-
-    spark = embeddings.sparkSession
-    fp = _read_stamped_fingerprint(
-        spark, path, "quant", "quant", "append_quant_index"
-    )
-    max_code = (1 << (int(fp["bits"]) - 1)) - 1
-    dim = _stored_dim(
-        spark.read.parquet(path + "/vecs"), "v", "vecs",
-        "append_quant_index",
-    )
-
-    # derived select, not the caller's frame (see write_quant_index)
-    new = embeddings.select("vec_id", "label", "embedding").persist()
-    try:
-        if new.isEmpty():
-            return path
-        bad_dim = new.filter(F.size("embedding") != dim).count()
-        if bad_dim:
-            raise ValueError(
-                f"append_quant_index: {bad_dim} delta vector(s) are not "
-                f"{dim}-dimensional -- the stored corpus is; a ragged "
-                "delta would rank against misaligned codes"
-            )
-        codes = spark.read.parquet(path + "/codes")
-        _require_untorn(
-            codes, spark.read.parquet(path + "/vecs"), "codes",
-            "append_quant_index",
-        )
-        _require_disjoint_delta(new, codes, "append_quant_index")
-        (
-            _quant_tinyint_codes(new, max_code)
-            .write.mode("append")
-            .parquet(path + "/codes")
-        )
-        (
-            new.select("vec_id", _normalize(_dvec("embedding")).alias("v"))
-            .write.mode("append")
-            .parquet(path + "/vecs")
-        )
-    finally:
-        new.unpersist()
-    return restamp_index(spark, path)
-
-
-def quant_topk_batches(
-    queries: DataFrame,
-    index_codes: DataFrame,
-    index_vecs: DataFrame,
-    out_path: str,
-    k: int = 5,
-    shortlist: int | None = None,
-    checkpoint: str | None = None,
-    index_path: str | None = None,
-    expected_fingerprint: str | None = None,
-    exclude_self: bool = True,
-):
-    """Streaming b-bit quantized top-k (code-cosine shortlist + exact
-    rerank): arriving queries score the byte-code artifact by cosine
-    against the code vectors (one byte-class per dim read instead of
-    eight -- the precision budget made physical; integer products are
-    exact in double), the per-query shortlist joins the float store,
-    and the exact re-rank is `pq_shortlist_rerank` VERBATIM with the
-    negated code-cosine riding `_adc` (the matryoshka pattern with
-    precision instead of width as the coarse budget).
-
-    Pinned against a pure-Python recompute of the cascade at b=8 and
-    b=2 (the evaluator's near-lossless and provably-lossy rungs --
-    same exactness either way, different recall, which
-    `emb_quant_recall` measures). Default ``shortlist`` = the
-    family's corpus/8 budget; same pin / checkpoint / ``exclude_self``
-    discipline as the family."""
-    # kind-checked one-read snapshot (`_kind_snapshot`): the pin
-    # names a root -- verify it IS this kind of root and seed the
-    # unpinned nonce snapshot from the same read
-    _check = _pin_index(
-        queries.sparkSession,
-        index_path,
-        expected_fingerprint,
-        "quant index at {path} was overwritten under a probe stream "
-        "(fingerprint {now} != snapshot {expected}); rebuild the probe "
-        "stream against the new index instead",
-        snapshot_nonce=_kind_snapshot(
-            queries.sparkSession, index_path, "quant", "quant",
-            "quant_topk_batches",
-        ),
-    )
-
-    n_corpus = _require_untorn(
-        index_codes, index_vecs, "codes", "quant_topk_batches"
-    )
-    if shortlist is None:
-        shortlist = max(8 * k, n_corpus // 8)
-
-    def _emit(batch: DataFrame, _epoch: int) -> None:
-        _check(batch.sparkSession)
-        if batch.isEmpty():
-            return
-        # the ONE per-batch quant plan, shared with the dense-retriever
-        # dispatch (r17)
-        ranked, _ = _quant_ranked_plan(
-            batch, index_codes, index_vecs, k, shortlist, exclude_self
-        )
-        ranked.write.mode("append").parquet(out_path)
-
-    writer = (
-        queries.writeStream.foreachBatch(_emit)
-        .outputMode("append")
-        .trigger(availableNow=True)
-    )
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
-
-
-def write_ivf_matryoshka_index(
-    embeddings: DataFrame,
-    path: str,
-    n_lists: int = 8,
-    kmeans_iterations: int = 3,
-    probe_dim: int = 16,
-) -> str:
-    """Persist the IVF x matryoshka composed serving artifact (r15
-    verdict item 6): the matryoshka coarse stage is a full-corpus scan
-    whose win is BYTES (probe_dim/dim of the floats); laying the
-    prefixes under `write_ivf_index`'s cluster-partitioned layout
-    MULTIPLIES the two budgets -- a probe scans ~n_probe/n_lists of
-    the partitions AND probe_dim/dim of the bytes in them, the same
-    composition `write_ivfpq_index` proved for product codes.
-
-      ``path/cells``     -- (vec_id, label, vp) PARTITIONED BY the
-                            k-means cluster: a probe reads n_probe
-                            cell dirs of probe_dim-float prefixes.
-      ``path/vecs``      -- (vec_id, v): full-width unit vectors,
-                            read only for the shortlist's exact
-                            re-rank.
-      ``path/centroids`` -- (cluster, centroid): RAW-space means of
-                            the final assignment (`ivf_centroids` --
-                            the IVF family's shared probe rule).
-
-    Rules are the two constituents' VERBATIM: the cell comes from
-    `kmeans_assign`'s final-iteration assignment over the raw vectors
-    (appends assign to the nearest FINAL centroid -- the
-    `append_ivf_index` frozen-model premise); the prefix is a slice
-    of the UNIT vector (a per-row fact -- the matryoshka premise), so
-    an append freezes ONLY the centroids. n_lists /
-    kmeans_iterations / probe_dim stamp into the fingerprint."""
+    ``knobs`` are the kind's build knobs (``_DENSE_KINDS``: n_lists /
+    kmeans_iterations for the IVF kinds, n_subspaces / n_codes /
+    iterations for PQ, probe_dim, bits), defaulting to the table; a
+    knob the kind does not use refuses. The vector width comes from
+    the data. Cells come from `kmeans_assign`'s final assignment and
+    ``centroids`` are their means (`ivf_centroids`, the probe rule the
+    batch `ivf_topk` shares). Cells are written with a STATIC overwrite:
+    under a session-wide dynamic partitionOverwriteMode an in-place
+    rebuild that empties a cluster would keep that cluster's old
+    directory behind a fresh nonce. The knobs stamp into the
+    fingerprint with the kind. Retraining is a rebuild; a corpus delta
+    under the frozen models is `append_dense_index`."""
     from ..llmdata.similarity import (
         _dvec,
         _normalize,
         ivf_centroids,
         kmeans_assign,
+        pq_encode,
     )
 
+    caller = "write_dense_index"
+    spec = _dense_spec(kind, caller)
+    unknown = sorted(set(knobs) - set(spec.knobs))
+    if unknown:
+        raise TypeError(
+            f"{caller}: {unknown} are not build knobs of a {spec.display} "
+            f"index (its knobs: {sorted(spec.knobs)})"
+        )
+    knobs = {**spec.knobs, **knobs}
+    if "bits" in knobs and not 2 <= knobs["bits"] <= 8:
+        # codes are stored as tinyint: bits > 8 would WRAP under Spark's
+        # non-ANSI cast (2047 -> -1) and the coarse ranking would
+        # silently collapse; bits < 2 has max_code = 0 (a zero scale)
+        raise ValueError(
+            f"{caller}: bits={knobs['bits']} out of range [2, 8] -- "
+            "codes are stored as tinyint, so wider codes would wrap "
+            "silently"
+        )
     spark = embeddings.sparkSession
-    src = embeddings.select(
-        "vec_id",
-        "label",
-        _dvec("embedding").alias("vec"),
-        _normalize(_dvec("embedding")).alias("v"),
-    ).persist()
+    # persist a DERIVED select, never the caller's frame: unpersisting
+    # `embeddings` itself would evict a cache the caller owns
+    src = embeddings.select("vec_id", "label", "embedding").persist()
+    cached = [src]
     try:
-        if src.isEmpty():
+        first = src.select("embedding").first()
+        if first is None:
+            # an empty build would stamp a valid root whose appends and
+            # probes then die on a bare TypeError
+            raise ValueError(f"{caller}: empty embeddings input")
+        dim = len(first["embedding"])
+        if "probe_dim" in knobs and not 1 <= knobs["probe_dim"] <= dim:
+            # < 1 slices an empty prefix (NULL cosine, a silently wrong
+            # shortlist); > dim negates the byte win; == dim is the
+            # brute-force collapse
             raise ValueError(
-                "write_ivf_matryoshka_index: empty embeddings input"
+                f"{caller}: probe_dim={knobs['probe_dim']} out of range "
+                f"[1, {dim}] for this corpus's vector width"
             )
-        dim = len(src.select("v").first()["v"])
-        if not 1 <= probe_dim <= dim:
-            # same knob guard as write_matryoshka_index: < 1 slices an
-            # empty prefix (NULL cosine, silently wrong shortlist);
-            # > dim negates the byte win; == dim is the brute collapse
-            raise ValueError(
-                f"write_ivf_matryoshka_index: probe_dim={probe_dim} out "
-                f"of range [1, {dim}] for this corpus's vector width"
+        codebooks = None
+        if spec.codec == "pq":
+            _, codebooks = pq_encode(
+                src, knobs["n_subspaces"], knobs["n_codes"],
+                knobs["iterations"], dim,
             )
-        assigned = src.join(
-            kmeans_assign(embeddings, k=n_lists, iterations=kmeans_iterations),
-            "vec_id",
-        ).persist()
-        try:
+        rows = src
+        if spec.ivf:
+            rows = src.join(
+                kmeans_assign(
+                    src, k=knobs["n_lists"],
+                    iterations=knobs["kmeans_iterations"],
+                ),
+                "vec_id",
+            ).persist()
+            cached.append(rows)
+        model = _DenseIndex(
+            kind, None, codebooks=codebooks,
+            probe_dim=knobs.get("probe_dim"),
+            max_code=_max_code(knobs.get("bits")),
+        )
+        w = _dense_encode(model, rows).write.mode("overwrite")
+        if spec.ivf:
+            w = w.option("partitionOverwriteMode", "static").partitionBy(
+                "cluster"
+            )
+        w.parquet(f"{path}/{spec.scan}")
+        if spec.codec != "raw":
+            rows.select(
+                "vec_id", _normalize(_dvec("embedding")).alias("v")
+            ).write.mode("overwrite").parquet(path + "/vecs")
+        if codebooks is not None:
             (
-                assigned.select(
-                    "vec_id",
-                    "label",
-                    F.slice(F.col("v"), 1, probe_dim).alias("vp"),
-                    "cluster",
+                spark.createDataFrame(
+                    [
+                        (s, c, codebooks[s][c])
+                        for s in range(len(codebooks))
+                        for c in range(len(codebooks[s]))
+                    ],
+                    "s int, code int, centroid array<double>",
                 )
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "static")
-                .partitionBy("cluster")
-                .parquet(path + "/cells")
-            )
-            assigned.select("vec_id", "v").write.mode("overwrite").parquet(
-                path + "/vecs"
-            )
-            (
-                ivf_centroids(assigned.select("vec_id", "vec", "cluster"))
                 .coalesce(1)
                 .write.mode("overwrite")
-                .parquet(path + "/centroids")
+                .parquet(path + "/codebooks")
             )
-        finally:
-            assigned.unpersist()
-    finally:
-        src.unpersist()
-    _write_index_fingerprint(
-        spark,
-        path,
-        {
-            "kind": "ivfmat",
-            "n_lists": n_lists,
-            "kmeans_iterations": kmeans_iterations,
-            "probe_dim": probe_dim,
-        },
-    )
-    return path
-
-
-def append_ivf_matryoshka_index(embeddings: DataFrame, path: str) -> str:
-    """Fold an embedding delta into a `write_ivf_matryoshka_index`
-    root: the cell is the nearest stored FINAL centroid
-    (`ivf_probe_rank` at n_probe=1 -- the `append_ivf_index` rule and
-    its documented boundary-assignment delta vs a rebuild), the
-    prefix is a per-row fact (the matryoshka premise) -- so the ONLY
-    frozen model is the centroids, and the means drift as deltas
-    accumulate exactly as for IVF (retrain = rebuild, the LSM-refresh
-    story). Guards are the family union: unstamped / wrong-kind
-    refuse distinctly, empty centroids refuse via `_stored_dim`,
-    ragged delta dims refuse, dup delta vec_ids refuse, a TORN
-    cells/vecs artifact refuses. Write order cells -> vecs -> nonce
-    re-stamp LAST; empty delta is a no-op. Appends are not
-    snapshot-isolated -- see `append_pq_index`'s concurrency delta."""
-    from ..llmdata.similarity import _dvec, _normalize, ivf_probe_rank
-
-    spark = embeddings.sparkSession
-    fp = _read_stamped_fingerprint(
-        spark, path, "ivfmat", "IVF-matryoshka",
-        "append_ivf_matryoshka_index",
-    )
-    probe_dim = int(fp["probe_dim"])
-    cents = spark.read.parquet(path + "/centroids")
-    dim = _stored_dim(
-        cents, "centroid", "centroids", "append_ivf_matryoshka_index"
-    )
-
-    new = embeddings.select(
-        "vec_id",
-        "label",
-        _dvec("embedding").alias("vec"),
-        _normalize(_dvec("embedding")).alias("v"),
-    ).persist()
-    try:
-        if new.isEmpty():
-            return path
-        bad_dim = new.filter(F.size("vec") != dim).count()
-        if bad_dim:
-            raise ValueError(
-                f"append_ivf_matryoshka_index: {bad_dim} delta vector(s) "
-                f"are not {dim}-dimensional -- the stored centroids are; "
-                "a ragged delta would assign a garbage cell"
-            )
-        cells = spark.read.parquet(path + "/cells")
-        _require_untorn(
-            cells, spark.read.parquet(path + "/vecs"), "cells",
-            "append_ivf_matryoshka_index",
-        )
-        _require_disjoint_delta(new, cells, "append_ivf_matryoshka_index")
-        assigned = ivf_probe_rank(
-            new.select(
-                F.col("vec_id").alias("query_id"), F.col("vec").alias("qvec")
-            ),
-            cents,
-            1,
-        ).select(
-            F.col("query_id").alias("vec_id"),
-            F.col("probe_cluster").alias("cluster"),
-        )
-        (
-            new.join(assigned, "vec_id")
-            .select(
-                "vec_id",
-                "label",
-                F.slice(F.col("v"), 1, probe_dim).alias("vp"),
-                "cluster",
-            )
-            .write.mode("append")
-            .partitionBy("cluster")
-            .parquet(path + "/cells")
-        )
-        new.select("vec_id", "v").write.mode("append").parquet(
-            path + "/vecs"
-        )
-    finally:
-        new.unpersist()
-    return restamp_index(spark, path)
-
-
-def ivf_matryoshka_topk_batches(
-    queries: DataFrame,
-    index_cells: DataFrame,
-    index_vecs: DataFrame,
-    index_centroids: DataFrame,
-    out_path: str,
-    k: int = 5,
-    n_probe: int = 2,
-    shortlist: int | None = None,
-    checkpoint: str | None = None,
-    index_path: str | None = None,
-    expected_fingerprint: str | None = None,
-    exclude_self: bool = True,
-):
-    """Streaming IVF x matryoshka top-k: each arriving query ranks the
-    coarse centroids and probes its ``n_probe`` cells
-    (`ivf_probe_rank`, RAW space -- the IVF family's shared rule),
-    prefix-cosine-scores ONLY those cells' probe_dim-float prefixes
-    (the matryoshka coarse score, riding `_adc` negated), and
-    exact-reranks the shortlist from the float store
-    (`pq_shortlist_rerank` VERBATIM). Every stage is the respective
-    family member's code, so the two collapse pins come for free:
-
-      - at ``n_probe == n_lists`` the candidate set is the whole
-        corpus and the output equals `matryoshka_topk_batches` over a
-        plain matryoshka artifact at the same probe_dim, row-for-row;
-      - at ``probe_dim == dim`` AND ``n_probe == n_lists`` the
-        cascade collapses to exact brute-force.
-
-    Scale: the probed clusters are a bounded literal IN against the
-    cluster-partitioned cells (static partition pruning, the
-    `ivfpq_topk_batches` observation), the surviving scan reads
-    probe_dim/dim of the float bytes by construction, and the float
-    store serves only the shortlist join -- the two budgets multiply.
-    Default ``shortlist`` = the IVF-PQ rule
-    max(8k, corpus * n_probe / (8 * n_lists)). The probe width comes
-    from the STAMPED fingerprint when ``index_path`` is pinned
-    (refusing a frame/path mismatch -- the matryoshka r15 ADVICE
-    rule); same pin / checkpoint / ``exclude_self`` discipline as the
-    family."""
-    fp = None
-    if index_path is not None:
-        # one read: kind check, the nonce snapshot, and (below) the
-        # pinned-width authority (r17); pin verification stays ahead
-        # of any frame I/O -- see matryoshka_topk_batches
-        fp = _read_stamped_fingerprint(
-            queries.sparkSession, index_path, "ivfmat", "IVF-matryoshka",
-            "ivf_matryoshka_topk_batches",
-        )
-    _check = _pin_index(
-        queries.sparkSession,
-        index_path,
-        expected_fingerprint,
-        "IVF-matryoshka index at {path} was overwritten under a probe "
-        "stream (fingerprint {now} != snapshot {expected}); rebuild the "
-        "probe stream against the new index instead",
-        snapshot_nonce=fp.get("nonce") if fp is not None else None,
-    )
-
-    probe_dim = frame_dim = _stored_dim(
-        index_cells, "vp", "cells", "ivf_matryoshka_topk_batches"
-    )
-    if fp is not None:
-        # frames are caller-supplied, so same_root=False keeps the
-        # frame/path-mismatch message
-        probe_dim = _require_stamped_probe_dim(
-            queries.sparkSession, index_path, "ivfmat", "IVF-matryoshka",
-            frame_dim, "ivf_matryoshka_topk_batches", fp=fp,
-            same_root=False,
-        )
-    n_lists = _centroid_count(index_centroids, "ivf_matryoshka_topk_batches")
-    n_corpus = _require_untorn(
-        index_cells, index_vecs, "cells", "ivf_matryoshka_topk_batches"
-    )
-    if shortlist is None:
-        shortlist = max(8 * k, n_corpus * n_probe // (8 * n_lists))
-
-    def _emit(batch: DataFrame, _epoch: int) -> None:
-        _check(batch.sparkSession)
-        if batch.isEmpty():
-            return
-        ranked, done = _ivfmat_ranked_plan(
-            batch,
-            index_cells,
-            index_vecs,
-            index_centroids,
-            probe_dim,
-            k,
-            n_probe,
-            shortlist,
-            exclude_self,
-        )
-        try:
-            ranked.write.mode("append").parquet(out_path)
-        finally:
-            done()
-
-    writer = (
-        queries.writeStream.foreachBatch(_emit)
-        .outputMode("append")
-        .trigger(availableNow=True)
-    )
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
-
-
-def _ivfmat_ranked_plan(
-    batch: DataFrame,
-    index_cells: DataFrame,
-    index_vecs: DataFrame,
-    index_centroids: DataFrame,
-    probe_dim: int,
-    k: int,
-    n_probe: int,
-    shortlist: int,
-    exclude_self: bool,
-):
-    """The per-batch IVF x matryoshka ranking, I/O-free: (ranked_df,
-    cleanup) for arriving (vec_id, embedding) rows against in-memory
-    artifact frames -- the prefix-cosine coarse score through the
-    shared `_ivf_cascade_ranked_plan` scaffold, so the dense-retriever
-    dispatch (`_ann_dense_retriever`) and the probe sink consume ONE
-    plan. ``cleanup`` unpersists the probe frame and must be called
-    after the ranked frame is consumed."""
-    from ..llmdata.similarity import _dvec, _normalize, cosine
-
-    qdf = batch.select(
-        F.col("vec_id").alias("query_id"),
-        _normalize(_dvec("embedding")).alias("_qv"),
-    ).withColumn("_qp", F.slice(F.col("_qv"), 1, probe_dim))
-    return _ivf_cascade_ranked_plan(
-        batch, index_cells, index_vecs, index_centroids,
-        k, n_probe, shortlist, exclude_self, qdf,
-        -cosine(F.col("_qp"), F.col("vp")),
-    )
-
-
-def write_ivf_quant_index(
-    embeddings: DataFrame,
-    path: str,
-    n_lists: int = 8,
-    kmeans_iterations: int = 3,
-    bits: int = 8,
-) -> str:
-    """Persist the IVF x quant composed serving artifact -- the third
-    multiplied budget pair, completing the family (IVF x PQ in r15,
-    IVF x matryoshka in r16): the b-bit coarse scan's win is BYTES
-    (one byte-class code per dim instead of eight), and laying the
-    codes under `write_ivf_index`'s cluster-partitioned layout adds
-    cell pruning on top -- a probe scans ~n_probe/n_lists of the
-    partitions AND ~1/8 of the bytes in them.
-
-      ``path/cells``     -- (vec_id, label, q array<tinyint>)
-                            PARTITIONED BY the k-means cluster; codes
-                            from the SHARED `_quant_code_vectors`
-                            rule (per-vector amax/max_code scale,
-                            banker's rounding -- the evaluator's
-                            exact arithmetic).
-      ``path/vecs``      -- (vec_id, v): full-width unit vectors for
-                            the shortlist's exact re-rank only.
-      ``path/centroids`` -- (cluster, centroid): RAW-space means of
-                            the final assignment (the IVF family's
-                            shared probe rule).
-
-    The cell comes from `kmeans_assign`'s final-iteration assignment
-    (appends = nearest FINAL centroid, the frozen-model premise); the
-    codes are per-row facts (the quant premise) -- so like IVF x
-    matryoshka the ONLY frozen model is the centroids. ``bits`` /
-    n_lists / kmeans_iterations stamp into the fingerprint."""
-    from ..llmdata.similarity import (
-        _dvec,
-        _normalize,
-        ivf_centroids,
-        kmeans_assign,
-    )
-
-    spark = embeddings.sparkSession
-    if not 2 <= bits <= 8:
-        # the write_quant_index rule: tinyint wrap above 8, zero
-        # max_code below 2
-        raise ValueError(
-            f"write_ivf_quant_index: bits={bits} out of range [2, 8] -- "
-            "codes are stored as tinyint, so wider codes would wrap "
-            "silently"
-        )
-    max_code = (1 << (bits - 1)) - 1
-    src = embeddings.select("vec_id", "label", "embedding").persist()
-    try:
-        if src.isEmpty():
-            raise ValueError("write_ivf_quant_index: empty embeddings input")
-        assigned = src.join(
-            kmeans_assign(src, k=n_lists, iterations=kmeans_iterations),
-            "vec_id",
-        ).persist()
-        try:
-            # cluster rides THROUGH the code projection (passthrough
-            # columns in _quant_code_vectors) -- no corpus-sized
-            # re-join to restore the partition key (r16 review)
-            (
-                _quant_tinyint_codes(
-                    assigned.select(
-                        "vec_id", "label", "embedding", "cluster"
-                    ),
-                    max_code,
-                )
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "static")
-                .partitionBy("cluster")
-                .parquet(path + "/cells")
-            )
-            (
-                assigned.select(
-                    "vec_id", _normalize(_dvec("embedding")).alias("v")
-                )
-                .write.mode("overwrite")
-                .parquet(path + "/vecs")
-            )
+        if spec.ivf:
             (
                 ivf_centroids(
-                    assigned.select(
+                    rows.select(
                         "vec_id", _dvec("embedding").alias("vec"), "cluster"
                     )
                 )
@@ -2194,45 +1169,61 @@ def write_ivf_quant_index(
                 .write.mode("overwrite")
                 .parquet(path + "/centroids")
             )
-        finally:
-            assigned.unpersist()
     finally:
-        src.unpersist()
-    _write_index_fingerprint(
-        spark,
-        path,
-        {
-            "kind": "ivfquant",
-            "n_lists": n_lists,
-            "kmeans_iterations": kmeans_iterations,
-            "bits": bits,
-        },
-    )
+        for df in cached:
+            df.unpersist()
+    _write_index_fingerprint(spark, path, {"kind": kind, **knobs})
     return path
 
 
-def append_ivf_quant_index(embeddings: DataFrame, path: str) -> str:
-    """Fold an embedding delta into a `write_ivf_quant_index` root:
-    the cell is the nearest stored FINAL centroid (`ivf_probe_rank`
-    at n_probe=1 -- the `append_ivf_index` rule), the codes are
-    per-row facts under the STAMPED bits (`_quant_code_vectors` --
-    the quant premise), so the only frozen model is the centroids
-    (retrain = rebuild, the LSM-refresh story). Guards are the family
-    union: unstamped / wrong-kind refuse distinctly, empty centroids
-    refuse via `_stored_dim`, ragged delta dims refuse, dup delta
-    vec_ids refuse, a TORN cells/vecs artifact refuses. Write order
-    cells -> vecs -> nonce re-stamp LAST; empty delta is a no-op."""
+def append_dense_index(embeddings: DataFrame, path: str) -> str:
+    """Fold an embedding delta into an existing dense root, reading the
+    kind and the frozen model from the root itself. Each delta vector
+    lands in its nearest stored FINAL centroid (`ivf_probe_rank` at
+    n_probe=1 -- the rule queries probe by, so an appended vector is in
+    the first cell any query that should find it looks in) and is
+    encoded by the same `_dense_encode` the writer used, under the
+    stored codebooks / stamped probe_dim / stamped bits -- so
+    append-then-probe equals a rebuild under the SAME models,
+    row-for-row. An append never moves the models: the means and
+    codebooks drift from the corpus as deltas accumulate, and the
+    periodic retrain is a rebuild (the LSM-refresh story). One
+    documented delta: a rebuild assigns under `kmeans_assign`'s last
+    Lloyd iteration (pre-update centroids), so a boundary vector can
+    sit in a different cell than this append would choose -- both are
+    valid IVF assignments at the same budget.
+
+    Guards, each with a distinct message: an unstamped root, a root
+    stamped with a non-dense kind, a codebooks/fingerprint subspace
+    disagreement, an empty model directory (`_stored_dim` /
+    `_load_codebooks`), delta vectors whose width disagrees with the
+    stored model (a short vector would zip_with-pad to null distances
+    and encode garbage), delta vec_ids already stored (a double-append
+    duplicates rank rows), and a TORN scan/vecs artifact (the crash
+    window between the two data writes), refused before writing.
+
+    Write order: scan dir, vecs, then the nonce re-stamp LAST -- the
+    stamp is the completion marker, and the re-stamp fails over
+    running pinned probe streams. A crash after both writes but before
+    the stamp leaves a consistent artifact under the old nonce: a retry
+    refuses as a double-append, so recover with `restamp_index`. An
+    empty delta is a no-op WITHOUT a re-stamp. Appends are not
+    snapshot-isolated: a pinned stream's micro-batch running
+    concurrently can read a torn view for that one batch before the
+    nonce check fails it over, so quiesce probes across an append or
+    serialize them in a cadence loop (`split_verdicts_with_cadence`)."""
     from ..llmdata.similarity import _dvec, _normalize, ivf_probe_rank
 
+    caller = "append_dense_index"
     spark = embeddings.sparkSession
-    fp = _read_stamped_fingerprint(
-        spark, path, "ivfquant", "IVF-quant", "append_ivf_quant_index"
-    )
-    max_code = (1 << (int(fp["bits"]) - 1)) - 1
-    cents = spark.read.parquet(path + "/centroids")
-    dim = _stored_dim(
-        cents, "centroid", "centroids", "append_ivf_quant_index"
-    )
+    idx, _fp = _load_dense_index(spark, path, caller)
+    spec = _DENSE_KINDS[idx.kind]
+    if spec.ivf:
+        dim = _stored_dim(idx.centroids, "centroid", "centroids", caller)
+    elif idx.codebooks is not None:
+        dim = len(idx.codebooks) * len(idx.codebooks[0][0])
+    else:
+        dim = _stored_dim(idx.vecs, "v", "vecs", caller)
 
     new = embeddings.select("vec_id", "label", "embedding").persist()
     try:
@@ -2241,112 +1232,106 @@ def append_ivf_quant_index(embeddings: DataFrame, path: str) -> str:
         bad_dim = new.filter(F.size("embedding") != dim).count()
         if bad_dim:
             raise ValueError(
-                f"append_ivf_quant_index: {bad_dim} delta vector(s) are "
-                f"not {dim}-dimensional -- the stored centroids are; a "
-                "ragged delta would assign a garbage cell"
+                f"{caller}: {bad_dim} delta vector(s) are not "
+                f"{dim}-dimensional -- the stored {spec.display} model "
+                "is; a ragged delta would encode garbage"
             )
-        cells = spark.read.parquet(path + "/cells")
-        _require_untorn(
-            cells, spark.read.parquet(path + "/vecs"), "cells",
-            "append_ivf_quant_index",
-        )
-        _require_disjoint_delta(new, cells, "append_ivf_quant_index")
-        assigned = ivf_probe_rank(
+        if idx.vecs is not None:
+            _require_untorn(idx.scan, idx.vecs, spec.scan, caller)
+        _require_disjoint_delta(new, idx.scan, caller)
+        rows = new
+        if spec.ivf:
+            assigned = ivf_probe_rank(
+                new.select(
+                    F.col("vec_id").alias("query_id"),
+                    _dvec("embedding").alias("qvec"),
+                ),
+                idx.centroids,
+                1,
+            ).select(
+                F.col("query_id").alias("vec_id"),
+                F.col("probe_cluster").alias("cluster"),
+            )
+            rows = new.join(assigned, "vec_id")
+        w = _dense_encode(idx, rows).write.mode("append")
+        if spec.ivf:
+            w = w.partitionBy("cluster")
+        w.parquet(f"{path}/{spec.scan}")
+        if idx.vecs is not None:
             new.select(
-                F.col("vec_id").alias("query_id"),
-                _dvec("embedding").alias("qvec"),
-            ),
-            cents,
-            1,
-        ).select(
-            F.col("query_id").alias("vec_id"),
-            F.col("probe_cluster").alias("cluster"),
-        )
-        (
-            _quant_tinyint_codes(new, max_code)
-            .join(assigned, "vec_id")
-            .write.mode("append")
-            .partitionBy("cluster")
-            .parquet(path + "/cells")
-        )
-        (
-            new.select("vec_id", _normalize(_dvec("embedding")).alias("v"))
-            .write.mode("append")
-            .parquet(path + "/vecs")
-        )
+                "vec_id", _normalize(_dvec("embedding")).alias("v")
+            ).write.mode("append").parquet(path + "/vecs")
     finally:
         new.unpersist()
+    # re-stamp via the ONE nonce-refresh path, which preserves whatever
+    # keys the writer stamped
     return restamp_index(spark, path)
 
 
-def ivf_quant_topk_batches(
+def dense_topk_batches(
     queries: DataFrame,
-    index_cells: DataFrame,
-    index_vecs: DataFrame,
-    index_centroids: DataFrame,
+    index_path: str,
     out_path: str,
     k: int = 5,
     n_probe: int = 2,
     shortlist: int | None = None,
     checkpoint: str | None = None,
-    index_path: str | None = None,
     expected_fingerprint: str | None = None,
     exclude_self: bool = True,
 ):
-    """Streaming IVF x quant top-k: each arriving query ranks the
-    coarse centroids and probes its ``n_probe`` cells
-    (`ivf_probe_rank`, RAW space), code-cosine-scores ONLY those
-    cells' tinyint codes (the quant coarse score -- float query,
-    rescale-invariant, riding `_adc` negated), and exact-reranks the
-    shortlist from the float store (`pq_shortlist_rerank` VERBATIM).
-    At ``shortlist`` >= corpus and ``n_probe`` == n_lists the exact
-    re-rank sees every candidate and the output collapses to brute
-    force regardless of the lossy coarse order (the quant family's
-    collapse argument). Scale: bounded literal-IN static partition
-    pruning + a byte-class scan -- the two budgets multiply. Default
-    ``shortlist`` = the IVF family rule
-    max(8k, corpus * n_probe / (8 * n_lists)); same pin / checkpoint
-    / ``exclude_self`` discipline as the family."""
-    # kind-checked one-read snapshot (`_kind_snapshot`): the pin
-    # names a root -- verify it IS this kind of root and seed the
-    # unpinned nonce snapshot from the same read
+    """Streaming top-k over the dense root at ``index_path``, whatever
+    its stamped kind: each arriving (vec_id, embedding) query runs the
+    kind's per-batch plan (`_dense_ranked_plan`) and its (query_id,
+    vec_id, label, rank, cos_sim) rows append to ``out_path``. The
+    plan's shared rules keep the stream equal to its batch twins --
+    `similarity.ivf_topk` for ``ivf`` at n_probe >= 2 (at n_probe=1 the
+    batch sends a corpus query to its STORED cell, which an external
+    query does not have), `similarity.pq_topk` for ``pq`` -- for
+    corpus-replayed queries, row-for-row.
+
+    Budget knobs: ``n_probe`` drives the IVF kinds and is ignored by
+    the flat ones; ``shortlist`` defaults to 1/8 of the probed
+    candidates, at least 8k (max(8k, corpus * n_probe / (8 * n_lists)),
+    i.e. corpus/8 for the flat kinds), and is REFUSED on plain ``ivf``,
+    whose probed cells are scored exactly on full floats. At n_probe =
+    n_lists and shortlist = corpus every kind collapses to exact
+    brute force.
+
+    The artifact guards of `_ann_dense_retriever` run here, before the
+    stream starts. The index VERSION is pinned: ``expected_fingerprint``
+    (default: the nonce read with the artifacts) is checked at call
+    time and again per micro-batch, so a rebuild, append or compaction
+    under a running stream fails it loudly instead of mixing two index
+    versions across batches. Pass ``checkpoint`` for restartable runs
+    -- the parquet append is not idempotent. ``exclude_self`` as in
+    `_dense_cosine_topk` (True for corpus-replay parity, False for
+    external request ids)."""
+    spark = queries.sparkSession
+    retrieve, fp = _ann_dense_retriever(
+        spark, index_path, n_probe, shortlist, exclude_self,
+        "dense_topk_batches",
+    )
     _check = _pin_index(
-        queries.sparkSession,
+        spark,
         index_path,
         expected_fingerprint,
-        "IVF-quant index at {path} was overwritten under a probe stream "
-        "(fingerprint {now} != snapshot {expected}); rebuild the probe "
-        "stream against the new index instead",
-        snapshot_nonce=_kind_snapshot(
-            queries.sparkSession, index_path, "ivfquant", "IVF-quant",
-            "ivf_quant_topk_batches",
-        ),
+        f"{_DENSE_KINDS[fp['kind']].display} index at {{path}} was "
+        "overwritten under a probe stream (fingerprint {now} != snapshot "
+        "{expected}); rebuild the probe stream against the new index "
+        "instead",
+        snapshot_nonce=fp.get("nonce"),
     )
-    n_lists = _centroid_count(index_centroids, "ivf_quant_topk_batches")
-    n_corpus = _require_untorn(
-        index_cells, index_vecs, "cells", "ivf_quant_topk_batches"
-    )
-    if shortlist is None:
-        shortlist = max(8 * k, n_corpus * n_probe // (8 * n_lists))
 
     def _emit(batch: DataFrame, _epoch: int) -> None:
         _check(batch.sparkSession)
         if batch.isEmpty():
             return
-        ranked, done = _ivfquant_ranked_plan(
-            batch,
-            index_cells,
-            index_vecs,
-            index_centroids,
-            k,
-            n_probe,
-            shortlist,
-            exclude_self,
-        )
+        ranked, cleanup = retrieve(batch, k)
         try:
             ranked.write.mode("append").parquet(out_path)
         finally:
-            done()
+            if cleanup is not None:
+                cleanup()
 
     writer = (
         queries.writeStream.foreachBatch(_emit)
@@ -2358,34 +1343,267 @@ def ivf_quant_topk_batches(
     return writer.start()
 
 
-def _ivfquant_ranked_plan(
-    batch: DataFrame,
-    index_cells: DataFrame,
-    index_vecs: DataFrame,
-    index_centroids: DataFrame,
-    k: int,
-    n_probe: int,
-    shortlist: int,
-    exclude_self: bool,
-):
-    """The per-batch IVF x quant ranking, I/O-free: (ranked_df,
-    cleanup) -- the code-cosine coarse score through the shared
-    `_ivf_cascade_ranked_plan` scaffold, shared by the probe sink and
-    the dense-retriever dispatch. ``cleanup`` unpersists the probe
-    frame and must be called after the ranked frame is consumed."""
-    from ..llmdata.similarity import _dvec, _normalize, cosine
+def _dense_spec(kind, caller: str, path: str | None = None) -> _DenseKind:
+    if kind not in _DENSE_KINDS:
+        where = f"artifact at {path} is stamped" if path else "got"
+        raise ValueError(
+            f"{caller}: {where} kind={kind!r}, not a servable dense index "
+            f"(expected one of {', '.join(_DENSE_KINDS)})"
+        )
+    return _DENSE_KINDS[kind]
 
-    qdf = batch.select(
+
+def _load_dense_index(
+    spark: SparkSession, path: str, caller: str
+) -> tuple[_DenseIndex, dict]:
+    """A stamped dense root as a `_DenseIndex` plus its fingerprint:
+    the kind, the artifact frames, and the frozen model (codebooks,
+    stamped probe_dim, stamped bits). An unstamped root and a non-dense
+    kind refuse distinctly; a codebooks/fingerprint subspace-count
+    disagreement refuses as a mixed artifact."""
+    fp = _read_stamped_fingerprint(spark, path, None, "", caller)
+    spec = _dense_spec(fp.get("kind"), caller, path)
+    codebooks = None
+    if spec.codec == "pq":
+        codebooks = _load_codebooks(spark.read.parquet(path + "/codebooks"))
+        if int(fp["n_subspaces"]) != len(codebooks):
+            raise ValueError(
+                f"{caller}: fingerprint stamps n_subspaces="
+                f"{fp['n_subspaces']} but the stored codebooks span "
+                f"{len(codebooks)} subspaces -- mixed artifact, rebuild"
+            )
+    idx = _DenseIndex(
+        fp["kind"],
+        spark.read.parquet(f"{path}/{spec.scan}"),
+        None if spec.codec == "raw" else spark.read.parquet(path + "/vecs"),
+        spark.read.parquet(path + "/centroids") if spec.ivf else None,
+        codebooks,
+        int(fp["probe_dim"]) if spec.codec == "prefix" else None,
+        _max_code(fp.get("bits")) if spec.codec == "quant" else None,
+    )
+    return idx, fp
+
+
+def _dense_encode(idx: _DenseIndex, rows: DataFrame) -> DataFrame:
+    """The scan-directory rows for (vec_id, label, embedding) input under
+    the index's codec model -- ONE encoder for the writer and the
+    appender, so an appended row is what a rebuild under the same model
+    stores. Extra columns (the IVF ``cluster`` key) pass through.
+
+      raw    -> ``vec``: the float vector (exact IVF scoring);
+      pq     -> ``codes``: `pq_code_col` under the codebooks, the same
+                `_pq_assign_col` arithmetic `pq_encode` trains with;
+      prefix -> ``vp``: the first probe_dim dims of the UNIT vector
+                (cosine is invariant to the per-vector rescale);
+      quant  -> ``q``: `_quant_tinyint_codes` at max_code."""
+    from ..llmdata.similarity import _dvec, _normalize, pq_code_col
+
+    codec = _DENSE_KINDS[idx.kind].codec
+    if codec == "quant":
+        return _quant_tinyint_codes(rows, idx.max_code)
+    extra = [
+        c for c in rows.columns if c not in ("vec_id", "label", "embedding")
+    ]
+    unit = _normalize(_dvec("embedding"))
+    if codec == "pq":
+        rows, col = rows.withColumn("v", unit), pq_code_col(idx.codebooks)
+    elif codec == "prefix":
+        col = F.slice(unit, 1, idx.probe_dim)
+    else:
+        col = _dvec("embedding")
+    name = {"raw": "vec", "pq": "codes", "prefix": "vp"}[codec]
+    return rows.select("vec_id", "label", col.alias(name), *extra)
+
+
+def _dense_query(idx: _DenseIndex, batch: DataFrame):
+    """(qdf, coarse) for arriving (vec_id, embedding) rows: the
+    batch-sized query frame (query_id, _qv unit vector, plus what the
+    codec scores with) and the codec's coarse score of a scan row,
+    ASCENDING = nearer -- it rides ``_adc`` into `pq_shortlist_rerank`,
+    so (_adc, vec_id) is the shortlist order. PQ builds each query's
+    ADC table driver-side with the SAME `pq_lut` arithmetic the batch
+    `pq_topk` bakes into literals (bit-equal scores); the prefix and
+    quant codecs score the negated cosine against the stored prefix /
+    code vector (the query side stays float)."""
+    from ..llmdata.similarity import (
+        _dvec,
+        _normalize,
+        cosine,
+        pq_adc_dist,
+        pq_lut,
+    )
+
+    qs = batch.select(
         F.col("vec_id").alias("query_id"),
         _normalize(_dvec("embedding")).alias("_qv"),
     )
-    return _ivf_cascade_ranked_plan(
-        batch, index_cells, index_vecs, index_centroids,
-        k, n_probe, shortlist, exclude_self, qdf,
-        -cosine(
-            F.col("_qv"), F.transform("q", lambda x: x.cast("double"))
-        ),
+    codec = _DENSE_KINDS[idx.kind].codec
+    if codec == "pq":
+        qdf = batch.sparkSession.createDataFrame(
+            [
+                (r["query_id"], list(r["_qv"]),
+                 pq_lut(list(r["_qv"]), idx.codebooks))
+                for r in qs.collect()
+            ],
+            "query_id long, _qv array<double>, lut array<array<double>>",
+        )
+        return qdf, pq_adc_dist(
+            F.col("lut"), F.col("codes"), len(idx.codebooks)
+        )
+    if codec == "prefix":
+        return (
+            qs.withColumn("_qp", F.slice(F.col("_qv"), 1, idx.probe_dim)),
+            -cosine(F.col("_qp"), F.col("vp")),
+        )
+    return qs, -cosine(
+        F.col("_qv"), F.transform("q", lambda x: x.cast("double"))
     )
+
+
+def _dense_ranked_plan(
+    idx: _DenseIndex,
+    batch: DataFrame,
+    k: int,
+    n_probe: int,
+    shortlist: int | None,
+    exclude_self: bool,
+):
+    """The ONE per-batch dense plan, I/O-free: (ranked_df, cleanup) for
+    arriving (vec_id, embedding) rows against the index frames. Three
+    stages, each shared by every kind:
+
+      1. candidates -- the IVF kinds rank the centroids
+         (`ivf_probe_rank`, raw space, (d2, cluster) ties), collect the
+         bounded probe set (<= n_lists ints) and turn it into a literal
+         IN against the cluster-partitioned cells (static partition
+         pruning); the flat kinds scan everything;
+      2. the codec's coarse score (`_dense_query`) against a broadcast
+         query frame -- or, for ``raw`` cells, exact cosine within the
+         probed budget (`ivf_exact_rank`, no re-rank stage);
+      3. the `pq_shortlist_rerank` tail: per-query (_adc, vec_id)
+         shortlist, exact dot on unit vectors from ``vecs`` (joined
+         only for the shortlist), (cos_sim DESC, vec_id) rank ties.
+
+    ``cleanup`` (None for the flat kinds) unpersists the probe frame
+    and must be called after the ranked frame is consumed."""
+    from ..llmdata.similarity import (
+        _dvec,
+        ivf_exact_rank,
+        ivf_probe_rank,
+        pq_shortlist_rerank,
+    )
+
+    spec = _DENSE_KINDS[idx.kind]
+    scan, probes = idx.scan, None
+    if spec.ivf:
+        # persisted: the probed-cluster collect and the scored join both
+        # consume the probe plan
+        probes = ivf_probe_rank(
+            batch.select(
+                F.col("vec_id").alias("query_id"),
+                _dvec("embedding").alias("qvec"),
+            ),
+            idx.centroids,
+            n_probe,
+        ).persist()
+    try:
+        if probes is not None:
+            probed = sorted(
+                r["probe_cluster"]
+                for r in probes.select("probe_cluster").distinct().collect()
+            )
+            scan = scan.filter(F.col("cluster").isin(probed))
+        if spec.codec == "raw":
+            ranked = ivf_exact_rank(scan, probes, k, exclude_self=exclude_self)
+        else:
+            qdf, coarse = _dense_query(idx, batch)
+            if probes is None:
+                scored = scan.crossJoin(F.broadcast(qdf))
+            else:
+                scored = scan.join(
+                    F.broadcast(probes.select("query_id", "probe_cluster")),
+                    F.col("cluster") == F.col("probe_cluster"),
+                ).join(F.broadcast(qdf), "query_id")
+            if exclude_self:
+                scored = scored.filter(F.col("vec_id") != F.col("query_id"))
+            ranked = pq_shortlist_rerank(
+                scored.select(
+                    "query_id", "vec_id", "label", coarse.alias("_adc"), "_qv"
+                ),
+                k,
+                shortlist,
+                vecs=idx.vecs,
+            )
+    except BaseException:
+        # a failure in the probed-cluster collect must not leak the
+        # pinned probe frame
+        if probes is not None:
+            probes.unpersist()
+        raise
+    return ranked, (probes.unpersist if probes is not None else None)
+
+
+def _ann_dense_retriever(
+    spark: SparkSession,
+    path: str,
+    n_probe: int,
+    shortlist: int | None,
+    exclude_self: bool,
+    caller: str,
+):
+    """Load a stamped dense root as ``retrieve(batch, k) -> (ranked,
+    cleanup)`` -- the per-batch plan `dense_topk_batches` serves and
+    the RAG endpoints plug in as their dense constituent
+    (`_resolve_dense_constituent`). Returns ``(retrieve, fp)``: the
+    already-read fingerprint rides back so the caller's nonce pin
+    snapshots without a second read.
+
+    Artifact guards at CONSTRUCTION time, before any stream starts:
+    unstamped / non-dense kinds and mixed PQ models refuse
+    (`_load_dense_index`); a torn scan/vecs artifact refuses
+    (`_require_untorn`); an empty centroids directory refuses
+    (`_centroid_count` -- the shortlist rule would divide by zero, or
+    every query would silently probe zero cells); a stamped probe_dim
+    that disagrees with the stored prefix width refuses as a mixed
+    artifact; a ``shortlist`` on plain ``ivf`` refuses (there is no
+    re-rank stage for it to bound). The shortlist default is the
+    family budget of `dense_topk_batches`. One stated delta vs the
+    brute scan at full budget: the shortlist re-rank orders on the
+    ROUND-6 cosine where the brute scan orders unrounded, so two
+    candidates within 1e-6 of each other can swap."""
+    idx, fp = _load_dense_index(spark, path, caller)
+    spec = _DENSE_KINDS[idx.kind]
+    if spec.codec == "raw" and shortlist is not None:
+        raise ValueError(
+            f"{caller}: shortlist={shortlist} has no effect on a plain "
+            "'ivf' root (its probed cells are scored exactly on full "
+            "floats -- there is no re-rank stage); drop the knob or "
+            "serve a shortlist kind (ivfpq/ivfmat/ivfquant/pq/matryoshka/"
+            "quant)"
+        )
+    n_corpus = None
+    if idx.vecs is not None:
+        n_corpus = _require_untorn(idx.scan, idx.vecs, spec.scan, caller)
+    n_lists = _centroid_count(idx.centroids, caller) if spec.ivf else None
+    if spec.codec == "prefix":
+        width = _stored_dim(idx.scan, "vp", spec.scan, caller)
+        if width != idx.probe_dim:
+            raise ValueError(
+                f"{caller}: index at {path} stamps probe_dim="
+                f"{idx.probe_dim} but its stored prefixes are {width}-wide "
+                "-- mixed artifact, rebuild"
+            )
+
+    def retrieve(batch: DataFrame, k: int):
+        budget = shortlist
+        if budget is None and n_corpus is not None:
+            probed = n_corpus * n_probe // n_lists if spec.ivf else n_corpus
+            budget = max(8 * k, probed // 8)
+        return _dense_ranked_plan(
+            idx, batch, k, n_probe, budget, exclude_self
+        )
+
+    return retrieve, fp
 
 
 def _compact_parquet_dir(
@@ -2603,55 +1821,6 @@ def _require_stamped_knobs(
             "silently returns empty candidates; use the stamped "
             "build-time knobs"
         )
-
-
-def _require_stamped_probe_dim(
-    spark: SparkSession,
-    index_path: str,
-    kind: str,
-    display: str,
-    frame_dim: int,
-    caller: str,
-    fp: dict | None = None,
-    same_root: bool | None = None,
-) -> int:
-    """The prefix family's pinned-width rule in ONE place (r15 ADVICE
-    item 2; hand-rolled three times by mid-r16 -- the `_load_codebooks`
-    consolidation class): the STAMPED probe_dim is authoritative when
-    a root is named. Frames read from a DIFFERENT artifact than the
-    pin (or a mixed artifact whose stamp disagrees with its stored
-    prefixes) would silently probe at the wrong width -- the nonce pin
-    alone cannot catch a frame/path mismatch. Pass the already-read
-    ``fp`` when the frames were read from the pinned root ITSELF (the
-    dense-retriever case): it skips a second fingerprint read and
-    reports a width disagreement accurately as a MIXED artifact
-    instead of a frame/path mismatch (r16 second review). A caller
-    whose frames are CALLER-SUPPLIED (not necessarily from the pinned
-    root) but who already read the fingerprint for its kind check
-    passes ``same_root=False`` alongside ``fp`` -- one read without
-    flipping the message semantics (r17)."""
-    if same_root is None:
-        same_root = fp is not None
-    if fp is None:
-        fp = _read_stamped_fingerprint(
-            spark, index_path, kind, display, caller
-        )
-    probe_dim = int(fp["probe_dim"])
-    if probe_dim != frame_dim:
-        if same_root:
-            raise ValueError(
-                f"{caller}: index at {index_path} stamps "
-                f"probe_dim={probe_dim} but its stored prefixes are "
-                f"{frame_dim}-wide -- mixed artifact, rebuild"
-            )
-        raise ValueError(
-            f"{caller}: pinned index at {index_path} stamps "
-            f"probe_dim={probe_dim} but the prefix frame is "
-            f"{frame_dim}-wide -- the frames were read from a different "
-            "artifact than the pin; pass frames and index_path from the "
-            "same root"
-        )
-    return probe_dim
 
 
 def _semantic_knobs(
@@ -2937,843 +2106,6 @@ def _read_stamped_fingerprint(
     return fp
 
 
-def append_ivf_index(embeddings: DataFrame, path: str) -> str:
-    """Fold an embedding delta into an existing `write_ivf_index` root
-    under the FROZEN stored centroids: each new vector lands in its
-    nearest FINAL-assignment cell -- `similarity.ivf_probe_rank` at
-    n_probe=1, the exact rule by which queries will probe for it, so
-    an appended vector is by construction in the first cell any query
-    that should find it looks in. Given the centroids, the cell of a
-    vector is a per-row fact; what an append deliberately does NOT do
-    is move the means -- the model drifts from the corpus as deltas
-    accumulate (appended mass never re-centers its cell), and the
-    periodic re-train is a rebuild (the LSM-refresh story, same as
-    PQ/IVF-PQ). Note the documented assignment delta: a REBUILD
-    assigns under `kmeans_assign`'s last Lloyd iteration (pre-update
-    centroids), so a boundary vector can sit in a different cell than
-    this append would choose -- both are valid IVF assignments at the
-    same budget, the same margin argument as the n_probe=1 probe
-    delta.
-
-    Guards (the append-family rules): unstamped / non-IVF artifacts
-    refuse distinctly; ragged delta dims refuse (zip_with would pad
-    null distances and assign a garbage cell); delta vec_ids already
-    in ``cells`` refuse (a double-append would duplicate rank rows).
-    The nonce re-stamps LAST, failing over running pinned probe
-    streams; an empty delta is a no-op without a re-stamp. Appends
-    are not snapshot-isolated -- see `append_pq_index`'s concurrency
-    delta."""
-    from ..llmdata.similarity import _dvec, ivf_probe_rank
-
-    spark = embeddings.sparkSession
-    _read_stamped_fingerprint(spark, path, "ivf", "IVF", "append_ivf_index")
-    cents = spark.read.parquet(path + "/centroids")
-    dim = _stored_dim(cents, "centroid", "centroids", "append_ivf_index")
-
-    new = embeddings.select(
-        "vec_id", "label", _dvec("embedding").alias("vec")
-    ).persist()
-    try:
-        if new.isEmpty():
-            return path
-        bad_dim = new.filter(F.size("vec") != dim).count()
-        if bad_dim:
-            raise ValueError(
-                f"append_ivf_index: {bad_dim} delta vector(s) are not "
-                f"{dim}-dimensional -- the stored centroids are; a ragged "
-                "delta would assign a garbage cell"
-            )
-        _require_disjoint_delta(
-            new, spark.read.parquet(path + "/cells"), "append_ivf_index"
-        )
-        assigned = ivf_probe_rank(
-            new.select(
-                F.col("vec_id").alias("query_id"), F.col("vec").alias("qvec")
-            ),
-            cents,
-            1,
-        ).select(
-            F.col("query_id").alias("vec_id"),
-            F.col("probe_cluster").alias("cluster"),
-        )
-        (
-            new.join(assigned, "vec_id")
-            .select("vec_id", "label", "vec", "cluster")
-            .write.mode("append")
-            .partitionBy("cluster")
-            .parquet(path + "/cells")
-        )
-    finally:
-        new.unpersist()
-    return restamp_index(spark, path)
-
-
-def write_ivfpq_index(
-    embeddings: DataFrame,
-    path: str,
-    n_lists: int = 8,
-    kmeans_iterations: int = 3,
-    n_subspaces: int = 8,
-    n_codes: int = 16,
-    iterations: int = 3,
-    dim: int | None = None,
-) -> str:
-    """Persist the IVF-PQ artifact -- the canonical billion-vector
-    serving shape (the faiss IVFPQ layout): a coarse quantizer prunes
-    the SCAN (cluster-partitioned cells, the IVF side) and product
-    quantization shrinks what the scan READS (~n_subspaces bytes per
-    vector, the PQ side); float vectors surface only for the per-query
-    shortlist re-rank. Composition of the two existing family members,
-    sharing BOTH their rules:
-
-      ``path/cells``    -- (vec_id, label, codes) PARTITIONED BY the
-                           k-means cluster: a probe reads n_probe cell
-                           directories of ~8-byte codes, never the
-                           corpus and never a float.
-      ``path/vecs``     -- (vec_id, v) unit floats, shortlist-only.
-      ``path/codebooks``-- the trained PQ model (`pq_encode`, on the
-                           FULL corpus -- NOT faiss's per-cell residual
-                           encoding: one global codebook keeps the ADC
-                           arithmetic verbatim-shared with `pq_topk` /
-                           `pq_topk_batches`, which is what the parity
-                           pins rest on; the residual variant buys
-                           recall at equal bits but breaks that
-                           sharing, a documented deliberate trade).
-      ``path/centroids``-- (cluster, centroid) coarse means of the
-                           FINAL assignment in RAW vector space
-                           (`ivf_centroids` over `kmeans_assign`, the
-                           IVF family's shared probe-ranking side).
-
-    Rebuild-only for reTRAINING (means and codebooks move); a corpus
-    delta under the FROZEN models appends exactly --
-    `append_ivfpq_index`. Knobs stamp into the fingerprint."""
-    from ..llmdata.similarity import (
-        EMBEDDING_DIM,
-        _dvec,
-        ivf_centroids,
-        kmeans_assign,
-        pq_encode,
-    )
-
-    dim = EMBEDDING_DIM if dim is None else dim
-    spark = embeddings.sparkSession
-    # both intermediates feed TWO writes below (cells + vecs; cells +
-    # centroids) -- persist so the literal-assignment map stages run
-    # once per row, not once per consumer (the bpairs lesson)
-    assigned = kmeans_assign(
-        embeddings, k=n_lists, iterations=kmeans_iterations
-    ).persist()
-    encoded, codebooks = pq_encode(
-        embeddings, n_subspaces, n_codes, iterations, dim
-    )
-    encoded = encoded.persist()
-    try:
-        # static overwrite, the write_ivf_index lesson: under dynamic
-        # partitionOverwriteMode an in-place rebuild that empties a
-        # cluster would keep that cluster's OLD cells directory
-        (
-            encoded.select("vec_id", "label", "codes")
-            .join(assigned, "vec_id")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "static")
-            .partitionBy("cluster")
-            .parquet(path + "/cells")
-        )
-        encoded.select("vec_id", "v").write.mode("overwrite").parquet(
-            path + "/vecs"
-        )
-        rows = [
-            (s, c, codebooks[s][c])
-            for s in range(len(codebooks))
-            for c in range(len(codebooks[s]))
-        ]
-        (
-            spark.createDataFrame(
-                rows, "s int, code int, centroid array<double>"
-            )
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(path + "/codebooks")
-        )
-        raw = embeddings.select(
-            "vec_id", _dvec("embedding").alias("vec")
-        ).join(assigned, "vec_id")
-        (
-            ivf_centroids(raw)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(path + "/centroids")
-        )
-    finally:
-        encoded.unpersist()
-        assigned.unpersist()
-    _write_index_fingerprint(
-        spark,
-        path,
-        {
-            "kind": "ivfpq",
-            "n_lists": n_lists,
-            "kmeans_iterations": kmeans_iterations,
-            "n_subspaces": n_subspaces,
-            "n_codes": n_codes,
-            "iterations": iterations,
-        },
-    )
-    return path
-
-
-def append_ivfpq_index(embeddings: DataFrame, path: str) -> str:
-    """Fold an embedding delta into an existing `write_ivfpq_index`
-    root under BOTH frozen models: the cell is the nearest stored
-    FINAL centroid (`ivf_probe_rank` at n_probe=1, raw space -- the
-    `append_ivf_index` rule) and the codes come from the frozen
-    codebooks (`pq_code_col`, unit space -- the `append_pq_index`
-    rule). Given the models, both are per-row facts, so
-    append-then-probe equals a same-models encode of the delta
-    row-for-row (pinned against a pure-Python recompute); reTRAINING
-    either model is a rebuild (the LSM-refresh story).
-
-    Guards are the union of the two constituents': unstamped /
-    non-IVF-PQ artifacts refuse distinctly; a codebooks/fingerprint
-    subspace disagreement refuses; ragged delta dims refuse; delta
-    vec_ids already in ``cells`` refuse; a TORN cells/vecs artifact
-    (the crash window between the two data writes) refuses before
-    writing. Write order: cells, vecs, nonce re-stamp LAST (the
-    completion marker); an empty delta is a no-op without a
-    re-stamp. Appends are not snapshot-isolated -- see
-    `append_pq_index`'s concurrency delta."""
-    from ..llmdata.similarity import (
-        _dvec,
-        _normalize,
-        ivf_probe_rank,
-        pq_code_col,
-    )
-
-    spark = embeddings.sparkSession
-    fp = _read_stamped_fingerprint(
-        spark, path, "ivfpq", "IVF-PQ", "append_ivfpq_index"
-    )
-    codebooks = _load_codebooks(spark.read.parquet(path + "/codebooks"))
-    if int(fp["n_subspaces"]) != len(codebooks):
-        raise ValueError(
-            f"append_ivfpq_index: fingerprint stamps n_subspaces="
-            f"{fp['n_subspaces']} but the stored codebooks span "
-            f"{len(codebooks)} subspaces -- mixed artifact, rebuild"
-        )
-    dim = len(codebooks) * len(codebooks[0][0])
-    cents = spark.read.parquet(path + "/centroids")
-
-    new = embeddings.select(
-        "vec_id",
-        "label",
-        _dvec("embedding").alias("vec"),
-        _normalize(_dvec("embedding")).alias("v"),
-    ).persist()
-    try:
-        if new.isEmpty():
-            return path
-        bad_dim = new.filter(F.size("vec") != dim).count()
-        if bad_dim:
-            raise ValueError(
-                f"append_ivfpq_index: {bad_dim} delta vector(s) are not "
-                f"{dim}-dimensional -- the stored models encode exactly "
-                f"{dim} dims; a ragged delta would assign garbage"
-            )
-        cells = spark.read.parquet(path + "/cells")
-        _require_untorn(
-            cells, spark.read.parquet(path + "/vecs"), "cells",
-            "append_ivfpq_index",
-        )
-        _require_disjoint_delta(new, cells, "append_ivfpq_index")
-        assigned = ivf_probe_rank(
-            new.select(
-                F.col("vec_id").alias("query_id"), F.col("vec").alias("qvec")
-            ),
-            cents,
-            1,
-        ).select(
-            F.col("query_id").alias("vec_id"),
-            F.col("probe_cluster").alias("cluster"),
-        )
-        encoded = new.withColumn("codes", pq_code_col(codebooks))
-        (
-            encoded.join(assigned, "vec_id")
-            .select("vec_id", "label", "codes", "cluster")
-            .write.mode("append")
-            .partitionBy("cluster")
-            .parquet(path + "/cells")
-        )
-        encoded.select("vec_id", "v").write.mode("append").parquet(
-            path + "/vecs"
-        )
-    finally:
-        new.unpersist()
-    return restamp_index(spark, path)
-
-
-def ivfpq_topk_batches(
-    queries: DataFrame,
-    index_cells: DataFrame,
-    index_vecs: DataFrame,
-    index_codebooks: DataFrame,
-    index_centroids: DataFrame,
-    out_path: str,
-    k: int = 5,
-    n_probe: int = 2,
-    shortlist: int | None = None,
-    checkpoint: str | None = None,
-    index_path: str | None = None,
-    expected_fingerprint: str | None = None,
-    exclude_self: bool = True,
-):
-    """Streaming IVF-PQ top-k: each arriving query ranks the coarse
-    centroids and probes its ``n_probe`` cells (`ivf_probe_rank`, the
-    IVF family's shared rule, RAW vector space), then ADC-scores ONLY
-    those cells' codes under its per-query lookup table (`pq_lut` /
-    `pq_adc_dist`, the PQ family's shared rules, unit space) and
-    exact-reranks the shortlist from the float store
-    (`pq_shortlist_rerank`). Every stage is the respective family
-    member's code, so two parity pins come for free:
-
-      - at ``n_probe == n_lists`` the candidate set is the whole
-        corpus and the output equals `pq_topk_batches` over a plain PQ
-        artifact with the same model knobs, row-for-row (pinned);
-      - at ``n_probe < n_lists`` the output equals the in-memory
-        composition of the shared helpers on the same frames (pinned).
-
-    Scale: the probed clusters are a bounded driver artifact
-    (<= n_lists ints per batch) turned into a literal IN against the
-    cluster-partitioned cells -- static partition pruning -- and the
-    scan that survives pruning reads ~8-byte code rows, not floats;
-    the float store is touched only by the shortlist join. Default
-    ``shortlist`` keeps the family's 1/8-of-candidates budget:
-    max(8k, corpus * n_probe / (8 * n_lists)) -- which reduces to the
-    PQ rule corpus/8 at n_probe == n_lists (the equivalence pin's
-    premise). Same pin / checkpoint / ``exclude_self`` discipline as
-    the family."""
-    # kind-checked one-read snapshot (`_kind_snapshot`): the pin
-    # names a root -- verify it IS this kind of root and seed the
-    # unpinned nonce snapshot from the same read
-    _check = _pin_index(
-        queries.sparkSession,
-        index_path,
-        expected_fingerprint,
-        "IVF-PQ index at {path} was overwritten under a probe stream "
-        "(fingerprint {now} != snapshot {expected}); rebuild the probe "
-        "stream against the new index instead",
-        snapshot_nonce=_kind_snapshot(
-            queries.sparkSession, index_path, "ivfpq", "IVF-PQ",
-            "ivfpq_topk_batches",
-        ),
-    )
-
-    codebooks = _load_codebooks(index_codebooks)
-    n_lists = _centroid_count(index_centroids, "ivfpq_topk_batches")
-    n_corpus = _require_untorn(
-        index_cells, index_vecs, "cells", "ivfpq_topk_batches"
-    )
-    if shortlist is None:
-        shortlist = max(8 * k, n_corpus * n_probe // (8 * n_lists))
-
-    def _emit(batch: DataFrame, _epoch: int) -> None:
-        _check(batch.sparkSession)
-        if batch.isEmpty():
-            return
-        ranked, done = _ivfpq_ranked_plan(
-            batch,
-            index_cells,
-            index_vecs,
-            codebooks,
-            index_centroids,
-            k,
-            n_probe,
-            shortlist,
-            exclude_self,
-        )
-        try:
-            ranked.write.mode("append").parquet(out_path)
-        finally:
-            done()
-
-    writer = (
-        queries.writeStream.foreachBatch(_emit)
-        .outputMode("append")
-        .trigger(availableNow=True)
-    )
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
-
-
-def _ivfpq_ranked_plan(
-    batch: DataFrame,
-    index_cells: DataFrame,
-    index_vecs: DataFrame,
-    codebooks: list[list[list[float]]],
-    index_centroids: DataFrame,
-    k: int,
-    n_probe: int,
-    shortlist: int,
-    exclude_self: bool,
-):
-    """The per-batch IVF-PQ ranking, I/O-free: (ranked_df, cleanup) for
-    arriving (vec_id, embedding) rows against in-memory artifact
-    frames. Extracted from the sink loop so the randomized-corpora
-    parity test (`test_streaming_ivfpq_randomized_corpora_parity`, the
-    BM25 `_bm25_postings` precedent) can exercise the probe/ADC/tie
-    arithmetic on corpora far outside the fixture distribution without
-    a streaming round-trip per seed. ``cleanup`` unpersists the probe
-    frame and must be called after the ranked frame is consumed."""
-    from ..llmdata.similarity import (
-        _dvec,
-        _normalize,
-        pq_adc_dist,
-        pq_lut,
-    )
-
-    n_subspaces = len(codebooks)
-    qrows = batch.select(
-        F.col("vec_id").alias("query_id"),
-        _normalize(_dvec("embedding")).alias("qvec"),
-    ).collect()
-    qdf = batch.sparkSession.createDataFrame(
-        [
-            (
-                r["query_id"],
-                list(r["qvec"]),
-                pq_lut(list(r["qvec"]), codebooks),
-            )
-            for r in qrows
-        ],
-        "query_id long, _qv array<double>, lut array<array<double>>",
-    )
-    return _ivf_cascade_ranked_plan(
-        batch, index_cells, index_vecs, index_centroids,
-        k, n_probe, shortlist, exclude_self, qdf,
-        pq_adc_dist(F.col("lut"), F.col("codes"), n_subspaces),
-    )
-
-
-def _ivf_cascade_ranked_plan(
-    batch: DataFrame,
-    index_cells: DataFrame,
-    index_vecs: DataFrame,
-    index_centroids: DataFrame,
-    k: int,
-    n_probe: int,
-    shortlist: int,
-    exclude_self: bool,
-    qdf: DataFrame,
-    adc,
-):
-    """The ONE IVF-cascade scaffold (r16 review: the probe/broadcast/
-    exclude-self/shortlist skeleton existed in three parallel copies
-    across `_ivfpq_ranked_plan`/`_ivfmat_ranked_plan`/
-    `_ivfquant_ranked_plan` -- a probe-plan fix must land ONCE, the
-    `ivf_centroids` shared-rule discipline): rank centroids, collect
-    the bounded probe set, literal-IN-prune the cluster-partitioned
-    cells, broadcast-join the probes and the batch-sized ``qdf``
-    (which must carry at least (query_id, _qv)), score the coarse
-    ``adc`` Column, and run the verbatim `pq_shortlist_rerank` tail.
-    Returns (ranked_df, cleanup); ``cleanup`` unpersists the probe
-    frame and must be called after the ranked frame is consumed."""
-    from ..llmdata.similarity import (
-        _dvec,
-        ivf_probe_rank,
-        pq_shortlist_rerank,
-    )
-
-    qs = batch.select(
-        F.col("vec_id").alias("query_id"),
-        _dvec("embedding").alias("qvec"),
-    )
-    # persisted: the probed-cluster collect and the scored join both
-    # consume the probe plan (the bpairs lesson)
-    probes = ivf_probe_rank(qs, index_centroids, n_probe).persist()
-    try:
-        probed = sorted(
-            r["probe_cluster"]
-            for r in probes.select("probe_cluster").distinct().collect()
-        )
-        scored = (
-            index_cells.filter(F.col("cluster").isin(probed))
-            .join(
-                F.broadcast(probes.select("query_id", "probe_cluster")),
-                F.col("cluster") == F.col("probe_cluster"),
-            )
-            .join(F.broadcast(qdf), "query_id")
-        )
-        if exclude_self:
-            scored = scored.filter(F.col("vec_id") != F.col("query_id"))
-        scored = scored.select(
-            "query_id",
-            "vec_id",
-            "label",
-            adc.alias("_adc"),
-            "_qv",
-        )
-        ranked = pq_shortlist_rerank(scored, k, shortlist, vecs=index_vecs)
-    except BaseException:
-        # a failure in the probed-cluster collect must not leak the
-        # pinned probe frame (r17 review -- same class as
-        # _ivf_ranked_plan)
-        probes.unpersist()
-        raise
-    return ranked, probes.unpersist
-
-
-def _pq_ranked_plan(
-    batch: DataFrame,
-    index_codes: DataFrame,
-    index_vecs: DataFrame,
-    codebooks: list[list[list[float]]],
-    k: int,
-    shortlist: int,
-    exclude_self: bool,
-):
-    """The per-batch PQ ranking, I/O-free: extracted from
-    `pq_topk_batches`' sink loop (r17 -- the `_ivfpq_ranked_plan`
-    precedent) so the dense-retriever dispatch and the probe sink
-    consume ONE plan. Returns (ranked_df, cleanup) with cleanup=None
-    (nothing persisted -- the flat kinds' coarse stage is a single
-    broadcast cross-join)."""
-    from ..llmdata.similarity import (
-        _dvec,
-        _normalize,
-        pq_adc_dist,
-        pq_lut,
-        pq_shortlist_rerank,
-    )
-
-    n_subspaces = len(codebooks)
-    qrows = batch.select(
-        F.col("vec_id").alias("query_id"),
-        _normalize(_dvec("embedding")).alias("qvec"),
-    ).collect()
-    qdf = batch.sparkSession.createDataFrame(
-        [
-            (r["query_id"], list(r["qvec"]), pq_lut(list(r["qvec"]), codebooks))
-            for r in qrows
-        ],
-        "query_id long, _qv array<double>, lut array<array<double>>",
-    )
-    scored = index_codes.crossJoin(F.broadcast(qdf))
-    if exclude_self:
-        scored = scored.filter(F.col("vec_id") != F.col("query_id"))
-    scored = scored.select(
-        "query_id",
-        "vec_id",
-        "label",
-        pq_adc_dist(F.col("lut"), F.col("codes"), n_subspaces).alias("_adc"),
-        "_qv",
-    )
-    return pq_shortlist_rerank(scored, k, shortlist, vecs=index_vecs), None
-
-
-def _matryoshka_ranked_plan(
-    batch: DataFrame,
-    index_prefixes: DataFrame,
-    index_vecs: DataFrame,
-    probe_dim: int,
-    k: int,
-    shortlist: int,
-    exclude_self: bool,
-):
-    """The per-batch matryoshka ranking, I/O-free (extracted from
-    `matryoshka_topk_batches`, same contract as `_pq_ranked_plan`)."""
-    from ..llmdata.similarity import (
-        _dvec,
-        _normalize,
-        cosine,
-        pq_shortlist_rerank,
-    )
-
-    qdf = batch.select(
-        F.col("vec_id").alias("query_id"),
-        _normalize(_dvec("embedding")).alias("_qv"),
-    ).withColumn("_qp", F.slice(F.col("_qv"), 1, probe_dim))
-    scored = index_prefixes.crossJoin(F.broadcast(qdf))
-    if exclude_self:
-        scored = scored.filter(F.col("vec_id") != F.col("query_id"))
-    scored = scored.select(
-        "query_id",
-        "vec_id",
-        "label",
-        (-cosine(F.col("_qp"), F.col("vp"))).alias("_adc"),
-        "_qv",
-    )
-    return pq_shortlist_rerank(scored, k, shortlist, vecs=index_vecs), None
-
-
-def _quant_ranked_plan(
-    batch: DataFrame,
-    index_codes: DataFrame,
-    index_vecs: DataFrame,
-    k: int,
-    shortlist: int,
-    exclude_self: bool,
-):
-    """The per-batch quant ranking, I/O-free (extracted from
-    `quant_topk_batches`, same contract as `_pq_ranked_plan`)."""
-    from ..llmdata.similarity import (
-        _dvec,
-        _normalize,
-        cosine,
-        pq_shortlist_rerank,
-    )
-
-    qdf = batch.select(
-        F.col("vec_id").alias("query_id"),
-        _normalize(_dvec("embedding")).alias("_qv"),
-    )
-    scored = index_codes.crossJoin(F.broadcast(qdf))
-    if exclude_self:
-        scored = scored.filter(F.col("vec_id") != F.col("query_id"))
-    scored = scored.select(
-        "query_id",
-        "vec_id",
-        "label",
-        (
-            -cosine(
-                F.col("_qv"),
-                F.transform("q", lambda x: x.cast("double")),
-            )
-        ).alias("_adc"),
-        "_qv",
-    )
-    return pq_shortlist_rerank(scored, k, shortlist, vecs=index_vecs), None
-
-
-def _ivf_ranked_plan(
-    batch: DataFrame,
-    index_cells: DataFrame,
-    index_centroids: DataFrame,
-    k: int,
-    n_probe: int,
-    exclude_self: bool,
-):
-    """The per-batch plain-IVF ranking, I/O-free: extracted from
-    `ivf_topk_batches`' sink loop. Unlike the shortlist family the
-    probed cells carry full float vectors, so scoring is exact within
-    the probed budget (`ivf_exact_rank` -- no re-rank stage, no
-    shortlist knob). Returns (ranked_df, cleanup); ``cleanup``
-    unpersists the probe frame after the ranked frame is consumed."""
-    from ..llmdata.similarity import _dvec, ivf_exact_rank, ivf_probe_rank
-
-    qs = batch.select(
-        F.col("vec_id").alias("query_id"),
-        _dvec("embedding").alias("qvec"),
-    )
-    # persisted: the probed-cluster collect and the scored join both
-    # consume the probe plan (the bpairs lesson)
-    probes = ivf_probe_rank(qs, index_centroids, n_probe).persist()
-    try:
-        # bounded driver artifact (<= n_lists ints) -> literal IN, so
-        # the cluster-partitioned cells scan prunes statically
-        probed = sorted(
-            r["probe_cluster"]
-            for r in probes.select("probe_cluster").distinct().collect()
-        )
-        ranked = ivf_exact_rank(
-            index_cells.filter(F.col("cluster").isin(probed)),
-            probes,
-            k,
-            exclude_self=exclude_self,
-        )
-    except BaseException:
-        # the collect is the one action between persist and return: a
-        # failure there must not leak the pinned probe frame (the old
-        # inline sink wrapped it in try/finally -- r17 review)
-        probes.unpersist()
-        raise
-    return ranked, probes.unpersist
-
-
-def _ann_dense_retriever(
-    spark: SparkSession,
-    path: str,
-    n_probe: int,
-    shortlist: int | None,
-    exclude_self: bool,
-    caller: str,
-):
-    """Load a servable ANN root as a pluggable DENSE retrieval
-    constituent for the RAG endpoints (r15 verdict item 3: the hybrid
-    keyword endpoint and the knn classifier brute-scanned the float
-    vecs via `_dense_cosine_topk` while ANN serving sat in the same
-    file). Dispatches on the STAMPED kind over ALL SEVEN servable
-    layouts (r16 verdict item 3 widened it from the three composed
-    kinds -- a user holding a plain `write_pq_index` root was forced
-    into a composed rebuild): the composed ``ivfpq`` / ``ivfmat`` /
-    ``ivfquant`` cascades, the flat shortlist kinds ``pq`` /
-    ``matryoshka`` / ``quant``, and plain ``ivf``. Returns
-    ``retrieve(batch, k) -> (ranked, cleanup)`` where ``ranked``
-    carries the family's (query_id, vec_id, label, rank) surface
-    through the SAME per-batch plan the kind's own probe sink serves,
-    so at full budget (n_probe = n_lists and/or shortlist = corpus)
-    the ranking collapses to exact brute-force (parity-pinned; one
-    stated delta: the shortlist re-rank orders on the ROUND-6 cosine
-    where the brute scan orders unrounded, so two candidates within
-    1e-6 of each other can swap -- a display-tie the parity fixtures
-    don't contain, not an approximation) and at serving budgets the
-    endpoint inherits the kind's measured probe-budget win.
-
-    Budget knobs by kind: ``n_probe`` drives the four IVF-layout
-    kinds and is ignored by the flat kinds (their coarse stage is a
-    full-corpus code/prefix scan -- the byte win, not a partition
-    win); ``shortlist`` drives the six shortlist-re-rank kinds and is
-    REFUSED on plain ``ivf`` (its probed cells carry full floats, so
-    scoring is exact within the probe budget -- no re-rank stage; a
-    supplied shortlist would protect nothing, so it raises per the
-    family's no-op-knob idiom).
-    Returns ``(retrieve, fp)`` -- the already-read fingerprint rides
-    back so the caller's nonce pin can snapshot without a second read
-    (`_pin_index(snapshot_nonce=...)`, r17 second review).
-
-    Artifact guards at CONSTRUCTION time (before any stream starts):
-    unstamped / non-servable kinds refuse distinctly; the PQ-family
-    codebooks/fingerprint subspan disagreement refuses; torn
-    scan/vecs dirs refuse (`_require_untorn`); empty centroids refuse
-    (`_centroid_count`); the prefix kinds' stamped probe_dim is
-    authoritative (`_require_stamped_probe_dim`). Version pinning
-    under a RUNNING stream stays on the caller's nonce pin, which
-    should target this same root."""
-    fp = _read_stamped_fingerprint(spark, path, None, "", caller)
-    kind = fp.get("kind")
-    if kind in ("ivfpq", "ivfmat", "ivfquant"):
-        cells = spark.read.parquet(path + "/cells")
-        vecs = spark.read.parquet(path + "/vecs")
-        n_corpus = _require_untorn(cells, vecs, "cells", caller)
-        cents = spark.read.parquet(path + "/centroids")
-        n_lists = _centroid_count(cents, caller)
-
-        def _sl(k: int) -> int:
-            # the IVF family's shared budget rule (reduces to corpus/8
-            # at n_probe == n_lists -- the full-budget collapse premise)
-            if shortlist is not None:
-                return shortlist
-            return max(8 * k, n_corpus * n_probe // (8 * n_lists))
-
-        if kind == "ivfpq":
-            codebooks = _load_codebooks(
-                spark.read.parquet(path + "/codebooks")
-            )
-            if int(fp["n_subspaces"]) != len(codebooks):
-                raise ValueError(
-                    f"{caller}: fingerprint stamps n_subspaces="
-                    f"{fp['n_subspaces']} but the stored codebooks span "
-                    f"{len(codebooks)} subspaces -- mixed artifact, rebuild"
-                )
-
-            def retrieve(batch: DataFrame, k: int):
-                return _ivfpq_ranked_plan(
-                    batch, cells, vecs, codebooks, cents, k, n_probe,
-                    _sl(k), exclude_self,
-                )
-
-        elif kind == "ivfmat":
-            probe_dim = _require_stamped_probe_dim(
-                spark, path, "ivfmat", "IVF-matryoshka",
-                _stored_dim(cells, "vp", "cells", caller), caller, fp=fp,
-            )
-
-            def retrieve(batch: DataFrame, k: int):
-                return _ivfmat_ranked_plan(
-                    batch, cells, vecs, cents, probe_dim, k, n_probe,
-                    _sl(k), exclude_self,
-                )
-
-        else:  # ivfquant -- codes are self-describing, no width check
-
-            def retrieve(batch: DataFrame, k: int):
-                return _ivfquant_ranked_plan(
-                    batch, cells, vecs, cents, k, n_probe, _sl(k),
-                    exclude_self,
-                )
-
-        return retrieve, fp
-
-    if kind == "ivf":
-        if shortlist is not None:
-            # plain ivf has no re-rank stage (probed cells carry full
-            # floats, scoring is exact within the probe budget), so a
-            # caller-supplied shortlist would protect nothing -- refuse
-            # loudly, matching the family's no-op-knob idiom (r13
-            # ADVICE on no-op pins; r17 ADVICE flagged the silent
-            # docstring-only ignore here).
-            raise ValueError(
-                f"{caller}: shortlist={shortlist} has no effect on a "
-                "plain 'ivf' root (its probed cells are scored exactly "
-                "on full floats -- there is no re-rank stage); drop the "
-                "knob or serve a shortlist kind (ivfpq/ivfmat/ivfquant/"
-                "pq/matryoshka/quant)"
-            )
-        cells = spark.read.parquet(path + "/cells")
-        cents = spark.read.parquet(path + "/centroids")
-        _centroid_count(cents, caller)
-
-        def retrieve(batch: DataFrame, k: int):
-            return _ivf_ranked_plan(
-                batch, cells, cents, k, n_probe, exclude_self
-            )
-
-        return retrieve, fp
-
-    if kind in ("pq", "matryoshka", "quant"):
-        scan_name = "prefixes" if kind == "matryoshka" else "codes"
-        scan = spark.read.parquet(f"{path}/{scan_name}")
-        vecs = spark.read.parquet(path + "/vecs")
-        n_corpus = _require_untorn(scan, vecs, scan_name, caller)
-
-        def _sl(k: int) -> int:
-            # the flat kinds' shared budget rule (the sinks' default)
-            if shortlist is not None:
-                return shortlist
-            return max(8 * k, n_corpus // 8)
-
-        if kind == "pq":
-            codebooks = _load_codebooks(
-                spark.read.parquet(path + "/codebooks")
-            )
-            if int(fp["n_subspaces"]) != len(codebooks):
-                raise ValueError(
-                    f"{caller}: fingerprint stamps n_subspaces="
-                    f"{fp['n_subspaces']} but the stored codebooks span "
-                    f"{len(codebooks)} subspaces -- mixed artifact, rebuild"
-                )
-
-            def retrieve(batch: DataFrame, k: int):
-                return _pq_ranked_plan(
-                    batch, scan, vecs, codebooks, k, _sl(k), exclude_self
-                )
-
-        elif kind == "matryoshka":
-            probe_dim = _require_stamped_probe_dim(
-                spark, path, "matryoshka", "matryoshka",
-                _stored_dim(scan, "vp", "prefixes", caller), caller, fp=fp,
-            )
-
-            def retrieve(batch: DataFrame, k: int):
-                return _matryoshka_ranked_plan(
-                    batch, scan, vecs, probe_dim, k, _sl(k), exclude_self
-                )
-
-        else:  # quant -- codes are self-describing, no width check
-
-            def retrieve(batch: DataFrame, k: int):
-                return _quant_ranked_plan(
-                    batch, scan, vecs, k, _sl(k), exclude_self
-                )
-
-        return retrieve, fp
-
-    raise ValueError(
-        f"{caller}: artifact at {path} is stamped kind={kind!r}, "
-        "not a servable dense index (expected ivfpq, ivfmat, ivfquant, "
-        "ivf, pq, matryoshka, or quant)"
-    )
-
-
 def _resolve_dense_constituent(
     spark: SparkSession,
     index_vecs: DataFrame | None,
@@ -3860,27 +2192,6 @@ def _require_pin_target(
             "is checked against index_path's on-disk nonce, so without "
             "one it protects nothing -- pass the index root too"
         )
-
-
-def _kind_snapshot(
-    spark: SparkSession,
-    index_path: str | None,
-    kind: str,
-    display: str,
-    caller: str,
-) -> str | None:
-    """The strict kind-stamped sinks' one-read preamble (r17 fourth
-    review: it had been hand-copied into six sinks -- the
-    `_load_codebooks` consolidation class): when a root is pinned,
-    verify it IS this kind of root (a pin on some OTHER artifact
-    passes every nonce check while the frames' true root rotates
-    unpinned -- r16 review) and return its nonce to seed
-    `_pin_index`'s unpinned snapshot. None when unpinned."""
-    if index_path is None:
-        return None
-    return _read_stamped_fingerprint(
-        spark, index_path, kind, display, caller
-    ).get("nonce")
 
 
 def _pin_index(
@@ -4572,7 +2883,7 @@ def append_curation_index(
     Equality with a one-shot build over the union corpus is pinned by
     tests/test_streaming.py::test_streaming_curation_append_equals_rebuild.
 
-    Crash window (the `append_pq_index` concurrency-delta class): the
+    Crash window (the `append_dense_index` concurrency-delta class): the
     five constituent appends below are sequential and the nonce
     re-stamp is LAST (the completion marker) -- a crash mid-fold
     leaves a partially-folded delta under the OLD nonce. Unlike the
@@ -5218,12 +3529,9 @@ def knn_classify_batches(
     corpus vec_id silently loses that neighbor (the r15 keyword-hybrid
     fix, same class).
 
-    Pass ``ann_index_path`` (any servable dense root -- the composed
-    `write_ivfpq_index` / `write_ivf_matryoshka_index` /
-    `write_ivf_quant_index` cascades or the plain `write_pq_index` /
-    `write_ivf_index` / `write_matryoshka_index` / `write_quant_index`
-    layouts; the retriever dispatches on the stamped kind) to serve the
-    neighbor retrieval through that index's plan instead of the brute scan
+    Pass ``ann_index_path`` (any `write_dense_index` root; the
+    retriever dispatches on the stamped kind) to serve the neighbor
+    retrieval through that index's plan instead of the brute scan
     (`_ann_dense_retriever`; ``n_probe`` /
     ``ann_shortlist`` are the budget knobs, shortlist defaulting to
     the family's corpus/8). ``index_vecs`` is then unused (pass
@@ -5337,8 +3645,8 @@ def hybrid_rrf_batches(
     rows per arriving query. Same ``checkpoint`` append-idempotency
     note as the other writers.
 
-    Pass ``ann_index_path`` (any servable dense root, seven kinds --
-    see `_ann_dense_retriever`) to
+    Pass ``ann_index_path`` (any `write_dense_index` root -- see
+    `_ann_dense_retriever`) to
     serve the dense constituent through that index's cascade instead
     of the brute vecs scan --
     the `hybrid_rrf_keyword_batches` contract: ``index_vecs`` is then
@@ -6270,7 +4578,7 @@ def append_bm25_index(docs: DataFrame, path: str) -> str:
     row-for-row, pinned by
     tests/test_streaming.py::test_streaming_bm25_append_equals_rebuild.
     The nonce re-stamps, failing over running probe streams per the
-    family rule. Crash window (the `append_pq_index`
+    family rule. Crash window (the `append_dense_index`
     concurrency-delta class): postings land before the stats row, so
     a crash between them leaves delta docs scored with an
     under-counted n_docs/avgdl -- DETECTED at probe construction by
@@ -6387,9 +4695,14 @@ def bm25_topk_batches(
     ``index_path`` discipline as the rest of the serving family; a
     TORN postings/stats artifact refuses here, at construction
     (`_require_bm25_untorn` -- the shortlist family's rule)."""
-    # kind-checked one-read snapshot (`_kind_snapshot`): the pin
-    # names a root -- verify it IS this kind of root and seed the
+    # the pin names a root: verify it IS a bm25 root and seed the
     # unpinned nonce snapshot from the same read
+    snapshot = None
+    if index_path is not None:
+        snapshot = _read_stamped_fingerprint(
+            queries.sparkSession, index_path, "bm25", "bm25",
+            "bm25_topk_batches",
+        ).get("nonce")
     _check = _pin_index(
         queries.sparkSession,
         index_path,
@@ -6397,10 +4710,7 @@ def bm25_topk_batches(
         "bm25 index at {path} was overwritten under a probe stream "
         "(fingerprint {now} != snapshot {expected}); rebuild the probe "
         "stream against the new index instead",
-        snapshot_nonce=_kind_snapshot(
-            queries.sparkSession, index_path, "bm25", "bm25",
-            "bm25_topk_batches",
-        ),
+        snapshot_nonce=snapshot,
     )
     _require_bm25_untorn(postings, stats, "bm25_topk_batches")
 
@@ -6473,8 +4783,8 @@ def hybrid_rrf_keyword_batches(
     it as ``index_path`` and leave the vecs pair None. Same
     ``checkpoint`` semantics as the family.
 
-    Pass ``ann_index_path`` (any servable dense root, seven kinds --
-    the retriever dispatches on the stamped kind, `_ann_dense_retriever`) to serve the DENSE
+    Pass ``ann_index_path`` (any `write_dense_index` root -- the
+    retriever dispatches on the stamped kind) to serve the DENSE
     constituent through that index's cascade instead of the brute vecs scan
     (`_ann_dense_retriever`; ``n_probe`` /
     ``ann_shortlist`` are the budget knobs). ``index_vecs`` is then

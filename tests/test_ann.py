@@ -165,7 +165,7 @@ def test_emb_neardup_vec_attach_broadcast_gated_on_true_bytes(spark, monkeypatch
         (r[0] - shift, r[1] - shift, r[2]) for r in far.collect()
     ) == baseline
     # (b) budget forced to zero: memory-safe hint, same pairs
-    monkeypatch.setattr(dd, "_VERIFY_BROADCAST_BYTES", 0)
+    monkeypatch.setenv("SPARK_GRAFT_VERIFY_BROADCAST_MB", "0")
     hinted = embedding_neardup_pairs(embs, threshold=0.3)
     plan2 = hinted._jdf.queryExecution().analyzed().toString()
     assert "strategy=shuffle_hash" in plan2

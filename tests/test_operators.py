@@ -591,7 +591,6 @@ def test_jaccard_packed_pair_key_gate_and_fallback(spark, monkeypatch):
     output schema (ids keep their source type); (d) past the stats
     broadcast budget the packed branch ships the pair-constant doubles
     on the exchange instead of stats-joining them back -- same pairs."""
-    from big_data_streaming_dashboard_spark.llmdata import dedup as dd
     from big_data_streaming_dashboard_spark.llmdata.dedup import (
         DEFAULT_MAX_BUCKET,
         _pair_key_packable,
@@ -651,7 +650,7 @@ def test_jaccard_packed_pair_key_gate_and_fallback(spark, monkeypatch):
     # (d) stats budget forced to zero: the packed branch falls back to
     # shipping the doubles (min(_thr)/max(_cmt) form) -- identical
     # pairs, and the plan shows the on-exchange _thr column
-    monkeypatch.setattr(dd, "_VERIFY_BROADCAST_BYTES", 0)
+    monkeypatch.setenv("SPARK_GRAFT_VERIFY_BROADCAST_MB", "0")
     doubles = _prefix_candidates(
         int_docs, 0.5, DEFAULT_MAX_BUCKET, 50_000, scale_hint, symmetric=True
     )
@@ -679,9 +678,10 @@ def test_jaccard_packed_pair_key_gate_and_fallback(spark, monkeypatch):
             ["doc_id", "text"],
         )
         forms = []
-        for budget, n_gate in ((dd._verify_broadcast_bytes(), 50_000),
-                               (0, 50_000), (dd._verify_broadcast_bytes(), 2)):
-            monkeypatch.setattr(dd, "_VERIFY_BROADCAST_BYTES", budget)
+        # (budget MB -- None keeps the ambient default -- , n gate)
+        for budget_mb, n_gate in ((None, 50_000), ("0", 50_000), (None, 2)):
+            if budget_mb is not None:
+                monkeypatch.setenv("SPARK_GRAFT_VERIFY_BROADCAST_MB", budget_mb)
             got = sorted(
                 map(
                     tuple,
@@ -760,7 +760,7 @@ def test_verify_attach_broadcast_gated_on_measured_bytes(spark, monkeypatch):
     table is (a) untouched below the broadcast-safety gate (small-SF
     hash-matched plans bit-identical), (b) an EXPLICIT broadcast past
     the gate while the table's true measured bytes fit
-    _VERIFY_BROADCAST_BYTES (at 10x: 68.3 MB measured -> containment
+    the verify-broadcast budget (at 10x: 68.3 MB measured -> containment
     total shuffle 1,817 -> 444 MB, the 8.59 GB verify sort spill ->
     zero), and (c) the caller's memory-safe scale hint when it does
     not (the 100 TB shape). Estimates are never consulted."""
@@ -793,7 +793,7 @@ def test_verify_attach_broadcast_gated_on_measured_bytes(spark, monkeypatch):
     # (c) past the gate, cap forced below the measured bytes: the
     # memory-safe fallback hint (never an estimate-driven broadcast)
     assert dd._shingle_int_bytes(docs) > 0
-    monkeypatch.setattr(dd, "_VERIFY_BROADCAST_BYTES", 0)
+    monkeypatch.setenv("SPARK_GRAFT_VERIFY_BROADCAST_MB", "0")
     out2 = dd._verify_attach(side, docs, 50_000, dd.scale_hint)
     assert "strategy=shuffle_hash" in (
         out2._jdf.queryExecution().analyzed().toString()
@@ -807,6 +807,31 @@ def test_verify_attach_broadcast_gated_on_measured_bytes(spark, monkeypatch):
     assert [
         (r["doc_a"] - 3, r["doc_b"] - 3, r["jaccard"]) for r in got_hint
     ] == expect
+
+
+def test_verify_broadcast_budget_read_at_decision_time(spark, monkeypatch):
+    """SPARK_GRAFT_VERIFY_BROADCAST_MB is read when the broadcast
+    decision is made, not frozen at import: setting it after the
+    module loaded flips the gate both ways."""
+    from big_data_streaming_dashboard_spark.llmdata import dedup as dd
+
+    docs = spark.createDataFrame(
+        [(i, f"q{i} r{i} s{i} t{i} u{i}") for i in range(6)],
+        ["doc_id", "text"],
+    )
+    side = dd._shingle_ints(docs).withColumnRenamed("doc_id", "doc_a")
+    monkeypatch.setenv("SPARK_GRAFT_VERIFY_BROADCAST_MB", "0")
+    assert not dd._verify_broadcasts(docs, 50_000)
+    assert "strategy=shuffle_hash" in (
+        dd._verify_attach(side, docs, 50_000, dd.scale_hint)
+        ._jdf.queryExecution().analyzed().toString()
+    )
+    monkeypatch.setenv("SPARK_GRAFT_VERIFY_BROADCAST_MB", "256")
+    assert dd._verify_broadcasts(docs, 50_000)
+    assert "strategy=broadcast" in (
+        dd._verify_attach(side, docs, 50_000, dd.scale_hint)
+        ._jdf.queryExecution().analyzed().toString()
+    )
 
 
 def test_contamination_check_flags_shared_passage(spark):

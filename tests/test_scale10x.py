@@ -1000,7 +1000,7 @@ def test_hybrid_ann_dense_probe_budget_at_10x(spark, scale_dir, tmp_path):
     from big_data_streaming_dashboard_spark.streaming.llm_ingest import (
         hybrid_rrf_keyword_batches,
         write_bm25_index,
-        write_ivfpq_index,
+        write_dense_index,
     )
     from big_data_streaming_dashboard_spark.tables import load_table, spread
 
@@ -1021,8 +1021,8 @@ def test_hybrid_ann_dense_probe_budget_at_10x(spark, scale_dir, tmp_path):
     stats = spark.read.parquet(bmidx + "/stats")
 
     t0 = time.perf_counter()
-    pidx = write_ivfpq_index(
-        embs, str(tmp_path / "ivfpq"), n_lists=64, n_subspaces=8
+    pidx = write_dense_index(
+        embs, str(tmp_path / "ivfpq"), "ivfpq", n_lists=64, n_subspaces=8
     )
     build_s = time.perf_counter() - t0
 
@@ -1127,10 +1127,8 @@ def test_ivf_matryoshka_composes_budgets_at_10x(spark, scale_dir, tmp_path):
     )
     from big_data_streaming_dashboard_spark.streaming.llm_ingest import (
         _dense_cosine_topk,
-        ivf_matryoshka_topk_batches,
-        matryoshka_topk_batches,
-        write_ivf_matryoshka_index,
-        write_matryoshka_index,
+        dense_topk_batches,
+        write_dense_index,
     )
     from big_data_streaming_dashboard_spark.tables import spread
 
@@ -1142,14 +1140,14 @@ def test_ivf_matryoshka_composes_budgets_at_10x(spark, scale_dir, tmp_path):
     probe_dim, n_lists, n_probe, k = 16, 64, 8, 10
 
     t0 = time.perf_counter()
-    cidx = write_ivf_matryoshka_index(
-        embs, str(tmp_path / "ivfmat"),
+    cidx = write_dense_index(
+        embs, str(tmp_path / "ivfmat"), "ivfmat",
         n_lists=n_lists, probe_dim=probe_dim,
     )
     build_s = time.perf_counter() - t0
     t0 = time.perf_counter()
-    midx = write_matryoshka_index(
-        embs, str(tmp_path / "mat"), probe_dim=probe_dim
+    midx = write_dense_index(
+        embs, str(tmp_path / "mat"), "matryoshka", probe_dim=probe_dim
     )
     mat_build_s = time.perf_counter() - t0
 
@@ -1172,27 +1170,16 @@ def test_ivf_matryoshka_composes_budgets_at_10x(spark, scale_dir, tmp_path):
     # pure matryoshka: full-corpus prefix scan per batch (bytes win only)
     out_m = str(tmp_path / "out_mat")
     t0 = time.perf_counter()
-    matryoshka_topk_batches(
-        _qstream(),
-        spark.read.parquet(midx + "/prefixes"),
-        spark.read.parquet(midx + "/vecs"),
-        out_m,
-        k=k,
-        checkpoint=str(tmp_path / "ckm"),
+    dense_topk_batches(
+        _qstream(), midx, out_m, k=k, checkpoint=str(tmp_path / "ckm"),
     ).awaitTermination(600)
     mat_probe_s = time.perf_counter() - t0
 
     # composed: n_probe/n_lists of the partitions x probe_dim/dim bytes
     out_c = str(tmp_path / "out_ivfmat")
     t0 = time.perf_counter()
-    ivf_matryoshka_topk_batches(
-        _qstream(),
-        spark.read.parquet(cidx + "/cells"),
-        spark.read.parquet(cidx + "/vecs"),
-        spark.read.parquet(cidx + "/centroids"),
-        out_c,
-        k=k,
-        n_probe=n_probe,
+    dense_topk_batches(
+        _qstream(), cidx, out_c, k=k, n_probe=n_probe,
         checkpoint=str(tmp_path / "ckc"),
     ).awaitTermination(600)
     comp_probe_s = time.perf_counter() - t0
@@ -1253,10 +1240,8 @@ def test_ivf_quant_composes_budgets_at_10x(spark, scale_dir, tmp_path):
     )
     from big_data_streaming_dashboard_spark.streaming.llm_ingest import (
         _dense_cosine_topk,
-        ivf_quant_topk_batches,
-        quant_topk_batches,
-        write_ivf_quant_index,
-        write_quant_index,
+        dense_topk_batches,
+        write_dense_index,
     )
     from big_data_streaming_dashboard_spark.tables import spread
 
@@ -1268,12 +1253,12 @@ def test_ivf_quant_composes_budgets_at_10x(spark, scale_dir, tmp_path):
     n_lists, n_probe, k = 64, 8, 10
 
     t0 = time.perf_counter()
-    cidx = write_ivf_quant_index(
-        embs, str(tmp_path / "ivfquant"), n_lists=n_lists
+    cidx = write_dense_index(
+        embs, str(tmp_path / "ivfquant"), "ivfquant", n_lists=n_lists
     )
     build_s = time.perf_counter() - t0
     t0 = time.perf_counter()
-    qidx = write_quant_index(embs, str(tmp_path / "quant"))
+    qidx = write_dense_index(embs, str(tmp_path / "quant"), "quant")
     q_build_s = time.perf_counter() - t0
 
     qids = [i * 37 % n_corpus for i in range(500)]
@@ -1294,26 +1279,15 @@ def test_ivf_quant_composes_budgets_at_10x(spark, scale_dir, tmp_path):
 
     out_q = str(tmp_path / "out_quant")
     t0 = time.perf_counter()
-    quant_topk_batches(
-        _qstream(),
-        spark.read.parquet(qidx + "/codes"),
-        spark.read.parquet(qidx + "/vecs"),
-        out_q,
-        k=k,
-        checkpoint=str(tmp_path / "ckq"),
+    dense_topk_batches(
+        _qstream(), qidx, out_q, k=k, checkpoint=str(tmp_path / "ckq"),
     ).awaitTermination(600)
     quant_probe_s = time.perf_counter() - t0
 
     out_c = str(tmp_path / "out_ivfquant")
     t0 = time.perf_counter()
-    ivf_quant_topk_batches(
-        _qstream(),
-        spark.read.parquet(cidx + "/cells"),
-        spark.read.parquet(cidx + "/vecs"),
-        spark.read.parquet(cidx + "/centroids"),
-        out_c,
-        k=k,
-        n_probe=n_probe,
+    dense_topk_batches(
+        _qstream(), cidx, out_c, k=k, n_probe=n_probe,
         checkpoint=str(tmp_path / "ckc"),
     ).awaitTermination(600)
     comp_probe_s = time.perf_counter() - t0
@@ -1509,8 +1483,7 @@ def test_knn_serves_plain_byte_budget_kinds_at_10x(
     )
     from big_data_streaming_dashboard_spark.streaming.llm_ingest import (
         knn_classify_batches,
-        write_matryoshka_index,
-        write_quant_index,
+        write_dense_index,
     )
     from big_data_streaming_dashboard_spark.tables import spread
 
@@ -1525,10 +1498,9 @@ def test_knn_serves_plain_byte_budget_kinds_at_10x(
 
     t0 = time.perf_counter()
     idx = str(tmp_path / kind)
-    if kind == "matryoshka":
-        write_matryoshka_index(embs, idx, probe_dim=16)
-    else:
-        write_quant_index(embs, idx)
+    write_dense_index(
+        embs, idx, kind, **({"probe_dim": 16} if kind == "matryoshka" else {})
+    )
     build_s = time.perf_counter() - t0
 
     # structural byte-budget pin on the stored scan side

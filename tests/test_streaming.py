@@ -1330,20 +1330,19 @@ def test_flat_kind_probe_scan_bytes_pinned(spark, tmp_path, kind):
     sum (what a cold object store would serve)."""
     from big_data_streaming_dashboard_spark.streaming.llm_ingest import (
         _ann_dense_retriever,
-        write_matryoshka_index,
-        write_quant_index,
+        write_dense_index,
     )
     from big_data_streaming_dashboard_spark.tables import load_table
 
     embs = load_table(spark, "/root/testdata/sf0.001", "embeddings")
     idx = str(tmp_path / kind)
     if kind == "quant":
-        write_quant_index(embs, idx)  # tinyint vs double: 1/8 raw
+        write_dense_index(embs, idx, "quant")  # tinyint vs double: 1/8 raw
         scan_dir, bound = "codes", 0.30
     else:
         # probe_dim 16 of 64 doubles: 1/4 raw; per-row id/label
         # overhead is proportionally larger on the narrow side
-        write_matryoshka_index(embs, idx, probe_dim=16)
+        write_dense_index(embs, idx, "matryoshka", probe_dim=16)
         scan_dir, bound = "prefixes", 0.45
 
     retrieve, _fp = _ann_dense_retriever(
@@ -2007,31 +2006,29 @@ def test_streaming_ivf_topk_matches_batch_multiprobe(spark, tmp_path):
         ivf_topk,
     )
     from big_data_streaming_dashboard_spark.streaming.llm_ingest import (
+        dense_topk_batches,
         index_fingerprint,
-        ivf_topk_batches,
         stream_embeddings,
-        write_ivf_index,
+        write_dense_index,
     )
     from big_data_streaming_dashboard_spark.tables import load_table
 
     embs = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    idx = write_ivf_index(embs, str(tmp_path / "ivf"), n_lists=8,
-                          kmeans_iterations=3)
+    idx = write_dense_index(
+        embs, str(tmp_path / "ivf"), "ivf", n_lists=8, kmeans_iterations=3
+    )
     cells = spark.read.parquet(idx + "/cells")
-    cents = spark.read.parquet(idx + "/centroids")
 
     qdir = str(tmp_path / "queries")
     embs.filter(F.col("vec_id") < 5).repartition(2).write.parquet(qdir)
     out = str(tmp_path / "topk")
-    q = ivf_topk_batches(
+    q = dense_topk_batches(
         stream_embeddings(spark, qdir),
-        cells,
-        cents,
+        idx,
         out,
         k=10,
         n_probe=2,
         checkpoint=str(tmp_path / "ckpt"),
-        index_path=idx,
     )
     q.awaitTermination(180)
     got = sorted(map(tuple, spark.read.parquet(out).collect()))
@@ -2056,18 +2053,14 @@ def test_streaming_ivf_topk_matches_batch_multiprobe(spark, tmp_path):
 
     # stale pin refuses at call time after a rebuild
     stale = index_fingerprint(spark, idx)
-    write_ivf_index(embs.filter(F.col("vec_id") < 100), idx,
-                    n_lists=8, kmeans_iterations=3)
+    write_dense_index(embs.filter(F.col("vec_id") < 100), idx, "ivf",
+                      n_lists=8, kmeans_iterations=3)
     assert index_fingerprint(spark, idx) != stale
-    import pytest as _pytest
-
-    with _pytest.raises(RuntimeError, match="IVF index .* overwritten"):
-        ivf_topk_batches(
+    with pytest.raises(RuntimeError, match="IVF index .* overwritten"):
+        dense_topk_batches(
             stream_embeddings(spark, qdir),
-            cells,
-            cents,
+            idx,
             str(tmp_path / "stale_out"),
-            index_path=idx,
             expected_fingerprint=stale,
         )
 
@@ -2086,28 +2079,25 @@ def test_streaming_pq_topk_matches_batch(spark, tmp_path):
         pq_topk,
     )
     from big_data_streaming_dashboard_spark.streaming.llm_ingest import (
+        dense_topk_batches,
         index_fingerprint,
-        pq_topk_batches,
         stream_embeddings,
-        write_pq_index,
+        write_dense_index,
     )
     from big_data_streaming_dashboard_spark.tables import load_table
 
     embs = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    idx = write_pq_index(embs, str(tmp_path / "pq"))
+    idx = write_dense_index(embs, str(tmp_path / "pq"), "pq")
     qdir = str(tmp_path / "queries")
     embs.filter(F.col("vec_id") < 5).repartition(2).write.parquet(qdir)
 
     out = str(tmp_path / "topk")
-    q = pq_topk_batches(
+    q = dense_topk_batches(
         stream_embeddings(spark, qdir),
-        spark.read.parquet(idx + "/codes"),
-        spark.read.parquet(idx + "/vecs"),
-        spark.read.parquet(idx + "/codebooks"),
+        idx,
         out,
         k=5,
         checkpoint=str(tmp_path / "ckpt"),
-        index_path=idx,
     )
     q.awaitTermination(180)
     got = sorted(map(tuple, spark.read.parquet(out).collect()))
@@ -2116,92 +2106,225 @@ def test_streaming_pq_topk_matches_batch(spark, tmp_path):
 
     # stale pin refuses at call time after a rebuild
     stale = index_fingerprint(spark, idx)
-    write_pq_index(embs.filter(F.col("vec_id") < 300), idx)
+    write_dense_index(embs.filter(F.col("vec_id") < 300), idx, "pq")
     assert index_fingerprint(spark, idx) != stale
     with pytest.raises(RuntimeError, match="PQ index .* overwritten"):
-        pq_topk_batches(
+        dense_topk_batches(
             stream_embeddings(spark, qdir),
-            spark.read.parquet(idx + "/codes"),
-            spark.read.parquet(idx + "/vecs"),
-            spark.read.parquet(idx + "/codebooks"),
+            idx,
             str(tmp_path / "stale_out"),
-            index_path=idx,
             expected_fingerprint=stale,
         )
 
 
-def _ivfpq_pure_python_topk(
-    cell_rows, vec_map, cent_rows, books, raw_q, k, n_probe, shortlist
-):
-    """Pure-Python IVF-PQ cascade -- centroid ranking in raw space
-    with (d2, cluster) ties, ADC under the stored codebooks,
-    (adc, vec_id) shortlist, exact-dot rerank with Spark's HALF_UP
-    display rounding replicated via Decimal(repr(x)) -- shared by the
-    IVF-PQ serving and append tests as the no-Spark-helper reference.
-    All folds run left-to-right from 0.0, matching the engine's
-    `dot`/`pq_adc_dist` bit-for-bit."""
+# build knobs per dense kind for the fixture-sized tests (four lists
+# keep every IVF cell populated on a few hundred vectors)
+_DENSE_TEST_KNOBS = {
+    "pq": {},
+    "ivf": {"n_lists": 4},
+    "ivfpq": {"n_lists": 4, "n_subspaces": 4},
+    "matryoshka": {"probe_dim": 8},
+    "quant": {},
+    "ivfmat": {"n_lists": 4, "probe_dim": 8},
+    "ivfquant": {"n_lists": 4},
+}
+
+# the stored scan column each kind's codec writes
+_DENSE_CODE_COL = {
+    "ivf": "vec",
+    "pq": "codes",
+    "ivfpq": "codes",
+    "matryoshka": "vp",
+    "ivfmat": "vp",
+    "quant": "q",
+    "ivfquant": "q",
+}
+
+
+def _py_unit(vec):
+    acc = 0.0
+    for x in vec:
+        acc = acc + x * x
+    norm = acc ** 0.5
+    return [x / norm for x in vec]
+
+
+def _py_half_up6(x):
+    """Spark's HALF_UP display rounding to 6 places, replicated via
+    Decimal(repr(x))."""
     from decimal import ROUND_HALF_UP, Decimal
 
-    n_sub = len(books)
-    d_sub = len(books[0][0])
+    return float(
+        Decimal(repr(x)).quantize(Decimal("0.000001"), rounding=ROUND_HALF_UP)
+    )
+
+
+def _py_stored_index(spark, idx):
+    """A dense root read back as plain Python: its stamped kind, scan
+    rows, unit float store, sorted (cluster, centroid) list, codebooks,
+    and the stamped probe_dim / max_code."""
+    fp = spark.read.parquet(idx + "/fingerprint").collect()[0].asDict()
+    kind = fp["kind"]
+    scan = {"pq": "codes", "quant": "codes", "matryoshka": "prefixes"}.get(
+        kind, "cells"
+    )
+    st = {
+        "kind": kind,
+        "rows": spark.read.parquet(f"{idx}/{scan}").collect(),
+        "vecs": None,
+        "cents": None,
+        "books": None,
+        "probe_dim": int(fp["probe_dim"]) if "probe_dim" in fp else None,
+        "max_code": (1 << (int(fp["bits"]) - 1)) - 1 if "bits" in fp else None,
+    }
+    if kind != "ivf":
+        st["vecs"] = {
+            r["vec_id"]: list(r["v"])
+            for r in spark.read.parquet(idx + "/vecs").collect()
+        }
+    if kind.startswith("ivf"):
+        st["cents"] = sorted(
+            (r["cluster"], list(r["centroid"]))
+            for r in spark.read.parquet(idx + "/centroids").collect()
+        )
+    if kind in ("pq", "ivfpq"):
+        st["books"] = _py_books(
+            spark.read.parquet(idx + "/codebooks").orderBy("s", "code").collect()
+        )
+    return st
+
+
+def _py_books(cb_rows):
+    books = [[] for _ in range(1 + max(r["s"] for r in cb_rows))]
+    for r in cb_rows:
+        books[r["s"]].append(list(r["centroid"]))
+    return books
+
+
+def _py_d2(a, b):
+    return sum((x - y) * (x - y) for x, y in zip(a, b))
+
+
+def _py_encode(st, raw):
+    """(cluster, stored code) of one raw vector under the stored model,
+    re-derived without Spark: the nearest centroid by squared-L2 with
+    (d2, cluster) ties (None for the flat kinds), then the codec -- raw
+    floats, first-min per-subspace PQ codes on the unit vector
+    (left-fold distances), the unit prefix, or the per-vector
+    amax/max_code scale with banker's rounding (Java
+    BigDecimal.valueOf semantics via Decimal(repr(x)))."""
+    from decimal import ROUND_HALF_EVEN, Decimal
+
+    kind = st["kind"]
+    cl = None
+    if st["cents"] is not None:
+        cl = min((_py_d2(raw, c), c_id) for c_id, c in st["cents"])[1]
+    if kind == "ivf":
+        return cl, list(raw)
+    if kind in ("matryoshka", "ivfmat"):
+        return cl, _py_unit(raw)[: st["probe_dim"]]
+    if kind in ("pq", "ivfpq"):
+        uv = _py_unit(raw)
+        d_sub = len(st["books"][0][0])
+        codes = []
+        for s, book in enumerate(st["books"]):
+            sub = uv[s * d_sub : (s + 1) * d_sub]
+            dists = []
+            for c in book:
+                d = 0.0
+                for a, b in zip(sub, c):
+                    d = d + (a - b) * (a - b)
+                dists.append(d)
+            codes.append(dists.index(min(dists)))
+        return cl, codes
+    scale = max(abs(x) for x in raw) / float(st["max_code"])
+    if scale <= 0:
+        return cl, [0.0] * len(raw)
+    return cl, [
+        float(
+            Decimal(repr(x / scale)).quantize(
+                Decimal("1"), rounding=ROUND_HALF_EVEN
+            )
+        )
+        for x in raw
+    ]
+
+
+def _py_coarse(st, uq, r):
+    """The codec's coarse score of one stored row, ascending = nearer:
+    ADC under the stored codebooks, or the negated prefix / code-vector
+    cosine (float query side)."""
+    kind = st["kind"]
+    if kind in ("pq", "ivfpq"):
+        d_sub = len(st["books"][0][0])
+        adc = 0.0
+        for s, book in enumerate(st["books"]):
+            adc = adc + _py_d2(uq[s * d_sub : (s + 1) * d_sub], book[r["codes"][s]])
+        return adc
+    if kind in ("matryoshka", "ivfmat"):
+        qv, cv = uq[: st["probe_dim"]], list(r["vp"])
+    else:
+        qv, cv = uq, [float(x) for x in r["q"]]
+    qn = sum(a * a for a in qv) ** 0.5
+    return -(
+        sum(a * b for a, b in zip(qv, cv)) / (qn * sum(a * a for a in cv) ** 0.5)
+    )
+
+
+def _py_dense_topk(st, raw_q, k, n_probe, shortlist):
+    """The dense cascade recomputed in pure Python over the stored rows
+    -- no Spark helper reuse: centroid d2 ranking in raw space with
+    (d2, cluster) ties -> probed cells only -> the codec's coarse score
+    with (score, vec_id) shortlist order -> exact-dot rerank on unit
+    vectors with HALF_UP display rounding. Plain ivf scores the probed
+    cells by exact cosine instead (unrounded order, rounded display).
+    All folds run left-to-right, matching the engine bit-for-bit."""
     out = []
     for qid in sorted(raw_q):
         rq = raw_q[qid]
-        ranked_cells = sorted(
-            (
-                sum((a - b) * (a - b) for a, b in zip(rq, c)),
-                cl,
-            )
-            for cl, c in cent_rows
-        )[:n_probe]
-        probed = {cl for _, cl in ranked_cells}
-        acc = 0.0
-        for x in rq:
-            acc = acc + x * x
-        norm = acc ** 0.5
-        uq = [x / norm for x in rq]
-        lut = [
-            [
-                sum(
-                    (a - b) * (a - b)
-                    for a, b in zip(uq[s * d_sub : (s + 1) * d_sub], c)
-                )
-                for c in books[s]
-            ]
-            for s in range(n_sub)
-        ]
-        cands = []
-        for r in cell_rows:
-            if r["cluster"] not in probed or r["vec_id"] == qid:
-                continue
-            adc = 0.0
-            for s in range(n_sub):
-                adc = adc + lut[s][r["codes"][s]]
-            cands.append((adc, r["vec_id"], r["label"]))
-        cands.sort()
-        for rank, (neg_cos, vid, label) in enumerate(
-            sorted(
+        rows = [r for r in st["rows"] if r["vec_id"] != qid]
+        if st["cents"] is not None:
+            probed = {
+                cl
+                for _, cl in sorted(
+                    (_py_d2(rq, c), cl) for cl, c in st["cents"]
+                )[:n_probe]
+            }
+            rows = [r for r in rows if r["cluster"] in probed]
+        if st["kind"] == "ivf":
+            qq = sum(a * a for a in rq)
+            ranked = sorted(
                 (
-                    -float(
-                        Decimal(
-                            repr(
-                                sum(
-                                    a * b
-                                    for a, b in zip(uq, vec_map[vid])
-                                )
-                            )
-                        ).quantize(
-                            Decimal("0.000001"), rounding=ROUND_HALF_UP
-                        )
+                    -(
+                        sum(a * b for a, b in zip(rq, r["vec"]))
+                        / (qq ** 0.5 * sum(a * a for a in r["vec"]) ** 0.5)
                     ),
-                    vid,
-                    label,
+                    r["vec_id"],
+                    r["label"],
                 )
-                for _, vid, label in cands[: max(shortlist, k)]
-            )[:k],
-            start=1,
-        ):
-            out.append((qid, vid, label, rank, -neg_cos))
+                for r in rows
+            )[:k]
+            out += [
+                (qid, vid, label, rank, _py_half_up6(-neg))
+                for rank, (neg, vid, label) in enumerate(ranked, start=1)
+            ]
+            continue
+        uq = _py_unit(rq)
+        cands = sorted(
+            (_py_coarse(st, uq, r), r["vec_id"], r["label"]) for r in rows
+        )[: max(shortlist, k)]
+        ranked = sorted(
+            (
+                -_py_half_up6(sum(a * b for a, b in zip(uq, st["vecs"][vid]))),
+                vid,
+                label,
+            )
+            for _, vid, label in cands
+        )[:k]
+        out += [
+            (qid, vid, label, rank, -neg)
+            for rank, (neg, vid, label) in enumerate(ranked, start=1)
+        ]
     return sorted(out)
 
 
@@ -2209,136 +2332,80 @@ def test_streaming_ivfpq_topk_composes_the_family_rules(spark, tmp_path):
     """Streaming IVF-PQ -- coarse cells prune the scan, PQ codes score
     it, floats serve only the shortlist -- pinned two independent ways:
     (1) at n_probe == n_lists the candidate set is the whole corpus,
-    so the output must equal `pq_topk_batches` over a plain PQ
+    so the output must equal the plain PQ stream over a separate PQ
     artifact with the same model knobs, row-for-row (a DIFFERENT
-    artifact through a DIFFERENT code path); (2) at n_probe=2 the
-    output equals a pure-Python recompute of the whole cascade --
-    centroid ranking in raw space with (d2, cluster) ties, ADC under
-    the stored codebooks, (adc, vec_id) shortlist, exact-dot rerank
-    with Spark's HALF_UP display rounding replicated via
-    Decimal(repr(x)) -- no Spark helper reuse
-    (`_ivfpq_pure_python_topk`). Also pins the cells partition
-    pruning and the family's stale-pin refusal."""
+    artifact through a DIFFERENT partitioning); (2) at n_probe=2 the
+    output equals a pure-Python recompute of the whole cascade
+    (`_py_dense_topk`). Also pins the cells partition pruning and the
+    family's stale-pin refusal."""
     from big_data_streaming_dashboard_spark.streaming.llm_ingest import (
+        dense_topk_batches,
         index_fingerprint,
-        ivfpq_topk_batches,
-        pq_topk_batches,
         stream_embeddings,
-        write_ivfpq_index,
-        write_pq_index,
+        write_dense_index,
     )
     from big_data_streaming_dashboard_spark.tables import load_table
 
     embs = load_table(spark, "/root/testdata/sf0.001", "embeddings")
     idx = str(tmp_path / "ivfpq")
-    write_ivfpq_index(embs, idx, n_lists=8)
+    write_dense_index(embs, idx, "ivfpq", n_lists=8)
     qdir = str(tmp_path / "queries")
     embs.filter(F.col("vec_id") < 5).repartition(2).write.parquet(qdir)
 
-    cells = spark.read.parquet(idx + "/cells")
-    vecs = spark.read.parquet(idx + "/vecs")
-    books_df = spark.read.parquet(idx + "/codebooks")
-    cents = spark.read.parquet(idx + "/centroids")
+    def probe(root, tag, n_probe):
+        out = str(tmp_path / f"topk_{tag}")
+        dense_topk_batches(
+            stream_embeddings(spark, qdir),
+            root,
+            out,
+            k=5,
+            n_probe=n_probe,
+            checkpoint=str(tmp_path / f"ckpt_{tag}"),
+        ).awaitTermination(180)
+        return sorted(map(tuple, spark.read.parquet(out).collect()))
 
     # (1) full probe == the plain PQ stream over a separate artifact
     # (n_probe == the ACTUAL stored centroid count -- k-means may
     # leave a cluster empty, and the equivalence premise is "probe
     # every stored cell")
-    n_lists_actual = cents.count()
-    out_full = str(tmp_path / "topk_full")
-    q = ivfpq_topk_batches(
-        stream_embeddings(spark, qdir),
-        cells,
-        vecs,
-        books_df,
-        cents,
-        out_full,
-        k=5,
-        n_probe=n_lists_actual,
-        checkpoint=str(tmp_path / "ckpt_full"),
-        index_path=idx,
-    )
-    q.awaitTermination(180)
-    pq_idx = str(tmp_path / "pq")
-    write_pq_index(embs, pq_idx)
-    out_pq = str(tmp_path / "topk_pq")
-    q2 = pq_topk_batches(
-        stream_embeddings(spark, qdir),
-        spark.read.parquet(pq_idx + "/codes"),
-        spark.read.parquet(pq_idx + "/vecs"),
-        spark.read.parquet(pq_idx + "/codebooks"),
-        out_pq,
-        k=5,
-        checkpoint=str(tmp_path / "ckpt_pq"),
-        index_path=pq_idx,
-    )
-    q2.awaitTermination(180)
-    got_full = sorted(map(tuple, spark.read.parquet(out_full).collect()))
-    want_pq = sorted(map(tuple, spark.read.parquet(out_pq).collect()))
+    st = _py_stored_index(spark, idx)
+    n_lists_actual = len(st["cents"])
+    got_full = probe(idx, "full", n_lists_actual)
+    pq_idx = write_dense_index(embs, str(tmp_path / "pq"), "pq")
+    want_pq = probe(pq_idx, "pq", 2)
     assert got_full == want_pq and got_full
 
     # (2) n_probe=2 == pure-Python cascade recompute
-    out2 = str(tmp_path / "topk_2")
-    q3 = ivfpq_topk_batches(
-        stream_embeddings(spark, qdir),
-        cells,
-        vecs,
-        books_df,
-        cents,
-        out2,
-        k=5,
-        n_probe=2,
-        checkpoint=str(tmp_path / "ckpt_2"),
-        index_path=idx,
-    )
-    q3.awaitTermination(180)
-    got2 = sorted(map(tuple, spark.read.parquet(out2).collect()))
-
-    cell_rows = cells.collect()
-    vec_map = {r["vec_id"]: list(r["v"]) for r in vecs.collect()}
-    cent_rows = sorted(
-        (r["cluster"], list(r["centroid"])) for r in cents.collect()
-    )
-    cb_rows = books_df.orderBy("s", "code").collect()
-    n_sub = 1 + max(r["s"] for r in cb_rows)
-    books: list[list[list[float]]] = [[] for _ in range(n_sub)]
-    for r in cb_rows:
-        books[r["s"]].append(list(r["centroid"]))
+    got2 = probe(idx, "2", 2)
     raw_q = {
         r["vec_id"]: [float(x) for x in r["embedding"]]
         for r in embs.filter(F.col("vec_id") < 5).collect()
     }
-    want2 = _ivfpq_pure_python_topk(
-        cell_rows,
-        vec_map,
-        cent_rows,
-        books,
-        raw_q,
-        k=5,
-        n_probe=2,
+    want2 = _py_dense_topk(
+        st, raw_q, k=5, n_probe=2,
         shortlist=max(8 * 5, 500 * 2 // (8 * n_lists_actual)),
     )
     assert got2 == want2 and got2
 
     # cells partition pruning: a cluster IN filter reaches the scan
-    pruned = cells.filter(F.col("cluster").isin([0, 3]))
+    pruned = spark.read.parquet(idx + "/cells").filter(
+        F.col("cluster").isin([0, 3])
+    )
     pruned.count()
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "cluster" in plan
 
     # stale pin refuses at call time after a rebuild
     stale = index_fingerprint(spark, idx)
-    write_ivfpq_index(embs.filter(F.col("vec_id") < 200), idx, n_lists=8)
+    write_dense_index(
+        embs.filter(F.col("vec_id") < 200), idx, "ivfpq", n_lists=8
+    )
     assert index_fingerprint(spark, idx) != stale
     with pytest.raises(RuntimeError, match="IVF-PQ index .* overwritten"):
-        ivfpq_topk_batches(
+        dense_topk_batches(
             stream_embeddings(spark, qdir),
-            cells,
-            vecs,
-            books_df,
-            cents,
+            idx,
             str(tmp_path / "stale_out"),
-            index_path=idx,
             expected_fingerprint=stale,
         )
 
@@ -2348,8 +2415,8 @@ def test_streaming_ivfpq_randomized_corpora_parity(spark):
     RANDOMIZED corpora (the `_bm25_postings` in-memory-parity
     precedent): three seeded corpora far outside the fixture
     distribution -- tiny dim, coarse codebooks, cluster-starved
-    k-means -- exercised I/O-free through the extracted
-    `_ivfpq_ranked_plan`, so tie-rule or probe-rule regressions can't
+    k-means -- exercised I/O-free through the shared
+    `_dense_ranked_plan`, so tie-rule or probe-rule regressions can't
     hide behind the fixture's comfortable geometry."""
     import random
 
@@ -2360,7 +2427,8 @@ def test_streaming_ivfpq_randomized_corpora_parity(spark):
         pq_encode,
     )
     from big_data_streaming_dashboard_spark.streaming.llm_ingest import (
-        _ivfpq_ranked_plan,
+        _dense_ranked_plan,
+        _DenseIndex,
     )
 
     for seed in (11, 37, 96):
@@ -2389,17 +2457,24 @@ def test_streaming_ivfpq_randomized_corpora_parity(spark):
             ).join(assigned, "vec_id")
         ).persist()
         batch = embs.filter(F.col("vec_id") < 5)
-        ranked, done = _ivfpq_ranked_plan(
-            batch, cells, vecs, books, cents, 3, 2, 10, True
+        ranked, done = _dense_ranked_plan(
+            _DenseIndex("ivfpq", cells, vecs, cents, books),
+            batch, 3, 2, 10, True,
         )
         got = sorted(map(tuple, ranked.collect()))
         done()
 
-        want = _ivfpq_pure_python_topk(
-            cells.collect(),
-            {r["vec_id"]: list(r["v"]) for r in vecs.collect()},
-            sorted((r["cluster"], list(r["centroid"])) for r in cents.collect()),
-            books,
+        st = {
+            "kind": "ivfpq",
+            "rows": cells.collect(),
+            "vecs": {r["vec_id"]: list(r["v"]) for r in vecs.collect()},
+            "cents": sorted(
+                (r["cluster"], list(r["centroid"])) for r in cents.collect()
+            ),
+            "books": books,
+        }
+        want = _py_dense_topk(
+            st,
             {i: [float(x) for x in rows[i][2]] for i in range(5)},
             k=3,
             n_probe=2,
@@ -2410,234 +2485,212 @@ def test_streaming_ivfpq_randomized_corpora_parity(spark):
         assert got == want and got, seed
 
 
-def test_streaming_pq_append_equals_frozen_model_rebuild(spark, tmp_path):
-    """`append_pq_index` encodes a delta under the FROZEN stored
-    codebooks (faiss add-with-trained-index), and the claim is pinned
-    two independent ways: (a) the appended codes rows equal a pure-
-    Python nearest-centroid recompute of the delta under the stored
-    codebooks -- left-to-right fold normalization, per-subspace
-    squared-L2 folds, first-min tie rule, the exact `_normalize` /
-    `_pq_assign_col` arithmetic re-derived WITHOUT Spark (the
-    union-find/BFS-reference discipline); (b) streaming probes over
-    the appended artifact equal `pq_shortlist_rerank` over the merged
-    frozen-model encoding computed in-memory (base encode from
-    `pq_encode`, delta encode from the shared `pq_code_col`). Also
-    pins the nonce re-stamp on append (running pinned streams fail
-    over) and the empty-delta no-op (no pointless failover)."""
+@pytest.mark.parametrize("kind", list(_DENSE_TEST_KNOBS))
+def test_dense_append_equals_frozen_model_rebuild(spark, tmp_path, kind):
+    """`append_dense_index` folds a delta under the root's FROZEN model
+    -- the stored centroids (the cell is the nearest final centroid)
+    and codebooks, the stamped probe_dim and bits -- and the claim is
+    pinned for every kind two independent ways: (a) every appended
+    scan row equals the pure-Python encode of its delta vector under
+    the stored model (`_py_encode`: squared-L2 argmin cells, first-min
+    PQ codes, unit prefixes, banker's-rounded b-bit codes); (b) probes
+    over the appended multi-file artifact equal the pure-Python
+    cascade over its stored rows (`_py_dense_topk`), with delta
+    vectors actually serving. The model-free kinds additionally equal
+    a one-shot rebuild over the union corpus, and the stored PQ model
+    IS the base training. Also pins the nonce re-stamp on append
+    (running pinned streams fail over) and the empty-delta no-op (no
+    pointless failover)."""
     from big_data_streaming_dashboard_spark.llmdata.similarity import (
-        _dvec,
-        _normalize,
-        pq_adc_dist,
-        pq_code_col,
         pq_encode,
-        pq_lut,
-        pq_shortlist_rerank,
     )
     from big_data_streaming_dashboard_spark.streaming.llm_ingest import (
-        append_pq_index,
+        append_dense_index,
+        dense_topk_batches,
         index_fingerprint,
-        pq_topk_batches,
         stream_embeddings,
-        write_pq_index,
+        write_dense_index,
     )
     from big_data_streaming_dashboard_spark.tables import load_table
 
+    knobs = _DENSE_TEST_KNOBS[kind]
     embs = load_table(spark, "/root/testdata/sf0.001", "embeddings")
     base = embs.filter(F.col("vec_id") < 400)
     delta = embs.filter(F.col("vec_id") >= 400)
-    idx = str(tmp_path / "pq")
-    write_pq_index(base, idx)
+    idx = write_dense_index(base, str(tmp_path / kind), kind, **knobs)
     stamp0 = index_fingerprint(spark, idx)
-    append_pq_index(delta, idx)
+    append_dense_index(delta, idx)
     assert index_fingerprint(spark, idx) != stamp0  # failover re-stamp
 
-    # (a) appended codes == pure-Python frozen-model recompute
-    cb_rows = (
-        spark.read.parquet(idx + "/codebooks").orderBy("s", "code").collect()
-    )
-    n_sub = 1 + max(r["s"] for r in cb_rows)
-    books: list[list[list[float]]] = [[] for _ in range(n_sub)]
-    for r in cb_rows:
-        books[r["s"]].append(list(r["centroid"]))
-    d_sub = len(books[0][0])
-    got_codes = {
-        r["vec_id"]: list(r["codes"])
-        for r in spark.read.parquet(idx + "/codes")
-        .filter(F.col("vec_id") >= 400)
-        .collect()
+    # (a) appended rows == the pure-Python frozen-model encode
+    st = _py_stored_index(spark, idx)
+    code_col = _DENSE_CODE_COL[kind]
+    stored = {
+        r["vec_id"]: (
+            r["cluster"] if st["cents"] is not None else None,
+            [float(x) if kind in ("quant", "ivfquant") else x
+             for x in r[code_col]],
+        )
+        for r in st["rows"]
+        if r["vec_id"] >= 400
     }
-    raw = delta.select("vec_id", _dvec("embedding").alias("e")).collect()
-    assert len(got_codes) == len(raw) == 100
-    for r in raw:
-        acc = 0.0
-        for x in r["e"]:
-            acc = acc + x * x
-        norm = acc ** 0.5
-        v = [x / norm for x in r["e"]]
-        want = []
-        for s in range(n_sub):
-            sub = v[s * d_sub : (s + 1) * d_sub]
-            dists = []
-            for c in books[s]:
-                d = 0.0
-                for a, b in zip(sub, c):
-                    d = d + (a - b) * (a - b)
-                dists.append(d)
-            want.append(dists.index(min(dists)))
-        assert got_codes[r["vec_id"]] == want, r["vec_id"]
+    raw = {
+        r["vec_id"]: [float(x) for x in r["embedding"]]
+        for r in embs.collect()
+    }
+    assert len(stored) == 100
+    for vid, rec in stored.items():
+        assert rec == _py_encode(st, raw[vid]), vid
 
-    # (b) probes over the appended artifact == the merged frozen-model
-    # encoding served through the shared batch tail
+    # (b) probes over the appended artifact == the pure-Python cascade,
+    # for the union of the query ids the per-kind tests used
+    qids = [1, 2, 3, 7, 150, 405, 410, 420, 430, 470, 480, 490]
     qdir = str(tmp_path / "queries")
-    embs.filter(F.col("vec_id").isin([1, 150, 410, 470])).repartition(
-        2
-    ).write.parquet(qdir)
-    out = str(tmp_path / "topk")
-    q = pq_topk_batches(
-        stream_embeddings(spark, qdir),
-        spark.read.parquet(idx + "/codes"),
-        spark.read.parquet(idx + "/vecs"),
-        spark.read.parquet(idx + "/codebooks"),
-        out,
-        k=5,
-        checkpoint=str(tmp_path / "ckpt"),
-        index_path=idx,
+    embs.filter(F.col("vec_id").isin(qids)).repartition(2).write.parquet(
+        qdir
     )
-    q.awaitTermination(180)
-    got = sorted(map(tuple, spark.read.parquet(out).collect()))
 
-    enc_base, books_trained = pq_encode(base)
-    assert books_trained == books  # stored model IS the base training
-    merged = enc_base.select("vec_id", "label", "v", "codes").unionByName(
-        delta.select(
-            "vec_id",
-            "label",
-            _normalize(_dvec("embedding")).alias("v"),
-        ).withColumn("codes", pq_code_col(books))
-    ).persist()
-    shortlist = max(8 * 5, 500 // 8)
-    branches = []
-    for qr in sorted(
-        merged.filter(F.col("vec_id").isin([1, 150, 410, 470])).collect(),
-        key=lambda r: r["vec_id"],
-    ):
-        qv = list(qr["v"])
-        lut = pq_lut(qv, books)
-        lut_expr = F.expr(
-            "array(%s)"
-            % ", ".join(
-                "array(%s)" % ", ".join(repr(x) for x in row) for row in lut
-            )
-        )
-        branches.append(
-            merged.filter(F.col("vec_id") != qr["vec_id"]).select(
-                F.lit(qr["vec_id"]).alias("query_id"),
-                "vec_id",
-                "label",
-                "v",
-                pq_adc_dist(lut_expr, F.col("codes"), n_sub).alias("_adc"),
-                F.expr(
-                    "array(%s)" % ", ".join(repr(x) for x in qv)
-                ).alias("_qv"),
-            )
-        )
-    scored = branches[0]
-    for b in branches[1:]:
-        scored = scored.unionByName(b)
-    want = sorted(
-        map(tuple, pq_shortlist_rerank(scored, 5, shortlist).collect())
+    def probe(root, tag):
+        out = str(tmp_path / f"topk_{tag}")
+        dense_topk_batches(
+            stream_embeddings(spark, qdir),
+            root,
+            out,
+            k=5,
+            n_probe=2,
+            checkpoint=str(tmp_path / f"ckpt_{tag}"),
+        ).awaitTermination(180)
+        return sorted(map(tuple, spark.read.parquet(out).collect()))
+
+    got = probe(idx, "app")
+    # the serving default: 1/8 of the probed candidates, at least 8k
+    n_corpus = len(st["rows"])
+    probed = n_corpus * 2 // len(st["cents"]) if st["cents"] else n_corpus
+    want = _py_dense_topk(
+        st,
+        {q: raw[q] for q in qids},
+        k=5,
+        n_probe=2,
+        shortlist=max(8 * 5, probed // 8),
     )
-    merged.unpersist()
     assert got == want and got
     assert any(t[1] >= 400 for t in got)  # delta vectors actually serve
 
+    if kind in ("matryoshka", "quant"):
+        # no model to freeze: append-then-probe == rebuild-then-probe
+        rebuilt = write_dense_index(embs, str(tmp_path / "reb"), kind, **knobs)
+        assert probe(rebuilt, "reb") == got
+    if kind == "pq":
+        # the stored model IS the base training
+        assert pq_encode(base)[1] == st["books"]
+
     # empty delta: no-op, NO re-stamp (no pointless stream failover)
     stamp1 = index_fingerprint(spark, idx)
-    append_pq_index(embs.filter(F.col("vec_id") < 0), idx)
+    append_dense_index(embs.filter(F.col("vec_id") < 0), idx)
     assert index_fingerprint(spark, idx) == stamp1
 
 
-def test_streaming_pq_append_guards_refuse_loudly(spark, tmp_path):
-    """The `append_pq_index` premise guards, each with its DISTINCT
-    message: unstamped root, non-PQ artifact, duplicate delta ids,
-    ragged delta dimensions, and a torn codes/vecs artifact (the
-    crash window between the two appends)."""
+@pytest.mark.parametrize("kind", list(_DENSE_TEST_KNOBS))
+def test_dense_append_guards_refuse_loudly(spark, tmp_path, kind):
+    """The dense family's build and append guards, each with its
+    DISTINCT message, for every kind: an empty build, a knob the kind
+    does not have, out-of-range probe_dim / bits, an unstamped root, a
+    root stamped with a non-dense kind, duplicate delta ids, ragged
+    delta dimensions, and -- for the shortlist kinds -- a TORN scan/vecs
+    artifact (the crash window between an append's two data writes),
+    refused by the append AND the probe constructor. The prefix kinds'
+    stamped probe_dim is authoritative: a stamp that disagrees with
+    the stored width refuses as a mixed artifact. The PQ root also
+    pins the stamp-crash recovery (`restamp_index` refreshes the
+    nonce and preserves every knob)."""
     from big_data_streaming_dashboard_spark.streaming.llm_ingest import (
+        _DENSE_KINDS,
         _write_index_fingerprint,
-        append_pq_index,
-        write_pq_index,
+        append_dense_index,
+        dense_topk_batches,
+        restamp_index,
+        stream_embeddings,
+        write_dense_index,
     )
     from big_data_streaming_dashboard_spark.tables import load_table
 
+    spec, knobs = _DENSE_KINDS[kind], _DENSE_TEST_KNOBS[kind]
     embs = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    base = embs.filter(F.col("vec_id") < 400)
-    delta = embs.filter(F.col("vec_id") >= 400)
+    base = embs.filter(F.col("vec_id") < 300)
+    delta = embs.filter(F.col("vec_id") >= 300)
+
+    with pytest.raises(ValueError, match="empty embeddings"):
+        write_dense_index(
+            embs.filter(F.col("vec_id") < 0), str(tmp_path / "e"), kind
+        )
+    with pytest.raises(TypeError, match="not build knobs"):
+        write_dense_index(base, str(tmp_path / "k"), kind, n_probe=2)
+    if "probe_dim" in spec.knobs:
+        with pytest.raises(ValueError, match="out of range"):
+            write_dense_index(base, str(tmp_path / "w"), kind, probe_dim=0)
+    if "bits" in spec.knobs:
+        with pytest.raises(ValueError, match="bits=9 out of range"):
+            write_dense_index(base, str(tmp_path / "b"), kind, bits=9)
 
     with pytest.raises(ValueError, match="unstamped"):
-        append_pq_index(delta, str(tmp_path / "nowhere"))
+        append_dense_index(delta, str(tmp_path / "nowhere"))
+    other = str(tmp_path / "notdense")
+    _write_index_fingerprint(spark, other, {"kind": "bm25"})
+    with pytest.raises(ValueError, match="not a servable dense index"):
+        append_dense_index(delta, other)
 
-    other = str(tmp_path / "notpq")
-    _write_index_fingerprint(spark, other, {"kind": "ivf"})
-    with pytest.raises(ValueError, match="not a PQ index"):
-        append_pq_index(delta, other)
-
-    idx = str(tmp_path / "pq")
-    write_pq_index(base, idx)
+    idx = write_dense_index(base, str(tmp_path / kind), kind, **knobs)
     with pytest.raises(ValueError, match="already present"):
-        append_pq_index(embs.filter(F.col("vec_id") < 10), idx)
-
+        append_dense_index(embs.filter(F.col("vec_id") < 10), idx)
     ragged = spark.createDataFrame(
         [(9001, 1, [0.25] * 32)],
         "vec_id long, label int, embedding array<double>",
     )
     with pytest.raises(ValueError, match="dimensional"):
-        append_pq_index(ragged, idx)
+        append_dense_index(ragged, idx)
 
-    # tear the artifact: one codes row lands without its vecs twin
-    spark.read.parquet(idx + "/codes").limit(1).withColumn(
-        "vec_id", F.lit(77777).cast("long")
-    ).write.mode("append").parquet(idx + "/codes")
-    with pytest.raises(ValueError, match="torn artifact"):
-        append_pq_index(delta, idx)
-
-    # ...and the PROBE constructor refuses the same tear (a torn
-    # artifact would silently drop candidates from the shortlist
-    # re-rank, wrong results not an error) -- shared _require_untorn
-    # guard across the two-directory serving family
-    from big_data_streaming_dashboard_spark.streaming.llm_ingest import (
-        pq_topk_batches,
-        stream_embeddings,
-    )
-
-    qdir = str(tmp_path / "queries")
+    qdir = str(tmp_path / "q")
     embs.filter(F.col("vec_id") < 2).write.parquet(qdir)
-    with pytest.raises(ValueError, match="torn artifact"):
-        pq_topk_batches(
-            stream_embeddings(spark, qdir),
-            spark.read.parquet(idx + "/codes"),
-            spark.read.parquet(idx + "/vecs"),
-            spark.read.parquet(idx + "/codebooks"),
-            str(tmp_path / "torn_out"),
-        )
+    fp = spark.read.parquet(idx + "/fingerprint").collect()[0].asDict()
+    knob_stamp = {k: v for k, v in fp.items() if k != "nonce"}
+    if kind == "pq":
+        # stamp-crash recovery: restamp_index refreshes the nonce and
+        # preserves every knob stamp; an unstamped path refuses
+        restamp_index(spark, idx)
+        fp1 = spark.read.parquet(idx + "/fingerprint").collect()[0].asDict()
+        assert fp1["nonce"] != fp["nonce"]
+        assert {k: v for k, v in fp1.items() if k != "nonce"} == knob_stamp
+        with pytest.raises(ValueError, match="not a stamped"):
+            restamp_index(spark, str(tmp_path / "nothing"))
+    if "probe_dim" in spec.knobs:
+        # a stamp whose width disagrees with the stored prefixes is a
+        # mixed artifact: the probe refuses instead of slicing queries
+        # at the wrong width
+        _write_index_fingerprint(spark, idx, {**knob_stamp, "probe_dim": 16})
+        with pytest.raises(ValueError, match="mixed artifact"):
+            dense_topk_batches(
+                stream_embeddings(spark, qdir), idx, str(tmp_path / "o1")
+            )
+        _write_index_fingerprint(spark, idx, knob_stamp)
+    if spec.codec == "raw":
+        return  # no float store, so no scan/vecs tear to guard
 
-    # stamp-crash recovery: an append whose data writes landed but
-    # whose re-stamp crashed leaves a consistent artifact under the
-    # OLD nonce (retry refuses as double-append, pinned streams never
-    # fail over) -- restamp_index refreshes the nonce and preserves
-    # every knob stamp
-    from big_data_streaming_dashboard_spark.streaming.llm_ingest import (
-        restamp_index,
+    # tear it: a scan row with no vecs twin -- append AND probe refuse
+    w = (
+        spark.read.parquet(f"{idx}/{spec.scan}")
+        .limit(1)
+        .withColumn("vec_id", F.lit(77777).cast("long"))
+        .write.mode("append")
     )
-
-    fp0 = spark.read.parquet(idx + "/fingerprint").collect()[0].asDict()
-    restamp_index(spark, idx)
-    fp1 = spark.read.parquet(idx + "/fingerprint").collect()[0].asDict()
-    assert fp1["nonce"] != fp0["nonce"]
-    assert {k: v for k, v in fp1.items() if k != "nonce"} == {
-        k: v for k, v in fp0.items() if k != "nonce"
-    }
-    with pytest.raises(ValueError, match="not a stamped"):
-        restamp_index(spark, str(tmp_path / "nothing"))
+    if spec.ivf:
+        w = w.partitionBy("cluster")
+    w.parquet(f"{idx}/{spec.scan}")
+    with pytest.raises(ValueError, match="torn artifact"):
+        append_dense_index(delta, idx)
+    with pytest.raises(ValueError, match="torn artifact"):
+        dense_topk_batches(
+            stream_embeddings(spark, qdir), idx, str(tmp_path / "o2")
+        )
 
 
 def test_probe_dedup_ttl_matches_unbounded_state(spark, tmp_path):
@@ -2772,28 +2825,27 @@ def test_serving_index_build_knob_guards(spark, tmp_path):
     outside [2, 8] refuse (tinyint storage would wrap wider codes
     silently and the coarse ranking would collapse); empty corpora
     refuse at build (a stamped-but-empty root would die later with a
-    bare first()=None TypeError); and write_ivfpq_index's dim knob
-    encodes non-default widths correctly (before the fix it hardwired
-    EMBEDDING_DIM and null-padded every distance on a 32-dim
-    corpus)."""
+    bare first()=None TypeError); and the IVF-PQ build encodes
+    non-default widths correctly (before the fix it hardwired
+    EMBEDDING_DIM and null-padded every distance on a 32-dim corpus;
+    the width now comes from the data)."""
     import random
 
     from big_data_streaming_dashboard_spark.streaming.llm_ingest import (
-        _ivfpq_ranked_plan,
-        write_ivfpq_index,
-        write_matryoshka_index,
-        write_quant_index,
+        _dense_ranked_plan,
+        _load_dense_index,
+        write_dense_index,
     )
     from big_data_streaming_dashboard_spark.tables import load_table
 
     embs = load_table(spark, "/root/testdata/sf0.001", "embeddings")
     empty = embs.filter(F.col("vec_id") < 0)
     with pytest.raises(ValueError, match="bits=12 out of range"):
-        write_quant_index(embs, str(tmp_path / "q12"), bits=12)
+        write_dense_index(embs, str(tmp_path / "q12"), "quant", bits=12)
     with pytest.raises(ValueError, match="empty embeddings"):
-        write_quant_index(empty, str(tmp_path / "qe"))
+        write_dense_index(empty, str(tmp_path / "qe"), "quant")
     with pytest.raises(ValueError, match="empty embeddings"):
-        write_matryoshka_index(empty, str(tmp_path / "me"))
+        write_dense_index(empty, str(tmp_path / "me"), "matryoshka")
 
     rng = random.Random(7)
     narrow = spark.createDataFrame(
@@ -2803,8 +2855,8 @@ def test_serving_index_build_knob_guards(spark, tmp_path):
         ],
         "vec_id long, label int, embedding array<double>",
     )
-    idx = write_ivfpq_index(
-        narrow, str(tmp_path / "ivfpq32"), n_lists=4, dim=32
+    idx = write_dense_index(
+        narrow, str(tmp_path / "ivfpq32"), "ivfpq", n_lists=4
     )
     cells = spark.read.parquet(idx + "/cells")
     # every stored code is a real (non-null) assignment
@@ -2815,16 +2867,9 @@ def test_serving_index_build_knob_guards(spark, tmp_path):
         ).count()
         == 0
     )
-    from big_data_streaming_dashboard_spark.streaming.llm_ingest import (
-        _load_codebooks,
-    )
-
-    ranked, done = _ivfpq_ranked_plan(
+    ranked, done = _dense_ranked_plan(
+        _load_dense_index(spark, idx, "test")[0],
         narrow.filter(F.col("vec_id") < 3),
-        cells,
-        spark.read.parquet(idx + "/vecs"),
-        _load_codebooks(spark.read.parquet(idx + "/codebooks")),
-        spark.read.parquet(idx + "/centroids"),
         3,
         2,
         10,
@@ -2835,416 +2880,67 @@ def test_serving_index_build_knob_guards(spark, tmp_path):
     assert len(rows) == 9 and all(r["cos_sim"] is not None for r in rows)
 
 
-def test_streaming_ivf_append_assigns_frozen_nearest_cell(spark, tmp_path):
-    """`append_ivf_index` lands each delta vector in its nearest
-    stored FINAL-assignment cell -- pinned against a pure-Python
-    argmin over the stored centroids (squared-L2 left-fold,
-    (d2, cluster) ties) -- and probes over the appended artifact
-    equal a pure-Python recompute of the IVF cascade (rank centroids,
-    exact cosine over the probed cells' rows, unrounded-cos ordering,
-    HALF_UP display rounding). Also pins the nonce re-stamp, the
-    dup/ragged/kind guards, and the empty-delta no-op."""
-    from decimal import ROUND_HALF_UP, Decimal
-
-    from big_data_streaming_dashboard_spark.streaming.llm_ingest import (
-        _write_index_fingerprint,
-        append_ivf_index,
-        index_fingerprint,
-        ivf_topk_batches,
-        stream_embeddings,
-        write_ivf_index,
-    )
-    from big_data_streaming_dashboard_spark.tables import load_table
-
-    embs = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    base = embs.filter(F.col("vec_id") < 400)
-    delta = embs.filter(F.col("vec_id") >= 400)
-    idx = str(tmp_path / "ivf")
-    write_ivf_index(base, idx, n_lists=8, kmeans_iterations=3)
-    stamp0 = index_fingerprint(spark, idx)
-    append_ivf_index(delta, idx)
-    assert index_fingerprint(spark, idx) != stamp0
-
-    cents = sorted(
-        (r["cluster"], list(r["centroid"]))
-        for r in spark.read.parquet(idx + "/centroids").collect()
-    )
-    got_cells = {
-        r["vec_id"]: r["cluster"]
-        for r in spark.read.parquet(idx + "/cells")
-        .filter(F.col("vec_id") >= 400)
-        .collect()
-    }
-    raw = {
-        r["vec_id"]: [float(x) for x in r["embedding"]]
-        for r in delta.collect()
-    }
-    assert len(got_cells) == len(raw) == 100
-    for vid, vec in raw.items():
-        want_cl = min(
-            (sum((a - b) * (a - b) for a, b in zip(vec, c)), cl)
-            for cl, c in cents
-        )[1]
-        assert got_cells[vid] == want_cl, vid
-
-    # probes over the appended artifact == pure-Python IVF cascade
-    qdir = str(tmp_path / "queries")
-    embs.filter(F.col("vec_id").isin([2, 405, 480])).write.parquet(qdir)
-    out = str(tmp_path / "topk")
-    cells = spark.read.parquet(idx + "/cells")
-    q = ivf_topk_batches(
-        stream_embeddings(spark, qdir),
-        cells,
-        spark.read.parquet(idx + "/centroids"),
-        out,
-        k=5,
-        n_probe=2,
-        checkpoint=str(tmp_path / "ckpt"),
-        index_path=idx,
-    )
-    q.awaitTermination(180)
-    got = sorted(map(tuple, spark.read.parquet(out).collect()))
-    cell_rows = cells.collect()
-    vec_map = {r["vec_id"]: list(r["vec"]) for r in cell_rows}
-    want = []
-    for qid in [2, 405, 480]:
-        rq = vec_map[qid]
-        probed = {
-            cl
-            for _, cl in sorted(
-                (sum((a - b) * (a - b) for a, b in zip(rq, c)), cl)
-                for cl, c in cents
-            )[:2]
-        }
-        qq = sum(a * a for a in rq)
-        scored = []
-        for r in cell_rows:
-            if r["cluster"] not in probed or r["vec_id"] == qid:
-                continue
-            v = vec_map[r["vec_id"]]
-            cos = sum(a * b for a, b in zip(rq, v)) / (
-                qq ** 0.5 * sum(a * a for a in v) ** 0.5
-            )
-            scored.append((-cos, r["vec_id"], r["label"]))
-        for rank, (neg_cos, vid, label) in enumerate(
-            sorted(scored)[:5], start=1
-        ):
-            want.append(
-                (
-                    qid,
-                    vid,
-                    label,
-                    rank,
-                    float(
-                        Decimal(repr(-neg_cos)).quantize(
-                            Decimal("0.000001"), rounding=ROUND_HALF_UP
-                        )
-                    ),
-                )
-            )
-        # delta vectors are retrievable through the frozen index
-    assert got == sorted(want) and got
-    assert any(t[1] >= 400 for t in got)
-
-    # guards: wrong kind, dup ids, ragged dims; empty delta no-op
-    other = str(tmp_path / "notivf")
-    _write_index_fingerprint(spark, other, {"kind": "pq"})
-    with pytest.raises(ValueError, match="not a IVF index"):
-        append_ivf_index(delta, other)
-    with pytest.raises(ValueError, match="already present"):
-        append_ivf_index(embs.filter(F.col("vec_id") < 10), idx)
-    ragged = spark.createDataFrame(
-        [(9001, 1, [0.25] * 32)],
-        "vec_id long, label int, embedding array<double>",
-    )
-    with pytest.raises(ValueError, match="dimensional"):
-        append_ivf_index(ragged, idx)
-    stamp1 = index_fingerprint(spark, idx)
-    append_ivf_index(embs.filter(F.col("vec_id") < 0), idx)
-    assert index_fingerprint(spark, idx) == stamp1
-
-
-def test_streaming_ivfpq_append_encodes_under_both_frozen_models(
-    spark, tmp_path
-):
-    """`append_ivfpq_index` assigns the delta's cells under the frozen
-    coarse centroids AND its codes under the frozen codebooks -- both
-    pinned against pure-Python recomputes -- and n_probe=2 probes over
-    the appended multi-file artifact equal the shared pure-Python
-    IVF-PQ cascade. Also pins the torn cells/vecs guard and the dup
-    refusal."""
-    from big_data_streaming_dashboard_spark.streaming.llm_ingest import (
-        append_ivfpq_index,
-        index_fingerprint,
-        ivfpq_topk_batches,
-        stream_embeddings,
-        write_ivfpq_index,
-    )
-    from big_data_streaming_dashboard_spark.tables import load_table
-
-    embs = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    base = embs.filter(F.col("vec_id") < 400)
-    delta = embs.filter(F.col("vec_id") >= 400)
-    idx = str(tmp_path / "ivfpq")
-    write_ivfpq_index(base, idx, n_lists=8)
-    stamp0 = index_fingerprint(spark, idx)
-    append_ivfpq_index(delta, idx)
-    assert index_fingerprint(spark, idx) != stamp0
-
-    cells = spark.read.parquet(idx + "/cells")
-    vecs = spark.read.parquet(idx + "/vecs")
-    books_df = spark.read.parquet(idx + "/codebooks")
-    cents_df = spark.read.parquet(idx + "/centroids")
-    cent_rows = sorted(
-        (r["cluster"], list(r["centroid"])) for r in cents_df.collect()
-    )
-    cb_rows = books_df.orderBy("s", "code").collect()
-    n_sub = 1 + max(r["s"] for r in cb_rows)
-    books: list[list[list[float]]] = [[] for _ in range(n_sub)]
-    for r in cb_rows:
-        books[r["s"]].append(list(r["centroid"]))
-    d_sub = len(books[0][0])
-
-    # appended rows: cluster == frozen-centroid argmin (raw space),
-    # codes == frozen-codebook argmin (unit space), pure Python
-    appended = {
-        r["vec_id"]: (r["cluster"], list(r["codes"]))
-        for r in cells.filter(F.col("vec_id") >= 400).collect()
-    }
-    raw = {
-        r["vec_id"]: [float(x) for x in r["embedding"]]
-        for r in delta.collect()
-    }
-    assert len(appended) == len(raw) == 100
-    for vid, vec in raw.items():
-        want_cl = min(
-            (sum((a - b) * (a - b) for a, b in zip(vec, c)), cl)
-            for cl, c in cent_rows
-        )[1]
-        acc = 0.0
-        for x in vec:
-            acc = acc + x * x
-        norm = acc ** 0.5
-        uv = [x / norm for x in vec]
-        want_codes = []
-        for s in range(n_sub):
-            sub = uv[s * d_sub : (s + 1) * d_sub]
-            dists = []
-            for c in books[s]:
-                d = 0.0
-                for a, b in zip(sub, c):
-                    d = d + (a - b) * (a - b)
-                dists.append(d)
-            want_codes.append(dists.index(min(dists)))
-        assert appended[vid] == (want_cl, want_codes), vid
-
-    # probes over the appended artifact == the shared Python cascade
-    qdir = str(tmp_path / "queries")
-    embs.filter(F.col("vec_id").isin([3, 420, 490])).write.parquet(qdir)
-    out = str(tmp_path / "topk")
-    n_lists_actual = cents_df.count()
-    q = ivfpq_topk_batches(
-        stream_embeddings(spark, qdir),
-        cells,
-        vecs,
-        books_df,
-        cents_df,
-        out,
-        k=5,
-        n_probe=2,
-        checkpoint=str(tmp_path / "ckpt"),
-        index_path=idx,
-    )
-    q.awaitTermination(180)
-    got = sorted(map(tuple, spark.read.parquet(out).collect()))
-    want = _ivfpq_pure_python_topk(
-        cells.collect(),
-        {r["vec_id"]: list(r["v"]) for r in vecs.collect()},
-        cent_rows,
-        books,
-        {qid: raw.get(qid) or _raw_vec(embs, qid) for qid in [3, 420, 490]},
-        k=5,
-        n_probe=2,
-        # the serving default sizes off the APPENDED cells count (600)
-        shortlist=max(8 * 5, 600 * 2 // (8 * n_lists_actual)),
-    )
-    assert got == want and got
-    assert any(t[1] >= 400 for t in got)
-
-    # torn artifact (a vecs row with no cells twin) refuses; dups refuse
-    vecs.limit(1).withColumn(
-        "vec_id", F.lit(88888).cast("long")
-    ).write.mode("append").parquet(idx + "/vecs")
-    with pytest.raises(ValueError, match="torn artifact"):
-        append_ivfpq_index(delta, idx)
-
-
-def _raw_vec(embs, vid):
-    row = embs.filter(F.col("vec_id") == vid).collect()[0]
-    return [float(x) for x in row["embedding"]]
-
-
 @pytest.mark.parametrize("probe_dim", [16, 64])
 def test_streaming_matryoshka_topk_matches_python_cascade(
     spark, tmp_path, probe_dim
 ):
     """Streaming truncated-width serving (prefix-cosine shortlist +
     exact full-width rerank through the shared `pq_shortlist_rerank`
-    tail) equals a pure-Python recompute of the cascade -- prefix
-    cosine with left-fold dots, (-cos, vec_id) shortlist order,
-    exact-dot rerank with HALF_UP display rounding. At probe_dim=64
-    (== dim) the prefix IS the vector, so the same pin doubles as the
-    exact-brute-force collapse check. Also pins the stale-pin
-    refusal and that the prefix artifact carries probe_dim floats."""
-    from decimal import ROUND_HALF_UP, Decimal
-
+    tail) equals a pure-Python recompute of the cascade
+    (`_py_dense_topk`: prefix cosine with left-fold dots, (-cos,
+    vec_id) shortlist order, exact-dot rerank with HALF_UP display
+    rounding). At probe_dim=64 (== dim) the prefix IS the vector, so
+    the same pin doubles as the exact-brute-force collapse check. Also
+    pins the stale-pin refusal and that the prefix artifact carries
+    probe_dim floats."""
     from big_data_streaming_dashboard_spark.streaming.llm_ingest import (
+        dense_topk_batches,
         index_fingerprint,
-        matryoshka_topk_batches,
         stream_embeddings,
-        write_matryoshka_index,
+        write_dense_index,
     )
     from big_data_streaming_dashboard_spark.tables import load_table
 
     embs = load_table(spark, "/root/testdata/sf0.001", "embeddings")
     idx = str(tmp_path / "mat")
-    write_matryoshka_index(embs, idx, probe_dim=probe_dim)
-    prefixes = spark.read.parquet(idx + "/prefixes")
-    vecs = spark.read.parquet(idx + "/vecs")
-    assert len(prefixes.select("vp").first()["vp"]) == probe_dim
+    write_dense_index(embs, idx, "matryoshka", probe_dim=probe_dim)
+    st = _py_stored_index(spark, idx)
+    assert len(st["rows"][0]["vp"]) == probe_dim
 
     qdir = str(tmp_path / "queries")
     embs.filter(F.col("vec_id") < 4).repartition(2).write.parquet(qdir)
     out = str(tmp_path / "topk")
-    q = matryoshka_topk_batches(
+    q = dense_topk_batches(
         stream_embeddings(spark, qdir),
-        prefixes,
-        vecs,
+        idx,
         out,
         k=5,
         checkpoint=str(tmp_path / "ckpt"),
-        index_path=idx,
     )
     q.awaitTermination(180)
     got = sorted(map(tuple, spark.read.parquet(out).collect()))
-
-    pref_rows = prefixes.collect()
-    vec_map = {r["vec_id"]: list(r["v"]) for r in vecs.collect()}
-    shortlist = max(8 * 5, 500 // 8)
-    want = []
-    for qid in range(4):
-        uq = vec_map[qid]
-        qp = uq[:probe_dim]
-        qpn = sum(a * a for a in qp) ** 0.5
-        cands = []
-        for r in pref_rows:
-            if r["vec_id"] == qid:
-                continue
-            vp = list(r["vp"])
-            c = sum(a * b for a, b in zip(qp, vp)) / (
-                qpn * sum(a * a for a in vp) ** 0.5
-            )
-            cands.append((-c, r["vec_id"], r["label"]))
-        cands.sort()
-        for rank, (neg_cos, vid, label) in enumerate(
-            sorted(
-                (
-                    -float(
-                        Decimal(
-                            repr(sum(a * b for a, b in zip(uq, vec_map[vid])))
-                        ).quantize(
-                            Decimal("0.000001"), rounding=ROUND_HALF_UP
-                        )
-                    ),
-                    vid,
-                    label,
-                )
-                for _, vid, label in cands[: max(shortlist, 5)]
-            )[:5],
-            start=1,
-        ):
-            want.append((qid, vid, label, rank, -neg_cos))
-    assert got == sorted(want) and got
+    raw_q = {
+        r["vec_id"]: [float(x) for x in r["embedding"]]
+        for r in embs.filter(F.col("vec_id") < 4).collect()
+    }
+    want = _py_dense_topk(st, raw_q, k=5, n_probe=0, shortlist=500 // 8)
+    assert got == want and got
 
     # stale pin refuses after a rebuild
     stale = index_fingerprint(spark, idx)
-    write_matryoshka_index(
-        embs.filter(F.col("vec_id") < 200), idx, probe_dim=probe_dim
+    write_dense_index(
+        embs.filter(F.col("vec_id") < 200), idx, "matryoshka",
+        probe_dim=probe_dim,
     )
     with pytest.raises(RuntimeError, match="matryoshka index .* overwritten"):
-        matryoshka_topk_batches(
+        dense_topk_batches(
             stream_embeddings(spark, qdir),
-            prefixes,
-            vecs,
+            idx,
             str(tmp_path / "stale_out"),
-            index_path=idx,
             expected_fingerprint=stale,
         )
 
 
-def test_streaming_matryoshka_append_is_premise_free(spark, tmp_path):
-    """`append_matryoshka_index` has no model to freeze (prefixes are
-    per-row facts), so append-then-probe equals rebuild-then-probe
-    with no premise: the two artifacts' probe outputs are compared
-    row-for-row. Guards: wrong kind, dup ids, ragged dims, torn
-    prefixes/vecs; empty delta is a no-op without a re-stamp."""
-    from big_data_streaming_dashboard_spark.streaming.llm_ingest import (
-        _write_index_fingerprint,
-        append_matryoshka_index,
-        index_fingerprint,
-        matryoshka_topk_batches,
-        stream_embeddings,
-        write_matryoshka_index,
-    )
-    from big_data_streaming_dashboard_spark.tables import load_table
-
-    embs = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    base = embs.filter(F.col("vec_id") < 400)
-    delta = embs.filter(F.col("vec_id") >= 400)
-    idx = str(tmp_path / "mat")
-    write_matryoshka_index(base, idx, probe_dim=16)
-    stamp0 = index_fingerprint(spark, idx)
-    append_matryoshka_index(delta, idx)
-    assert index_fingerprint(spark, idx) != stamp0
-    rebuilt = str(tmp_path / "mat_rebuilt")
-    write_matryoshka_index(embs, rebuilt, probe_dim=16)
-
-    qdir = str(tmp_path / "queries")
-    embs.filter(F.col("vec_id").isin([7, 430])).write.parquet(qdir)
-    outs = []
-    for name, root in [("app", idx), ("reb", rebuilt)]:
-        out = str(tmp_path / f"topk_{name}")
-        q = matryoshka_topk_batches(
-            stream_embeddings(spark, qdir),
-            spark.read.parquet(root + "/prefixes"),
-            spark.read.parquet(root + "/vecs"),
-            out,
-            k=5,
-            checkpoint=str(tmp_path / f"ckpt_{name}"),
-            index_path=root,
-        )
-        q.awaitTermination(180)
-        outs.append(sorted(map(tuple, spark.read.parquet(out).collect())))
-    assert outs[0] == outs[1] and outs[0]
-    assert any(t[1] >= 400 for t in outs[0])
-
-    other = str(tmp_path / "notmat")
-    _write_index_fingerprint(spark, other, {"kind": "pq"})
-    with pytest.raises(ValueError, match="not a matryoshka index"):
-        append_matryoshka_index(delta, other)
-    with pytest.raises(ValueError, match="already present"):
-        append_matryoshka_index(embs.filter(F.col("vec_id") < 10), idx)
-    ragged = spark.createDataFrame(
-        [(9001, 1, [0.25] * 32)],
-        "vec_id long, label int, embedding array<double>",
-    )
-    with pytest.raises(ValueError, match="dimensional"):
-        append_matryoshka_index(ragged, idx)
-    spark.read.parquet(idx + "/vecs").limit(1).withColumn(
-        "vec_id", F.lit(88888).cast("long")
-    ).write.mode("append").parquet(idx + "/vecs")
-    with pytest.raises(ValueError, match="torn artifact"):
-        append_matryoshka_index(delta, idx)
     # the torn tear above also proves the guard ordering; empty-delta
     # no-op is pinned on the PQ twin (same code path)
 
@@ -3262,119 +2958,57 @@ def test_streaming_quant_topk_matches_python_cascade(spark, tmp_path, bits):
     only recall differs. Also pins that the artifact stores tinyint
     codes and the premise-free append (append-then-probe ==
     rebuild-then-probe row-for-row)."""
-    from decimal import ROUND_HALF_EVEN, ROUND_HALF_UP, Decimal
-
     from big_data_streaming_dashboard_spark.streaming.llm_ingest import (
-        append_quant_index,
-        quant_topk_batches,
+        append_dense_index,
+        dense_topk_batches,
         stream_embeddings,
-        write_quant_index,
+        write_dense_index,
     )
     from big_data_streaming_dashboard_spark.tables import load_table
 
     embs = load_table(spark, "/root/testdata/sf0.001", "embeddings")
     idx = str(tmp_path / "quant")
-    write_quant_index(embs, idx, bits=bits)
-    codes = spark.read.parquet(idx + "/codes")
-    vecs = spark.read.parquet(idx + "/vecs")
-    assert dict(codes.dtypes)["q"] == "array<tinyint>"
+    write_dense_index(embs, idx, "quant", bits=bits)
+    assert dict(spark.read.parquet(idx + "/codes").dtypes)["q"] == (
+        "array<tinyint>"
+    )
 
     qdir = str(tmp_path / "queries")
     embs.filter(F.col("vec_id") < 4).repartition(2).write.parquet(qdir)
-    out = str(tmp_path / "topk")
-    q = quant_topk_batches(
-        stream_embeddings(spark, qdir),
-        codes,
-        vecs,
-        out,
-        k=5,
-        checkpoint=str(tmp_path / "ckpt"),
-        index_path=idx,
-    )
-    q.awaitTermination(180)
-    got = sorted(map(tuple, spark.read.parquet(out).collect()))
 
-    max_code = (1 << (bits - 1)) - 1
+    def probe(root, tag):
+        out = str(tmp_path / f"topk_{tag}")
+        dense_topk_batches(
+            stream_embeddings(spark, qdir),
+            root,
+            out,
+            k=5,
+            checkpoint=str(tmp_path / f"ckpt_{tag}"),
+        ).awaitTermination(180)
+        return sorted(map(tuple, spark.read.parquet(out).collect()))
+
+    got = probe(idx, "full")
+    st = _py_stored_index(spark, idx)
     raw = {
-        r["vec_id"]: ([float(x) for x in r["embedding"]], r["label"])
+        r["vec_id"]: [float(x) for x in r["embedding"]]
         for r in embs.collect()
     }
-    py_codes = {}
-    for vid, (vec, label) in raw.items():
-        amax = max(abs(x) for x in vec)
-        scale = amax / float(max_code)
-        if scale > 0:
-            cv = [
-                float(
-                    Decimal(repr(x / scale)).quantize(
-                        Decimal("1"), rounding=ROUND_HALF_EVEN
-                    )
-                )
-                for x in vec
-            ]
-        else:
-            cv = [0.0] * len(vec)
-        py_codes[vid] = cv
     # the stored tinyint codes ARE the shared-rule quantization
-    stored = {r["vec_id"]: [float(x) for x in r["q"]] for r in codes.collect()}
-    assert stored == py_codes
-
-    unit = {}
-    for vid, (vec, label) in raw.items():
-        acc = 0.0
-        for x in vec:
-            acc = acc + x * x
-        n = acc ** 0.5
-        unit[vid] = [x / n for x in vec]
-    shortlist = max(8 * 5, 500 // 8)
-    want = []
-    for qid in range(4):
-        uq = unit[qid]
-        qn = sum(a * a for a in uq) ** 0.5
-        cands = []
-        for vid, cv in py_codes.items():
-            if vid == qid:
-                continue
-            num = sum(a * b for a, b in zip(uq, cv))
-            den = qn * sum(a * a for a in cv) ** 0.5
-            cands.append((-(num / den), vid, raw[vid][1]))
-        cands.sort()
-        for rank, (neg_cos, vid, label) in enumerate(
-            sorted(
-                (
-                    -float(
-                        Decimal(
-                            repr(sum(a * b for a, b in zip(uq, unit[vid])))
-                        ).quantize(
-                            Decimal("0.000001"), rounding=ROUND_HALF_UP
-                        )
-                    ),
-                    vid,
-                    label,
-                )
-                for _, vid, label in cands[: max(shortlist, 5)]
-            )[:5],
-            start=1,
-        ):
-            want.append((qid, vid, label, rank, -neg_cos))
-    assert got == sorted(want) and got
+    for r in st["rows"]:
+        assert [float(x) for x in r["q"]] == _py_encode(st, raw[r["vec_id"]])[1]
+    want = _py_dense_topk(
+        st, {q: raw[q] for q in range(4)}, k=5, n_probe=0,
+        shortlist=500 // 8,
+    )
+    assert got == want and got
 
     # premise-free append: append-then-probe == rebuild-then-probe
     idx2 = str(tmp_path / "quant_app")
-    write_quant_index(embs.filter(F.col("vec_id") < 400), idx2, bits=bits)
-    append_quant_index(embs.filter(F.col("vec_id") >= 400), idx2)
-    out2 = str(tmp_path / "topk_app")
-    q2 = quant_topk_batches(
-        stream_embeddings(spark, qdir),
-        spark.read.parquet(idx2 + "/codes"),
-        spark.read.parquet(idx2 + "/vecs"),
-        out2,
-        k=5,
-        checkpoint=str(tmp_path / "ckpt_app"),
-        index_path=idx2,
+    write_dense_index(
+        embs.filter(F.col("vec_id") < 400), idx2, "quant", bits=bits
     )
-    q2.awaitTermination(180)
-    assert sorted(map(tuple, spark.read.parquet(out2).collect())) == got
+    append_dense_index(embs.filter(F.col("vec_id") >= 400), idx2)
+    assert probe(idx2, "app") == got
 
 
 def test_compact_serving_index_preserves_probes(spark, tmp_path):
@@ -3389,41 +3023,38 @@ def test_compact_serving_index_preserves_probes(spark, tmp_path):
 
     from big_data_streaming_dashboard_spark.streaming.llm_ingest import (
         append_bm25_index,
-        append_pq_index,
+        append_dense_index,
         bm25_topk_batches,
         compact_serving_index,
+        dense_topk_batches,
         index_fingerprint,
-        pq_topk_batches,
         stream_embeddings,
         stream_keyword_queries,
         write_bm25_index,
-        write_pq_index,
+        write_dense_index,
         _write_index_fingerprint,
     )
     from big_data_streaming_dashboard_spark.tables import load_table
 
     embs = load_table(spark, "/root/testdata/sf0.001", "embeddings")
     idx = str(tmp_path / "pq")
-    write_pq_index(embs.filter(F.col("vec_id") < 300), idx)
-    append_pq_index(
+    write_dense_index(embs.filter(F.col("vec_id") < 300), idx, "pq")
+    append_dense_index(
         embs.filter((F.col("vec_id") >= 300) & (F.col("vec_id") < 400)), idx
     )
-    append_pq_index(embs.filter(F.col("vec_id") >= 400), idx)
+    append_dense_index(embs.filter(F.col("vec_id") >= 400), idx)
 
     qdir = str(tmp_path / "queries")
     embs.filter(F.col("vec_id").isin([2, 350, 450])).write.parquet(qdir)
 
     def probe(tag):
         out = str(tmp_path / f"out_{tag}")
-        q = pq_topk_batches(
+        q = dense_topk_batches(
             stream_embeddings(spark, qdir),
-            spark.read.parquet(idx + "/codes"),
-            spark.read.parquet(idx + "/vecs"),
-            spark.read.parquet(idx + "/codebooks"),
+            idx,
             out,
             k=5,
             checkpoint=str(tmp_path / f"ck_{tag}"),
-            index_path=idx,
         )
         q.awaitTermination(180)
         return sorted(map(tuple, spark.read.parquet(out).collect()))
@@ -5516,22 +5147,16 @@ def test_bm25_probe_parity_on_randomized_corpora(spark, seed):
 
 
 def test_empty_artifact_dim_probes_refuse_loudly(spark, tmp_path):
-    """r15 ADVICE item 1: the append family probes the stored dim
-    BEFORE its torn guards run (the ragged-delta check needs it), so
-    an empty/torn vecs, centroids, or codebooks dir used to die with
-    a bare TypeError (len(None)) / max()-of-empty instead of the
-    family's distinct loud refusal. `_stored_dim` /
-    `_load_codebooks` now refuse with the empty-or-torn message at
-    every dim-probe site."""
+    """r15 ADVICE item 1: the append probes the stored dim BEFORE its
+    torn guards run (the ragged-delta check needs it), so an
+    empty/torn vecs, centroids, or codebooks dir used to die with a
+    bare TypeError (len(None)) / max()-of-empty instead of the
+    family's distinct loud refusal. `_stored_dim` / `_load_codebooks`
+    now refuse with the empty-or-torn message at every dim-probe
+    site."""
     from big_data_streaming_dashboard_spark.streaming.llm_ingest import (
-        append_ivf_index,
-        append_ivfpq_index,
-        append_matryoshka_index,
-        append_quant_index,
-        write_ivf_index,
-        write_ivfpq_index,
-        write_matryoshka_index,
-        write_quant_index,
+        append_dense_index,
+        write_dense_index,
     )
     from big_data_streaming_dashboard_spark.tables import load_table
 
@@ -5547,47 +5172,36 @@ def test_empty_artifact_dim_probes_refuse_loudly(spark, tmp_path):
             subdir
         )
 
-    # matryoshka + quant: empty vecs dir under a valid stamp
-    midx = str(tmp_path / "m")
-    write_matryoshka_index(base, midx, probe_dim=8)
-    _empty_out(midx + "/vecs")
-    with pytest.raises(ValueError, match="empty or torn build"):
-        append_matryoshka_index(delta, midx)
-
-    qidx = str(tmp_path / "q")
-    write_quant_index(base, qidx)
-    _empty_out(qidx + "/vecs")
-    with pytest.raises(ValueError, match="empty or torn build"):
-        append_quant_index(delta, qidx)
-
-    # ivf: empty centroids dir (the model side, not the data side)
-    iidx = str(tmp_path / "i")
-    write_ivf_index(base, iidx, n_lists=4)
-    _empty_out(iidx + "/centroids")
-    with pytest.raises(ValueError, match="empty or torn build"):
-        append_ivf_index(delta, iidx)
-
-    # ivf-pq: empty codebooks dir (shared _load_codebooks guard)
-    pidx = str(tmp_path / "p")
-    write_ivfpq_index(base, pidx, n_lists=4, n_subspaces=4)
-    _empty_out(pidx + "/codebooks")
-    with pytest.raises(ValueError, match="codebooks artifact is empty"):
-        append_ivfpq_index(delta, pidx)
+    # (kind, knobs, emptied dir, message): matryoshka + quant lose the
+    # vecs dir under a valid stamp; ivf its centroids (the model side,
+    # not the data side); ivf-pq its codebooks (shared _load_codebooks)
+    for kind, knobs, subdir, msg in [
+        ("matryoshka", {"probe_dim": 8}, "vecs", "empty or torn build"),
+        ("quant", {}, "vecs", "empty or torn build"),
+        ("ivf", {"n_lists": 4}, "centroids", "empty or torn build"),
+        ("ivfpq", {"n_lists": 4, "n_subspaces": 4}, "codebooks",
+         "codebooks artifact is empty"),
+    ]:
+        idx = write_dense_index(base, str(tmp_path / kind), kind, **knobs)
+        _empty_out(f"{idx}/{subdir}")
+        with pytest.raises(ValueError, match=msg):
+            append_dense_index(delta, idx)
 
     base.unpersist()
     delta.unpersist()
 
 
 def test_matryoshka_probe_dim_pinned_to_fingerprint(spark, tmp_path):
-    """r15 ADVICE item 2: when `matryoshka_topk_batches` is pinned to
-    an index_path, the probe width comes from the STAMPED probe_dim --
-    frames read from a DIFFERENT artifact than the pin refuse loudly
-    instead of silently probing at the other artifact's width (the
-    nonce pin alone cannot catch a frame/path mismatch)."""
+    """r15 ADVICE item 2: the matryoshka probe width comes from the
+    STAMPED probe_dim -- a root whose stamp disagrees with its stored
+    prefix width (a mixed artifact) refuses loudly instead of silently
+    slicing queries at the wrong width, and a consistent root serves
+    k rows per query."""
     from big_data_streaming_dashboard_spark.streaming.llm_ingest import (
-        matryoshka_topk_batches,
+        _write_index_fingerprint,
+        dense_topk_batches,
         stream_embeddings,
-        write_matryoshka_index,
+        write_dense_index,
     )
     from big_data_streaming_dashboard_spark.tables import load_table
 
@@ -5596,30 +5210,25 @@ def test_matryoshka_probe_dim_pinned_to_fingerprint(spark, tmp_path):
 
     a = str(tmp_path / "a")
     b = str(tmp_path / "b")
-    write_matryoshka_index(base, a, probe_dim=8)
-    write_matryoshka_index(base, b, probe_dim=16)
+    write_dense_index(base, a, "matryoshka", probe_dim=8)
+    write_dense_index(base, b, "matryoshka", probe_dim=8)
+    # b's stamp claims width 16 over 8-wide stored prefixes
+    _write_index_fingerprint(spark, b, {"kind": "matryoshka", "probe_dim": 16})
 
     qdir = str(tmp_path / "queries")
     embs.filter(F.col("vec_id") < 2).write.parquet(qdir)
 
-    # frames from A, pin on B: stamped width 16 != frame width 8
-    with pytest.raises(ValueError, match="different artifact"):
-        matryoshka_topk_batches(
-            stream_embeddings(spark, qdir),
-            spark.read.parquet(a + "/prefixes"),
-            spark.read.parquet(a + "/vecs"),
-            str(tmp_path / "out_bad"),
-            index_path=b,
+    with pytest.raises(ValueError, match="mixed artifact"):
+        dense_topk_batches(
+            stream_embeddings(spark, qdir), b, str(tmp_path / "out_bad")
         )
 
-    # matched frames + pin constructs and serves (k rows per query)
-    q = matryoshka_topk_batches(
+    # a consistent root constructs and serves (k rows per query)
+    q = dense_topk_batches(
         stream_embeddings(spark, qdir),
-        spark.read.parquet(a + "/prefixes"),
-        spark.read.parquet(a + "/vecs"),
+        a,
         str(tmp_path / "out_ok"),
         k=3,
-        index_path=a,
         checkpoint=str(tmp_path / "ck"),
     )
     q.awaitTermination()
@@ -5720,7 +5329,7 @@ def test_rag_endpoints_serve_from_ivfpq_index(spark, tmp_path):
         knn_classify_batches,
         stream_embeddings,
         write_bm25_index,
-        write_ivfpq_index,
+        write_dense_index,
     )
     from big_data_streaming_dashboard_spark.llmdata.text import (
         BM25_QUERY_TERMS,
@@ -5732,8 +5341,8 @@ def test_rag_endpoints_serve_from_ivfpq_index(spark, tmp_path):
     embs = load_table(spark, sf, "embeddings")
     n_corpus = embs.count()
     bmidx = write_bm25_index(docs, str(tmp_path / "bm"))
-    pidx = write_ivfpq_index(
-        embs, str(tmp_path / "ivfpq"), n_lists=4, n_subspaces=8
+    pidx = write_dense_index(
+        embs, str(tmp_path / "ivfpq"), "ivfpq", n_lists=4, n_subspaces=8
     )
     index_vecs = spark.read.parquet(pidx + "/vecs").select(
         "vec_id", F.col("v").alias("vec")
@@ -5819,12 +5428,8 @@ def test_rag_endpoints_serve_from_ivfpq_index(spark, tmp_path):
     # kind dispatch: the composed IVF x matryoshka root serves the
     # same endpoints; at full budget (n_probe = n_lists, probe_dim =
     # dim, shortlist = corpus) it too collapses to the brute form
-    from big_data_streaming_dashboard_spark.streaming.llm_ingest import (
-        write_ivf_matryoshka_index,
-    )
-
-    midx = write_ivf_matryoshka_index(
-        embs, str(tmp_path / "ivfmat"), n_lists=4, probe_dim=64
+    midx = write_dense_index(
+        embs, str(tmp_path / "ivfmat"), "ivfmat", n_lists=4, probe_dim=64
     )
     out_mat = str(tmp_path / "fused_mat")
     hybrid_rrf_keyword_batches(
@@ -5852,36 +5457,18 @@ def test_compact_then_probe_parity_all_kinds(spark, tmp_path, kind):
         ann_probe_stream,
         ann_topk_batches,
         append_bm25_index,
-        append_ivf_index,
-        append_ivf_matryoshka_index,
-        append_ivf_quant_index,
-        append_ivfpq_index,
-        append_matryoshka_index,
-        append_pq_index,
-        append_quant_index,
+        append_dense_index,
         bm25_topk_batches,
         compact_serving_index,
+        dense_topk_batches,
         index_fingerprint,
-        ivf_matryoshka_topk_batches,
-        ivf_quant_topk_batches,
-        ivf_topk_batches,
-        ivfpq_topk_batches,
-        matryoshka_topk_batches,
-        pq_topk_batches,
-        quant_topk_batches,
         rerank_topk_batches,
         semantic_verdict_batches,
         stream_embeddings,
         stream_keyword_queries,
         write_ann_index,
         write_bm25_index,
-        write_ivf_index,
-        write_ivf_matryoshka_index,
-        write_ivf_quant_index,
-        write_ivfpq_index,
-        write_matryoshka_index,
-        write_pq_index,
-        write_quant_index,
+        write_dense_index,
         write_rerank_index,
         write_semantic_index,
     )
@@ -5918,27 +5505,9 @@ def test_compact_then_probe_parity_all_kinds(spark, tmp_path, kind):
         )
         embs.filter(F.col("vec_id") < 3).write.parquet(qdir)
 
-        if kind == "pq":
-            write_pq_index(base, idx)
-            append_pq_index(delta, idx)
-        elif kind == "ivf":
-            write_ivf_index(base, idx, n_lists=4)
-            append_ivf_index(delta, idx)
-        elif kind == "ivfpq":
-            write_ivfpq_index(base, idx, n_lists=4, n_subspaces=4)
-            append_ivfpq_index(delta, idx)
-        elif kind == "matryoshka":
-            write_matryoshka_index(base, idx, probe_dim=8)
-            append_matryoshka_index(delta, idx)
-        elif kind == "ivfmat":
-            write_ivf_matryoshka_index(base, idx, n_lists=4, probe_dim=8)
-            append_ivf_matryoshka_index(delta, idx)
-        elif kind == "ivfquant":
-            write_ivf_quant_index(base, idx, n_lists=4)
-            append_ivf_quant_index(delta, idx)
-        elif kind == "quant":
-            write_quant_index(base, idx)
-            append_quant_index(delta, idx)
+        if kind in _DENSE_TEST_KNOBS:
+            write_dense_index(base, idx, kind, **_DENSE_TEST_KNOBS[kind])
+            append_dense_index(delta, idx)
         elif kind == "ann":
             write_ann_index(base, idx)
             write_ann_index(delta, idx, mode="append")
@@ -5952,62 +5521,11 @@ def test_compact_then_probe_parity_all_kinds(spark, tmp_path, kind):
         def probe(tag):
             out = str(tmp_path / f"out_{tag}")
             q = stream_embeddings(spark, qdir)
-            if kind == "pq":
-                h = pq_topk_batches(
-                    q,
-                    spark.read.parquet(idx + "/codes"),
-                    spark.read.parquet(idx + "/vecs"),
-                    spark.read.parquet(idx + "/codebooks"),
-                    out,
-                    checkpoint=str(tmp_path / f"ck_{tag}"),
-                )
-            elif kind == "ivf":
-                h = ivf_topk_batches(
-                    q,
-                    spark.read.parquet(idx + "/cells"),
-                    spark.read.parquet(idx + "/centroids"),
-                    out,
-                    n_probe=2,
-                    checkpoint=str(tmp_path / f"ck_{tag}"),
-                )
-            elif kind == "ivfpq":
-                h = ivfpq_topk_batches(
-                    q,
-                    spark.read.parquet(idx + "/cells"),
-                    spark.read.parquet(idx + "/vecs"),
-                    spark.read.parquet(idx + "/codebooks"),
-                    spark.read.parquet(idx + "/centroids"),
-                    out,
-                    n_probe=2,
-                    checkpoint=str(tmp_path / f"ck_{tag}"),
-                )
-            elif kind == "matryoshka":
-                h = matryoshka_topk_batches(
-                    q,
-                    spark.read.parquet(idx + "/prefixes"),
-                    spark.read.parquet(idx + "/vecs"),
-                    out,
-                    checkpoint=str(tmp_path / f"ck_{tag}"),
-                )
-            elif kind == "ivfmat":
-                h = ivf_matryoshka_topk_batches(
-                    q,
-                    spark.read.parquet(idx + "/cells"),
-                    spark.read.parquet(idx + "/vecs"),
-                    spark.read.parquet(idx + "/centroids"),
-                    out,
-                    n_probe=2,
-                    checkpoint=str(tmp_path / f"ck_{tag}"),
-                )
-            elif kind == "ivfquant":
-                h = ivf_quant_topk_batches(
-                    q,
-                    spark.read.parquet(idx + "/cells"),
-                    spark.read.parquet(idx + "/vecs"),
-                    spark.read.parquet(idx + "/centroids"),
-                    out,
-                    n_probe=2,
-                    checkpoint=str(tmp_path / f"ck_{tag}"),
+            ck = str(tmp_path / f"ck_{tag}")
+            if kind in _DENSE_TEST_KNOBS:
+                h = dense_topk_batches(
+                    q, idx, out, k=10 if kind == "ivf" else 5, n_probe=2,
+                    checkpoint=ck,
                 )
             elif kind == "ann":
                 h = ann_topk_batches(
@@ -6017,7 +5535,7 @@ def test_compact_then_probe_parity_all_kinds(spark, tmp_path, kind):
                         spark.read.parquet(idx + "/vecs"),
                     ),
                     out,
-                    checkpoint=str(tmp_path / f"ck_{tag}"),
+                    checkpoint=ck,
                 )
             elif kind == "semantic":
                 h = semantic_verdict_batches(
@@ -6025,22 +5543,12 @@ def test_compact_then_probe_parity_all_kinds(spark, tmp_path, kind):
                     spark.read.parquet(idx + "/bands"),
                     spark.read.parquet(idx + "/vecs"),
                     out,
-                    checkpoint=str(tmp_path / f"ck_{tag}"),
-                )
-            elif kind == "rerank":
-                h = rerank_topk_batches(
-                    q,
-                    spark.read.parquet(idx + "/corpus"),
-                    out,
-                    checkpoint=str(tmp_path / f"ck_{tag}"),
+                    checkpoint=ck,
                 )
             else:
-                h = quant_topk_batches(
-                    q,
-                    spark.read.parquet(idx + "/codes"),
-                    spark.read.parquet(idx + "/vecs"),
-                    out,
-                    checkpoint=str(tmp_path / f"ck_{tag}"),
+                h = rerank_topk_batches(
+                    q, spark.read.parquet(idx + "/corpus"), out,
+                    checkpoint=ck,
                 )
             h.awaitTermination(180)
             return sorted(map(tuple, spark.read.parquet(out).collect()))
@@ -6146,199 +5654,71 @@ def test_streaming_ivf_matryoshka_matches_python_cascade(
 ):
     """r15 verdict item 6: prefix-width cells under IVF partition
     pruning -- the two serving budgets MULTIPLIED. The streamed output
-    equals a pure-Python recompute of the composed cascade (centroid
-    d2 ranking with (d2, cluster) ties -> probed cells only ->
-    prefix-cosine shortlist with (-cos, vec_id) order -> exact
-    full-width rerank with HALF_UP display rounding). At
-    probe_dim=64 (== dim) and n_probe=4 (== n_lists) the cascade
-    collapses to exact brute force -- same pin, full budget. The
-    delta fold is covered by the same recompute run over an APPENDED
+    equals a pure-Python recompute of the composed cascade
+    (`_py_dense_topk`: centroid d2 ranking with (d2, cluster) ties ->
+    probed cells only -> prefix-cosine shortlist with (-cos, vec_id)
+    order -> exact full-width rerank with HALF_UP display rounding).
+    At probe_dim=64 (== dim) and n_probe=4 (== n_lists) the cascade
+    collapses to exact brute force -- same pin, full budget. The delta
+    fold is covered by the same recompute run over an APPENDED
     artifact (the stored cluster column IS the frozen-centroid
     assignment)."""
-    from decimal import ROUND_HALF_UP, Decimal
-
     from big_data_streaming_dashboard_spark.streaming.llm_ingest import (
-        append_ivf_matryoshka_index,
-        ivf_matryoshka_topk_batches,
+        append_dense_index,
+        dense_topk_batches,
         stream_embeddings,
-        write_ivf_matryoshka_index,
+        write_dense_index,
     )
     from big_data_streaming_dashboard_spark.tables import load_table
 
     embs = load_table(spark, "/root/testdata/sf0.001", "embeddings")
     idx = str(tmp_path / "ivfmat")
-    write_ivf_matryoshka_index(
-        embs.filter(F.col("vec_id") < 400), idx,
+    write_dense_index(
+        embs.filter(F.col("vec_id") < 400), idx, "ivfmat",
         n_lists=4, probe_dim=probe_dim,
     )
-    append_ivf_matryoshka_index(embs.filter(F.col("vec_id") >= 400), idx)
-
-    cells = spark.read.parquet(idx + "/cells")
-    vecs = spark.read.parquet(idx + "/vecs")
-    cents = spark.read.parquet(idx + "/centroids")
-    assert len(cells.select("vp").first()["vp"]) == probe_dim
+    append_dense_index(embs.filter(F.col("vec_id") >= 400), idx)
+    st = _py_stored_index(spark, idx)
+    assert len(st["rows"][0]["vp"]) == probe_dim
 
     qdir = str(tmp_path / "queries")
     embs.filter(F.col("vec_id") < 4).repartition(2).write.parquet(qdir)
     out = str(tmp_path / "topk")
-    q = ivf_matryoshka_topk_batches(
+    q = dense_topk_batches(
         stream_embeddings(spark, qdir),
-        cells,
-        vecs,
-        cents,
+        idx,
         out,
         k=5,
         n_probe=n_probe,
         checkpoint=str(tmp_path / "ckpt"),
-        index_path=idx,
     )
     q.awaitTermination(180)
     got = sorted(map(tuple, spark.read.parquet(out).collect()))
 
-    cell_rows = cells.collect()
-    vec_map = {r["vec_id"]: list(r["v"]) for r in vecs.collect()}
-    raw_map = {
+    raw_q = {
         r["vec_id"]: [float(x) for x in r["embedding"]]
         for r in embs.filter(F.col("vec_id") < 4).collect()
     }
-    cent_rows = sorted(
-        (r["cluster"], list(r["centroid"])) for r in cents.collect()
+    n_corpus = len(st["vecs"])
+    want = _py_dense_topk(
+        st, raw_q, k=5, n_probe=n_probe,
+        shortlist=max(8 * 5, n_corpus * n_probe // (8 * 4)),
     )
-    n_corpus = len(vec_map)
-    shortlist = max(8 * 5, n_corpus * n_probe // (8 * 4))
-    want = []
-    for qid in range(4):
-        qraw = raw_map[qid]
-        ranked_cells = sorted(
-            (
-                sum((x - y) * (x - y) for x, y in zip(qraw, c)),
-                cl,
-            )
-            for cl, c in cent_rows
-        )
-        probed = {cl for _d2, cl in ranked_cells[:n_probe]}
-        uq = vec_map[qid]
-        qp = uq[:probe_dim]
-        qpn = sum(a * a for a in qp) ** 0.5
-        cands = []
-        for r in cell_rows:
-            if r["cluster"] not in probed or r["vec_id"] == qid:
-                continue
-            vp = list(r["vp"])
-            c = sum(a * b for a, b in zip(qp, vp)) / (
-                qpn * sum(a * a for a in vp) ** 0.5
-            )
-            cands.append((-c, r["vec_id"], r["label"]))
-        cands.sort()
-        for rank, (neg_cos, vid, label) in enumerate(
-            sorted(
-                (
-                    -float(
-                        Decimal(
-                            repr(sum(a * b for a, b in zip(uq, vec_map[vid])))
-                        ).quantize(
-                            Decimal("0.000001"), rounding=ROUND_HALF_UP
-                        )
-                    ),
-                    vid,
-                    label,
-                )
-                for _, vid, label in cands[: max(shortlist, 5)]
-            )[:5],
-            start=1,
-        ):
-            want.append((qid, vid, label, rank, -neg_cos))
-    assert got == sorted(want) and got
+    assert got == want and got
     # appended vectors actually serve through their frozen cells
     if probe_dim == 64:
         assert any(t[1] >= 400 for t in got)
 
 
-def test_ivf_matryoshka_guards_refuse_loudly(spark, tmp_path):
-    """The composed family's guard union, each with its distinct
-    message: unstamped root, wrong-kind artifact, empty build, ragged
-    delta, dup delta ids, torn cells/vecs (append AND probe), pinned
-    frame/path width mismatch, and static partition pruning in the
-    probed scan."""
-    from big_data_streaming_dashboard_spark.streaming.llm_ingest import (
-        _write_index_fingerprint,
-        append_ivf_matryoshka_index,
-        ivf_matryoshka_topk_batches,
-        stream_embeddings,
-        write_ivf_matryoshka_index,
-    )
-    from big_data_streaming_dashboard_spark.tables import load_table
-
-    embs = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    base = embs.filter(F.col("vec_id") < 300)
-    delta = embs.filter(F.col("vec_id") >= 300)
-
-    with pytest.raises(ValueError, match="empty embeddings"):
-        write_ivf_matryoshka_index(
-            embs.filter(F.col("vec_id") < 0), str(tmp_path / "e")
-        )
-    with pytest.raises(ValueError, match="out of range"):
-        write_ivf_matryoshka_index(base, str(tmp_path / "w"), probe_dim=0)
-    with pytest.raises(ValueError, match="unstamped"):
-        append_ivf_matryoshka_index(delta, str(tmp_path / "nowhere"))
-    other = str(tmp_path / "notmat")
-    _write_index_fingerprint(spark, other, {"kind": "ivf"})
-    with pytest.raises(ValueError, match="not a IVF-matryoshka"):
-        append_ivf_matryoshka_index(delta, other)
-
-    idx = str(tmp_path / "m")
-    write_ivf_matryoshka_index(base, idx, n_lists=4, probe_dim=8)
-    with pytest.raises(ValueError, match="already present"):
-        append_ivf_matryoshka_index(embs.filter(F.col("vec_id") < 10), idx)
-    ragged = spark.createDataFrame(
-        [(9001, 1, [0.25] * 32)],
-        "vec_id long, label int, embedding array<double>",
-    )
-    with pytest.raises(ValueError, match="dimensional"):
-        append_ivf_matryoshka_index(ragged, idx)
-
-    qdir = str(tmp_path / "q")
-    embs.filter(F.col("vec_id") < 2).write.parquet(qdir)
-    # pinned probe at a mismatched width refuses (frames from another
-    # artifact than the pin)
-    idx16 = str(tmp_path / "m16")
-    write_ivf_matryoshka_index(base, idx16, n_lists=4, probe_dim=16)
-    with pytest.raises(ValueError, match="different artifact"):
-        ivf_matryoshka_topk_batches(
-            stream_embeddings(spark, qdir),
-            spark.read.parquet(idx + "/cells"),
-            spark.read.parquet(idx + "/vecs"),
-            spark.read.parquet(idx + "/centroids"),
-            str(tmp_path / "o1"),
-            index_path=idx16,
-        )
-
-    # tear it: a cells row with no vecs twin
-    spark.read.parquet(idx + "/cells").limit(1).withColumn(
-        "vec_id", F.lit(77777).cast("long")
-    ).write.mode("append").partitionBy("cluster").parquet(idx + "/cells")
-    with pytest.raises(ValueError, match="torn artifact"):
-        append_ivf_matryoshka_index(delta, idx)
-    with pytest.raises(ValueError, match="torn artifact"):
-        ivf_matryoshka_topk_batches(
-            stream_embeddings(spark, qdir),
-            spark.read.parquet(idx + "/cells"),
-            spark.read.parquet(idx + "/vecs"),
-            spark.read.parquet(idx + "/centroids"),
-            str(tmp_path / "o2"),
-        )
-
-
 def test_streaming_ivfmat_randomized_corpora_parity(spark):
     """IVF x matryoshka probe/prefix/tie arithmetic vs the pure-Python
-    cascade on RANDOMIZED corpora (the `_ivfpq_ranked_plan` /
-    `_bm25_postings` precedent): three seeded corpora far outside the
-    fixture distribution -- tiny dim, a non-divisor prefix width,
-    cluster-starved k-means -- exercised I/O-free through the
-    extracted `_ivfmat_ranked_plan`, so tie-rule or probe-rule
-    regressions can't hide behind the fixture's geometry."""
+    cascade on RANDOMIZED corpora (the `_bm25_postings` precedent):
+    three seeded corpora far outside the fixture distribution -- tiny
+    dim, a non-divisor prefix width, cluster-starved k-means --
+    exercised I/O-free through the shared `_dense_ranked_plan`, so
+    tie-rule or probe-rule regressions can't hide behind the fixture's
+    geometry."""
     import random
-    from decimal import ROUND_HALF_UP, Decimal
 
     from big_data_streaming_dashboard_spark.llmdata.similarity import (
         _dvec,
@@ -6347,7 +5727,8 @@ def test_streaming_ivfmat_randomized_corpora_parity(spark):
         kmeans_assign,
     )
     from big_data_streaming_dashboard_spark.streaming.llm_ingest import (
-        _ivfmat_ranked_plan,
+        _dense_ranked_plan,
+        _DenseIndex,
     )
 
     for seed in (5, 23, 71):
@@ -6380,67 +5761,32 @@ def test_streaming_ivfmat_randomized_corpora_parity(spark):
             )
         ).persist()
         batch = embs.filter(F.col("vec_id") < 5)
-        ranked, done = _ivfmat_ranked_plan(
-            batch, cells, vecs, cents, probe_dim, k, n_probe, shortlist, True
+        ranked, done = _dense_ranked_plan(
+            _DenseIndex("ivfmat", cells, vecs, cents, probe_dim=probe_dim),
+            batch, k, n_probe, shortlist, True,
         )
         got = sorted(map(tuple, ranked.collect()))
         done()
 
-        cell_rows = cells.collect()
-        vec_map = {r["vec_id"]: list(r["v"]) for r in vecs.collect()}
-        cent_rows = sorted(
-            (r["cluster"], list(r["centroid"])) for r in cents.collect()
-        )
+        st = {
+            "kind": "ivfmat",
+            "rows": cells.collect(),
+            "vecs": {r["vec_id"]: list(r["v"]) for r in vecs.collect()},
+            "cents": sorted(
+                (r["cluster"], list(r["centroid"])) for r in cents.collect()
+            ),
+            "probe_dim": probe_dim,
+        }
         for df in (cells, vecs, cents):
             df.unpersist()
-        want = []
-        for qid in range(5):
-            qraw = [float(x) for x in rows[qid][2]]
-            ranked_cells = sorted(
-                (
-                    sum((x - y) * (x - y) for x, y in zip(qraw, c)),
-                    cl,
-                )
-                for cl, c in cent_rows
-            )
-            probed = {cl for _d2, cl in ranked_cells[:n_probe]}
-            uq = vec_map[qid]
-            qp = uq[:probe_dim]
-            qpn = sum(a * a for a in qp) ** 0.5
-            cands = []
-            for r in cell_rows:
-                if r["cluster"] not in probed or r["vec_id"] == qid:
-                    continue
-                vp = list(r["vp"])
-                c = sum(a * b for a, b in zip(qp, vp)) / (
-                    qpn * sum(a * a for a in vp) ** 0.5
-                )
-                cands.append((-c, r["vec_id"], r["label"]))
-            cands.sort()
-            for rank, (neg_cos, vid, label) in enumerate(
-                sorted(
-                    (
-                        -float(
-                            Decimal(
-                                repr(
-                                    sum(
-                                        a * b
-                                        for a, b in zip(uq, vec_map[vid])
-                                    )
-                                )
-                            ).quantize(
-                                Decimal("0.000001"), rounding=ROUND_HALF_UP
-                            )
-                        ),
-                        vid,
-                        label,
-                    )
-                    for _, vid, label in cands[: max(shortlist, k)]
-                )[:k],
-                start=1,
-            ):
-                want.append((qid, vid, label, rank, -neg_cos))
-        assert got == sorted(want) and got, seed
+        want = _py_dense_topk(
+            st,
+            {i: [float(x) for x in rows[i][2]] for i in range(5)},
+            k=k,
+            n_probe=n_probe,
+            shortlist=shortlist,
+        )
+        assert got == want and got, seed
 
 
 def test_hybrid_rrf_fixed_query_serves_from_ann_index(spark, tmp_path):
@@ -6452,7 +5798,7 @@ def test_hybrid_rrf_fixed_query_serves_from_ann_index(spark, tmp_path):
     from big_data_streaming_dashboard_spark.streaming.llm_ingest import (
         hybrid_rrf_batches,
         stream_embeddings,
-        write_ivfpq_index,
+        write_dense_index,
     )
     from big_data_streaming_dashboard_spark.tables import load_table
 
@@ -6460,8 +5806,8 @@ def test_hybrid_rrf_fixed_query_serves_from_ann_index(spark, tmp_path):
     docs = load_table(spark, sf, "documents")
     embs = load_table(spark, sf, "embeddings")
     n_corpus = embs.count()
-    pidx = write_ivfpq_index(
-        embs, str(tmp_path / "ivfpq"), n_lists=4, n_subspaces=8
+    pidx = write_dense_index(
+        embs, str(tmp_path / "ivfpq"), "ivfpq", n_lists=4, n_subspaces=8
     )
     index_vecs = spark.read.parquet(pidx + "/vecs").select(
         "vec_id", F.col("v").alias("vec")
@@ -6499,16 +5845,13 @@ def test_empty_centroids_refuse_at_probe_construction(spark, tmp_path):
     """r16 review: cells/vecs can pass the torn guard while a LOST
     centroids write leaves zero rows -- the IVF shortlist rule then
     divides by zero (or every query silently probes zero cells).
-    `_centroid_count` refuses at construction across the IVF family
-    and the dense retriever."""
+    `_centroid_count` refuses at construction across the IVF family,
+    through the sink and the RAG endpoints alike."""
     from big_data_streaming_dashboard_spark.streaming.llm_ingest import (
-        ivf_matryoshka_topk_batches,
-        ivf_topk_batches,
+        dense_topk_batches,
         knn_classify_batches,
         stream_embeddings,
-        write_ivf_index,
-        write_ivf_matryoshka_index,
-        write_ivfpq_index,
+        write_dense_index,
     )
     from big_data_streaming_dashboard_spark.tables import load_table
 
@@ -6522,7 +5865,7 @@ def test_empty_centroids_refuse_at_probe_construction(spark, tmp_path):
         spark.createDataFrame([], sch).write.mode("overwrite").parquet(subdir)
 
     pidx = str(tmp_path / "ivfpq")
-    write_ivfpq_index(base, pidx, n_lists=4, n_subspaces=4)
+    write_dense_index(base, pidx, "ivfpq", n_lists=4, n_subspaces=4)
     _empty_out(pidx + "/centroids")
     with pytest.raises(ValueError, match="centroids artifact is empty"):
         knn_classify_batches(
@@ -6531,26 +5874,19 @@ def test_empty_centroids_refuse_at_probe_construction(spark, tmp_path):
         )
 
     midx = str(tmp_path / "ivfmat")
-    write_ivf_matryoshka_index(base, midx, n_lists=4, probe_dim=8)
+    write_dense_index(base, midx, "ivfmat", n_lists=4, probe_dim=8)
     _empty_out(midx + "/centroids")
     with pytest.raises(ValueError, match="centroids artifact is empty"):
-        ivf_matryoshka_topk_batches(
-            stream_embeddings(spark, qdir),
-            spark.read.parquet(midx + "/cells"),
-            spark.read.parquet(midx + "/vecs"),
-            spark.read.parquet(midx + "/centroids"),
-            str(tmp_path / "o2"),
+        dense_topk_batches(
+            stream_embeddings(spark, qdir), midx, str(tmp_path / "o2")
         )
 
     iidx = str(tmp_path / "ivf")
-    write_ivf_index(base, iidx, n_lists=4)
+    write_dense_index(base, iidx, "ivf", n_lists=4)
     _empty_out(iidx + "/centroids")
     with pytest.raises(ValueError, match="centroids artifact is empty"):
-        ivf_topk_batches(
-            stream_embeddings(spark, qdir),
-            spark.read.parquet(iidx + "/cells"),
-            spark.read.parquet(iidx + "/centroids"),
-            str(tmp_path / "o3"),
+        dense_topk_batches(
+            stream_embeddings(spark, qdir), iidx, str(tmp_path / "o3")
         )
 
 
@@ -6628,231 +5964,89 @@ def test_streaming_ivf_quant_matches_python_cascade(
 ):
     """IVF x quant -- the third multiplied budget pair (precision x
     cells). The streamed output equals a pure-Python recompute of the
-    composed cascade (centroid d2 ranking -> probed cells only ->
-    code-cosine shortlist over the STORED tinyint codes -> exact
-    full-width rerank with HALF_UP display rounding), at the
+    composed cascade (`_py_dense_topk`: centroid d2 ranking -> probed
+    cells only -> code-cosine shortlist over the STORED tinyint codes
+    -> exact full-width rerank with HALF_UP display rounding), at the
     near-lossless b=8 and the provably-lossy b=2 rungs. The delta
     fold is covered by the same recompute over an APPENDED artifact
     (the stored cluster and codes ARE the frozen-centroid assignment
     and the per-row quant facts)."""
-    from decimal import ROUND_HALF_UP, Decimal
-
     from big_data_streaming_dashboard_spark.streaming.llm_ingest import (
-        append_ivf_quant_index,
-        ivf_quant_topk_batches,
+        append_dense_index,
+        dense_topk_batches,
         stream_embeddings,
-        write_ivf_quant_index,
+        write_dense_index,
     )
     from big_data_streaming_dashboard_spark.tables import load_table
 
     embs = load_table(spark, "/root/testdata/sf0.001", "embeddings")
     idx = str(tmp_path / "ivfquant")
-    write_ivf_quant_index(
-        embs.filter(F.col("vec_id") < 400), idx, n_lists=4, bits=bits
+    write_dense_index(
+        embs.filter(F.col("vec_id") < 400), idx, "ivfquant",
+        n_lists=4, bits=bits,
     )
-    append_ivf_quant_index(embs.filter(F.col("vec_id") >= 400), idx)
-
-    cells = spark.read.parquet(idx + "/cells")
-    vecs = spark.read.parquet(idx + "/vecs")
-    cents = spark.read.parquet(idx + "/centroids")
+    append_dense_index(embs.filter(F.col("vec_id") >= 400), idx)
 
     qdir = str(tmp_path / "queries")
     embs.filter(F.col("vec_id") < 4).repartition(2).write.parquet(qdir)
     out = str(tmp_path / "topk")
-    q = ivf_quant_topk_batches(
+    q = dense_topk_batches(
         stream_embeddings(spark, qdir),
-        cells,
-        vecs,
-        cents,
+        idx,
         out,
         k=5,
         n_probe=n_probe,
         checkpoint=str(tmp_path / "ckpt"),
-        index_path=idx,
     )
     q.awaitTermination(180)
     got = sorted(map(tuple, spark.read.parquet(out).collect()))
 
-    cell_rows = cells.collect()
-    vec_map = {r["vec_id"]: list(r["v"]) for r in vecs.collect()}
-    raw_map = {
+    st = _py_stored_index(spark, idx)
+    raw_q = {
         r["vec_id"]: [float(x) for x in r["embedding"]]
         for r in embs.filter(F.col("vec_id") < 4).collect()
     }
-    cent_rows = sorted(
-        (r["cluster"], list(r["centroid"])) for r in cents.collect()
+    n_corpus = len(st["vecs"])
+    want = _py_dense_topk(
+        st, raw_q, k=5, n_probe=n_probe,
+        shortlist=max(8 * 5, n_corpus * n_probe // (8 * 4)),
     )
-    n_corpus = len(vec_map)
-    shortlist = max(8 * 5, n_corpus * n_probe // (8 * 4))
-    want = []
-    for qid in range(4):
-        qraw = raw_map[qid]
-        ranked_cells = sorted(
-            (
-                sum((x - y) * (x - y) for x, y in zip(qraw, c)),
-                cl,
-            )
-            for cl, c in cent_rows
-        )
-        probed = {cl for _d2, cl in ranked_cells[:n_probe]}
-        uq = vec_map[qid]
-        uqn = sum(a * a for a in uq) ** 0.5
-        cands = []
-        for r in cell_rows:
-            if r["cluster"] not in probed or r["vec_id"] == qid:
-                continue
-            qv = [float(x) for x in r["q"]]
-            c = sum(a * b for a, b in zip(uq, qv)) / (
-                uqn * sum(a * a for a in qv) ** 0.5
-            )
-            cands.append((-c, r["vec_id"], r["label"]))
-        cands.sort()
-        for rank, (neg_cos, vid, label) in enumerate(
-            sorted(
-                (
-                    -float(
-                        Decimal(
-                            repr(sum(a * b for a, b in zip(uq, vec_map[vid])))
-                        ).quantize(
-                            Decimal("0.000001"), rounding=ROUND_HALF_UP
-                        )
-                    ),
-                    vid,
-                    label,
-                )
-                for _, vid, label in cands[: max(shortlist, 5)]
-            )[:5],
-            start=1,
-        ):
-            want.append((qid, vid, label, rank, -neg_cos))
-    assert got == sorted(want) and got
+    assert got == want and got
     if bits == 2:
         # appended vectors actually serve through their frozen cells
         assert any(t[1] >= 400 for t in got)
 
 
-def test_ivf_quant_guards_and_retriever_dispatch(spark, tmp_path):
-    """IVF x quant guard union (bits range, wrong kind, empty build,
-    ragged/dup delta, torn cells/vecs) + the dense-retriever dispatch:
-    at n_probe = n_lists and shortlist = corpus the exact re-rank
-    sees every candidate, so the knn endpoint served from the
-    ivfquant root equals the brute form row-for-row REGARDLESS of the
-    lossy coarse order (the quant collapse argument)."""
-    from big_data_streaming_dashboard_spark.streaming.llm_ingest import (
-        _write_index_fingerprint,
-        append_ivf_quant_index,
-        knn_classify_batches,
-        stream_embeddings,
-        write_ann_index,
-        write_ivf_quant_index,
-    )
-    from big_data_streaming_dashboard_spark.tables import load_table
-
-    embs = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    base = embs.filter(F.col("vec_id") < 300)
-    delta = embs.filter(F.col("vec_id") >= 300)
-    n_corpus = embs.count()
-
-    with pytest.raises(ValueError, match="out of range"):
-        write_ivf_quant_index(base, str(tmp_path / "b"), bits=9)
-    with pytest.raises(ValueError, match="empty embeddings"):
-        write_ivf_quant_index(
-            embs.filter(F.col("vec_id") < 0), str(tmp_path / "e")
-        )
-    other = str(tmp_path / "notq")
-    _write_index_fingerprint(spark, other, {"kind": "quant", "bits": 8})
-    with pytest.raises(ValueError, match="not a IVF-quant"):
-        append_ivf_quant_index(delta, other)
-
-    idx = str(tmp_path / "q")
-    write_ivf_quant_index(embs, idx, n_lists=4)
-    with pytest.raises(ValueError, match="already present"):
-        append_ivf_quant_index(embs.filter(F.col("vec_id") < 10), idx)
-    ragged = spark.createDataFrame(
-        [(9001, 1, [0.25] * 32)],
-        "vec_id long, label int, embedding array<double>",
-    )
-    with pytest.raises(ValueError, match="dimensional"):
-        append_ivf_quant_index(ragged, idx)
-
-    # full-budget collapse through the kind-dispatched retriever
-    qdir = str(tmp_path / "knnq")
-    embs.filter(F.col("vec_id") < 5).write.parquet(qdir)
-    aidx = write_ann_index(embs, str(tmp_path / "ann"))
-    out_b = str(tmp_path / "knn_brute")
-    knn_classify_batches(
-        stream_embeddings(spark, qdir),
-        spark.read.parquet(aidx + "/vecs"),
-        out_b,
-        k=5,
-    ).awaitTermination(120)
-    out_a = str(tmp_path / "knn_ivfquant")
-    knn_classify_batches(
-        stream_embeddings(spark, qdir), None, out_a, k=5,
-        ann_index_path=idx, n_probe=4, ann_shortlist=n_corpus,
-    ).awaitTermination(120)
-    kb = sorted(map(tuple, spark.read.parquet(out_b).collect()))
-    ka = sorted(map(tuple, spark.read.parquet(out_a).collect()))
-    assert ka == kb and ka
-
-    # tear it: a cells row with no vecs twin -- append AND probe refuse
-    from big_data_streaming_dashboard_spark.streaming.llm_ingest import (
-        ivf_quant_topk_batches,
-    )
-
-    spark.read.parquet(idx + "/cells").limit(1).withColumn(
-        "vec_id", F.lit(77777).cast("long")
-    ).write.mode("append").partitionBy("cluster").parquet(idx + "/cells")
-    with pytest.raises(ValueError, match="torn artifact"):
-        append_ivf_quant_index(delta, idx)
-    with pytest.raises(ValueError, match="torn artifact"):
-        ivf_quant_topk_batches(
-            stream_embeddings(spark, qdir),
-            spark.read.parquet(idx + "/cells"),
-            spark.read.parquet(idx + "/vecs"),
-            spark.read.parquet(idx + "/centroids"),
-            str(tmp_path / "o"),
-        )
-
-
 def test_sink_pins_verify_stamped_kind(spark, tmp_path):
-    """r16 review: a nonce pin names a root, but the nonce alone
-    cannot tell WHOSE root -- a pin on some other artifact passes
-    every per-batch check while the frames' true root rotates
-    unpinned. The kind-stamped sinks now verify the pinned root IS
-    their kind at construction."""
+    """r16 review: a nonce pin names a root, and the dense sink reads
+    its kind from that root's stamp -- so a pin can no longer name a
+    different root than the frames (the sink has no frames), and what
+    remains to verify is the root itself: a root stamped with a
+    non-dense kind and an unstamped path both refuse at construction,
+    with distinct messages."""
     from big_data_streaming_dashboard_spark.streaming.llm_ingest import (
-        pq_topk_batches,
-        quant_topk_batches,
+        dense_topk_batches,
         stream_embeddings,
-        write_ivf_quant_index,
-        write_pq_index,
+        write_bm25_index,
     )
     from big_data_streaming_dashboard_spark.tables import load_table
 
     embs = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    base = embs.filter(F.col("vec_id") < 200)
-    pqidx = write_pq_index(base, str(tmp_path / "pq"))
-    qidx = write_ivf_quant_index(base, str(tmp_path / "ivfquant"), n_lists=4)
+    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
+    bidx = write_bm25_index(
+        docs.filter(F.col("doc_id") < 100), str(tmp_path / "bm25")
+    )
     qdir = str(tmp_path / "q")
     embs.filter(F.col("vec_id") < 2).write.parquet(qdir)
 
-    with pytest.raises(ValueError, match="not a PQ index"):
-        pq_topk_batches(
-            stream_embeddings(spark, qdir),
-            spark.read.parquet(pqidx + "/codes"),
-            spark.read.parquet(pqidx + "/vecs"),
-            spark.read.parquet(pqidx + "/codebooks"),
-            str(tmp_path / "o1"),
-            index_path=qidx,
+    with pytest.raises(ValueError, match="not a servable dense index"):
+        dense_topk_batches(
+            stream_embeddings(spark, qdir), bidx, str(tmp_path / "o1")
         )
-    with pytest.raises(ValueError, match="not a quant index"):
-        quant_topk_batches(
-            stream_embeddings(spark, qdir),
-            spark.read.parquet(qidx + "/cells"),
-            spark.read.parquet(qidx + "/vecs"),
+    with pytest.raises(ValueError, match="unstamped"):
+        dense_topk_batches(
+            stream_embeddings(spark, qdir), str(tmp_path / "nowhere"),
             str(tmp_path / "o2"),
-            index_path=pqidx,
         )
 
 
@@ -7006,41 +6200,37 @@ def test_pre_kind_stamp_roots_stay_serveable_and_arm_on_append(
     assert ann_probe_stream(q, bands_df, vecs_df, index_path=idx) is not None
 
 
-@pytest.mark.parametrize("kind", ["pq", "ivf", "matryoshka", "quant"])
+@pytest.mark.parametrize("kind", ["pq", "ivf", "matryoshka", "quant", "ivfquant"])
 def test_rag_dense_retriever_serves_plain_kinds(spark, tmp_path, kind):
     """r16 verdict item 3: `_ann_dense_retriever` dispatches the PLAIN
     servable kinds too (pq / ivf / matryoshka / quant) -- a user
     holding a plain root no longer has to rebuild it as a composed
-    index to serve the RAG endpoints' dense constituent. Each kind
-    rides the SAME extracted per-batch plan its own probe sink serves
-    (`_pq_ranked_plan` etc.), and at full budget (shortlist = corpus
-    for the shortlist kinds, n_probe = n_lists for plain ivf) the
+    index to serve the RAG endpoints' dense constituent -- and the
+    ivfquant composition (ivfpq and ivfmat are pinned through
+    `test_rag_endpoints_serve_from_ivfpq_index`). Each kind rides the
+    SAME per-batch plan `dense_topk_batches` serves
+    (`_dense_ranked_plan`), and at full budget (shortlist = corpus for
+    the shortlist kinds, n_probe = n_lists for the IVF kinds) the
     ranking collapses to exact brute-force: the knn vote equals the
-    brute-dense form row-for-row."""
+    brute-dense form row-for-row, regardless of a lossy coarse
+    order."""
     from big_data_streaming_dashboard_spark.llmdata.similarity import _dvec
     from big_data_streaming_dashboard_spark.streaming.llm_ingest import (
         knn_classify_batches,
         stream_embeddings,
-        write_ivf_index,
-        write_matryoshka_index,
-        write_pq_index,
-        write_quant_index,
+        write_dense_index,
     )
     from big_data_streaming_dashboard_spark.tables import load_table
 
     embs = load_table(spark, "/root/testdata/sf0.001", "embeddings")
     n_corpus = embs.count()
     idx = str(tmp_path / kind)
-    if kind == "pq":
-        write_pq_index(embs, idx, n_subspaces=8)
-    elif kind == "ivf":
-        write_ivf_index(embs, idx, n_lists=4)
-    elif kind == "matryoshka":
-        # a REAL prefix budget: full-shortlist re-rank makes the vote
-        # exact regardless of the coarse width
-        write_matryoshka_index(embs, idx, probe_dim=16)
-    else:
-        write_quant_index(embs, idx)
+    # matryoshka at a REAL prefix budget: the full-shortlist re-rank
+    # makes the vote exact regardless of the coarse width
+    knobs = {"pq": {"n_subspaces": 8}, "matryoshka": {"probe_dim": 16}}.get(
+        kind, {"n_lists": 4} if kind.startswith("ivf") else {}
+    )
+    write_dense_index(embs, idx, kind, **knobs)
 
     # brute corpus frame (cosine is scale-invariant, so the raw
     # embeddings serve as the float side)
