@@ -558,14 +558,15 @@ def _containment_ledger(spark, sf_dir: str, full_s: float) -> dict:
     subtraction isolates the verify tree), and the candidate/output
     pair counts that make the scaling shape self-evident. Counts come
     from one CollectMetrics-instrumented execution (no extra jobs)."""
+    from big_data_streaming_dashboard_spark import physical
     from big_data_streaming_dashboard_spark.llmdata import dedup as dd
 
     docs = dd.containment_decorate(
         spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     )
-    n = dd.corpus_count(docs)
+    n = physical.corpus_count(docs)
     cand = dd._prefix_candidates(
-        docs, 0.8, dd.DEFAULT_MAX_BUCKET, n, dd.scale_hint_merge, symmetric=False
+        docs, 0.8, dd.DEFAULT_MAX_BUCKET, n, physical.scale_hint_merge, symmetric=False
     )
     cand_s = float("inf")
     for _ in range(2):  # min-of-2: the sf0.1 number beside it is too

@@ -24,7 +24,8 @@ from pyspark.sql import functions as F
 
 from pyspark.sql.window import Window
 
-from .dedup import neardup_pairs
+from ..physical import corpus_count, plan_cached, scale_hint
+from .dedup import neardup_clusters, neardup_pairs
 from .text import predicted_lang_column, quality_columns, subword_stats, tokens
 
 # Drop reasons that OUTRANK gopher_fail in the full precedence ladder
@@ -583,9 +584,7 @@ def importance_weights(docs: DataFrame, target_source: str = "src1") -> DataFram
     # canonicalization (the r3 ReusedExchange gotcha), so it is
     # persisted via the index-cache keying -- ~docs x 256 narrow rows,
     # bounded
-    from .dedup import _plan_cached
-
-    per_bucket = _plan_cached(
+    per_bucket = plan_cached(
         docs,
         f"dsir_bucket:{target_source}",
         lambda: feats.groupBy("doc_id", "source", "fkey")
@@ -721,7 +720,6 @@ def leakage_safe_split(docs: DataFrame, salt: str = SPLIT_SALT) -> DataFrame:
     plans/llm_sql.leakage_safe_split_sql (same recursive-CTE closure
     as CLUSTERS_SQL, same md5 thresholds).
     """
-    from .dedup import corpus_count, neardup_clusters, scale_hint
     from .text import tokens as _tokens
 
     n = corpus_count(docs)

@@ -18,11 +18,22 @@ explosion inside one bucket is bounded by the band collision rate.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..physical import (
+    at_scale,
+    attach,
+    broadcasts,
+    corpus_count,
+    ids_packable,
+    pack_pair,
+    pair_agg_partitions,
+    plan_cached,
+    scale_hint,
+    scale_hint_merge,
+    unpack_pair,
+)
 from .text import tokens
 
 DEFAULT_K = 8  # minhash signature length
@@ -104,219 +115,16 @@ def minhash_signature(docs: DataFrame, k: int = DEFAULT_K) -> DataFrame:
     )
     if docs.isStreaming:
         return sig
-    return _plan_cached(docs, f"minhash_sig:{k}", lambda: sig.persist())
-
-
-# Derived-index cache: the banded table and the shingle table are the
-# OFFLINE ARTIFACTS the near-dup family probes (build-once-probe-many,
-# like any index; the streaming probe already consumes the band index
-# via write_neardup_index). Keyed by (applicationId, semanticHash of
-# the docs plan, tag): identical logical input -> identical artifact,
-# so repeated probes (pairs, oversized_buckets, clusters, repeated
-# bench reps) reuse ONE persisted copy instead of re-persisting each
-# call.
-_BANDED_CACHE: dict[tuple, DataFrame] = {}
-
-
-def _holder_frames(obj):
-    """Yield every DataFrame inside a cached holder — the holder may be
-    the frame itself or a (nested) list/tuple wrapper."""
-    if isinstance(obj, DataFrame):
-        yield obj
-    elif isinstance(obj, (list, tuple)):
-        for item in obj:
-            yield from _holder_frames(item)
-
-
-def _plan_cached(docs: DataFrame, tag: str, build):
-    """Keyed on (app, plan semanticHash, INPUT-FILE fingerprint, tag).
-    The fingerprint term (r8; same fix corpus_count got from the r5
-    advice) matters because an overwrite at the same path keeps the
-    same analyzed plan: without it, a rewritten corpus would keep
-    serving the PREVIOUS corpus's persisted index/plan handle.
-    Holders are usually DataFrames (or list/tuple wrappers of them --
-    see _holder_frames), but plain derived values ride the same keying
-    too (e.g. the 'shingle_int_bytes' int): eviction must only ever
-    unpersist the frames _holder_frames finds, never assume the
-    holder's type."""
-    app_id = docs.sparkSession.sparkContext.applicationId
-    try:
-        sem = docs._jdf.queryExecution().analyzed().semanticHash()
-        fp = _input_fingerprint(docs)
-    except Exception:  # non-classic backends: fall back to no caching
-        return build()
-    key = (app_id, sem, fp, tag)
-    hit = _BANDED_CACHE.get(key)
-    if hit is None:
-        for stale in [
-            sk
-            for sk in _BANDED_CACHE
-            if sk[0] != app_id or (sk[1] == sem and sk[3] == tag)
-        ]:
-            old = _BANDED_CACHE.pop(stale)
-            if stale[0] == app_id:
-                # superseded by a rewrite: release the stale persist
-                # (no-op for plain plan handles). Holders may be
-                # list/tuple wrappers (e.g. text._bpe_state) whose
-                # persisted frames would otherwise leak on eviction.
-                for frame in _holder_frames(old):
-                    frame.unpersist()
-        hit = _BANDED_CACHE[key] = build()
-    return hit
-
-
-# Size-conditional join hints (r4 verdict item 3). The SHUFFLE_HASH
-# hints exist because the corpus-sized sides of the near-dup joins
-# (shingle arrays, band tables, label tables) carry broadcast-SMALL
-# size ESTIMATES -- Catalyst auto-broadcasts them and the driver OOMs
-# already at a 50k-doc corpus (found by the 10x fixture). But below
-# that scale the auto-planned broadcast is both safe and measurably
-# faster (sf0.1 doc_neardup_pairs: 0.57 s auto vs 0.87 s hinted), so
-# the hint is gated on a one-job cached count of the corpus: small
-# corpus -> let Catalyst plan; big corpus -> force shuffled hash. At
-# 100 TB every corpus is far past the threshold, so the scale path is
-# always the hinted one (pinned by tests/test_scale10x.py).
-BROADCAST_SAFE_ROWS = 10_000
-
-_COUNT_CACHE: dict[tuple, int] = {}
-
-# past this many leaf files, skip per-file stat in the fingerprint:
-# the listing itself already changes on any rewrite (part file names
-# carry a fresh job UUID), and stat'ing 100k files per probe would
-# cost more than the count job the cache avoids
-_FINGERPRINT_STAT_CAP = 256
-
-
-def _input_fingerprint(df: DataFrame) -> tuple:
-    """Identity of the FILES behind a plan, not just the plan: the
-    sorted leaf-file list plus (mtime_ns, size) for local files. The
-    semanticHash alone goes stale when data under the same logical
-    plan is rewritten or grows in place (single-file parquet keeps its
-    name on overwrite) -- a stale small count would let Catalyst
-    auto-broadcast a now-large side, reintroducing the driver-OOM the
-    size gate exists to prevent (r5 advice)."""
-    files = sorted(df.inputFiles())
-    if len(files) > _FINGERPRINT_STAT_CAP:
-        return (len(files), hash(tuple(files)))
-    stamped = []
-    for f in files:
-        path = f[7:] if f.startswith("file://") else f
-        try:
-            st = os.stat(path)
-            stamped.append((f, st.st_mtime_ns, st.st_size))
-        except OSError:
-            stamped.append((f, 0, 0))  # remote FS: name identity only
-    return (len(files), hash(tuple(stamped)))
-
-
-def corpus_count(df: DataFrame) -> int:
-    """Cached row count of a corpus-shaped input: one count job per
-    (app, logical-plan, input-file fingerprint). The fingerprint keys
-    out in-place rewrites within a session (fixture swaps, appended
-    partitions) that the semanticHash cannot see."""
-    app_id = df.sparkSession.sparkContext.applicationId
-    try:
-        sem = df._jdf.queryExecution().analyzed().semanticHash()
-        fp = _input_fingerprint(df)
-    except Exception:
-        return df.count()
-    key = (app_id, sem, fp)
-    hit = _COUNT_CACHE.get(key)
-    if hit is None:
-        for stale in [sk for sk in _COUNT_CACHE if sk[0] != app_id or sk[:2] == key[:2]]:
-            del _COUNT_CACHE[stale]
-        hit = _COUNT_CACHE[key] = df.count()
-    return hit
-
-
-def scale_hint(df: DataFrame, n_rows: int) -> DataFrame:
-    """SHUFFLE_HASH above the broadcast-safety threshold, untouched
-    (Catalyst-planned) below it."""
-    return df.hint("shuffle_hash") if n_rows > BROADCAST_SAFE_ROWS else df
-
-
-# r18 optimization round (guide section 5 spill remedies: "more
-# partitions -- smaller per-task state"; section 2 scale-adaptive
-# partitioning): the jaccard directed-pair aggregate's group count
-# grows LINEARLY with the corpus (~1.4k directed candidate pairs per
-# doc on the 10x fixture), so a fixed session layout (32 partitions
-# locally) concentrates ~2.2M groups per task at 10x and the
-# complete-mode aggregate spilled 8.12 GB; the throwaway seed-96
-# experiment measured the spill ~linear in 1/partitions (8.12 ->
-# 4.31 GB) but a GLOBAL seed raise ballooned containment's
-# array-carrying exchange +116%, so the raise is applied ONLY to this
-# pair-keyed exchange, derived from the corpus count: one partition
-# per _PAIR_DOCS_PER_PARTITION docs, floored at the session default.
-# Below the broadcast-safety gate (every sf<=0.1 fixture) the layout
-# is the session default, so small-SF plans are bit-identical to the
-# pre-r18 hash-matched ones. Calibration at 10x (50k docs -> 250
-# partitions) in OPTIMIZATION_r18.md. The cap bounds the derived
-# count at the billion-doc regime, where an unclamped linear formula
-# would hand the driver millions of reduce tasks (scheduler/MapStatus
-# pressure, guide section 2.2) -- past ~6.5M docs per-task group
-# state grows again and a deployment sizes the cap with its cluster.
-_PAIR_DOCS_PER_PARTITION = 200
-_PAIR_AGG_MAX_PARTITIONS = 32_768
-
-
-def _pair_agg_partitions(spark, n_rows: int) -> int:
-    try:
-        floor = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):  # e.g. "auto" on managed platforms
-        floor = 200
-    return max(
-        floor,
-        min(_PAIR_AGG_MAX_PARTITIONS, -(-n_rows // _PAIR_DOCS_PER_PARTITION)),
-    )
-
-
-def scale_hint_merge(df: DataFrame, n_rows: int) -> DataFrame:
-    """MERGE (sort-merge) above the broadcast-safety threshold: for
-    joins whose PROBE side is explosion-prone (candidate-pair x
-    postings verifies), SMJ is the memory-safe shape -- both sides
-    sort-spill to disk, unlike a shuffled-hash build map that must fit
-    per task (a 20x-replicated 10x corpus OOMed the hash build under
-    32 concurrent tasks on a small heap). Below the threshold Catalyst
-    plans freely."""
-    return df.hint("merge") if n_rows > BROADCAST_SAFE_ROWS else df
-
-
-# r18 optimization round (guide section 3.1 "broadcast the side that
-# fits" -- decided on MEASURED bytes, never Catalyst's array-blind
-# estimates): the exact-verify joins attach the int-shingle table to
-# the candidate pairs; past the broadcast-safety gate they were hinted
-# SHUFFLE_HASH/MERGE because the table's size ESTIMATE is wrong by
-# >10x (r5) -- but its TRUE broadcast size is knowable exactly (one
-# cached agg over the persisted table: 8 B per shingle + row
-# overhead; 68.3 MB at the 100k-doc 10x fixture). When that true size
-# fits the gate below, an EXPLICIT F.broadcast ships the table once
-# per executor and the wide candidate intermediate never crosses an
-# exchange at all -- measured at 10x on doc_containment_pairs: total
-# shuffle 1,817 -> 444 MB and the verify SMJ's 8.59 GB sort spill
-# (the fleet's last remaining spill site) -> ZERO. Past the gate the
-# memory-safe hinted shape stands unchanged (at 100 TB the corpus
-# shingle table is far over any broadcast cap). Local default 256 MB
-# serialized (~2-4x that built, vs a 16 GB driver and Spark's 8 GB
-# relation cap); env-tunable for deployments with bigger executors,
-# clamped under Spark's hard 8 GB broadcast-relation cap so a generous
-# env value can never force a broadcast the runtime must reject (the
-# hinted fallback is the right shape there).
-def _verify_broadcast_bytes() -> int:
-    # r19 ADVICE fix: a malformed env value ('256m') must degrade to
-    # the default, not ValueError out of every import of this module
-    try:
-        mb = int(os.environ.get("SPARK_GRAFT_VERIFY_BROADCAST_MB", "256"))
-    except (TypeError, ValueError):
-        mb = 256
-    return min(mb * 1024 * 1024, 7 * 1024 * 1024 * 1024)
+    return plan_cached(docs, f"minhash_sig:{k}", lambda: sig.persist())
 
 
 def _shingle_int_bytes(docs: DataFrame) -> int:
     """TRUE serialized size of the int-shingle verify table, measured
     (not estimated): 8 B per element + 32 B per-row overhead. One agg
     job per (app, corpus) -- cached like the index it measures, and
-    only ever run past the broadcast-safety gate (callers short-circuit
-    on n first), so small-SF sessions never pay it."""
+    only ever run past the broadcast-safety gate (`physical.broadcasts`
+    decides on the row count first), so small-SF sessions never pay
+    it."""
 
     def measure():
         row = (
@@ -329,83 +137,18 @@ def _shingle_int_bytes(docs: DataFrame) -> int:
         )
         return int(row["e"]) * 8 + int(row["r"]) * 32
 
-    return _plan_cached(docs, "shingle_int_bytes", measure)
+    return plan_cached(docs, "shingle_int_bytes", measure)
 
 
-def _verify_attach(shi_side: DataFrame, docs: DataFrame, n: int, fallback) -> DataFrame:
-    """The verify-join attachment policy (see _verify_broadcast_bytes):
-    explicit broadcast when the measured table fits, the caller's
-    memory-safe scale hint otherwise, Catalyst-planned below the gate
-    (small-SF plans bit-identical to the pre-r18 hash-matched ones)."""
-    if n <= BROADCAST_SAFE_ROWS:
-        return shi_side
-    if _verify_broadcasts(docs, n):
-        return F.broadcast(shi_side)
-    return fallback(shi_side, n)
-
-
-def _verify_broadcasts(docs: DataFrame, n: int) -> bool:
-    """The measured-bytes broadcast decision shared by `_verify_attach`
-    and the candidate-dedup key packing (which may re-key the candidate
-    exchange ONLY when the downstream verify join has no partitioning
-    requirement left, i.e. exactly when the verify broadcasts).
-    r19 ADVICE fix folded in: every verify query attaches the table
-    TWICE (sh_a and sh_b projections build two broadcast relations),
-    so the gate compares 2x the measured bytes against the cap -- the
-    env value is documented as the PER-QUERY broadcast budget, not
-    per-relation. At the r18 10x calibration point (68.3 MB measured,
-    136.6 MB doubled vs the 256 MB default) every fixture decision is
-    unchanged. Row count alone can prove the table over the cap
-    (>= 32 B/row by the formula) -- that short-circuit skips the
-    corpus-wide measurement job in exactly the regime where it would
-    be most expensive."""
-    budget = _verify_broadcast_bytes()
-    if 2 * n * 32 > budget:
-        return False
-    return 2 * _shingle_int_bytes(docs) <= budget
-
-
-def _pair_id_range(docs: DataFrame):
-    """(min, max) doc_id of the corpus -- the cached probe behind the
-    packed pair key (see `_prefix_candidates`). One agg job per
-    (app, corpus), measured over the persisted shingle table (already
-    materialized by every caller's verify stage) and cached like the
-    index it reads; only ever consulted past the broadcast-safety
-    gate, so small-SF sessions never pay it."""
-
-    def measure():
-        row = (
-            _shingle_table(docs)
-            .agg(F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi"))
-            .collect()[0]
-        )
-        return (row["lo"], row["hi"])
-
-    return _plan_cached(docs, "doc_id_range", measure)
-
-
-def _pair_key_packable(docs: DataFrame) -> bool:
-    """True when every doc_id provably fits unsigned 31 bits, so a
-    DIRECTED pair packs injectively into one long as
-    (probe_id << 32) | ix_id: integral column type (required for the
-    shift to be the identity map it claims) and measured id range
-    within [0, 2^31). Falls back -- to the two-column pair key --
-    on any other type or range, including an empty corpus."""
-    from pyspark.sql.types import (
-        ByteType,
-        IntegerType,
-        LongType,
-        ShortType,
+def _verify_side(docs: DataFrame, n: int, side: str, fallback) -> DataFrame:
+    """The int-shingle table as one side of an exact verify join,
+    (doc_<side>, sh_<side>), attached by the measured-bytes broadcast
+    policy (`physical.attach`) with ``fallback`` as the memory-safe
+    hint past the budget."""
+    sh = _shingle_ints(docs).select(
+        F.col("doc_id").alias(f"doc_{side}"), F.col("shi").alias(f"sh_{side}")
     )
-
-    try:
-        dt = docs.schema["doc_id"].dataType
-    except Exception:
-        return False
-    if not isinstance(dt, (ByteType, ShortType, IntegerType, LongType)):
-        return False
-    lo, hi = _pair_id_range(docs)
-    return lo is not None and lo >= 0 and hi < (1 << 31)
+    return attach(sh, n, lambda: _shingle_int_bytes(docs), fallback)
 
 
 def _doc_stats(docs: DataFrame, max_postings: int) -> DataFrame:
@@ -415,7 +158,7 @@ def _doc_stats(docs: DataFrame, max_postings: int) -> DataFrame:
     a distinct over the persisted capped index: the index is
     doc_id-hash-partitioned by its window build, so the distinct
     collapses in place with NO new exchange."""
-    return _plan_cached(
+    return plan_cached(
         docs,
         f"doc_stats:{max_postings}",
         lambda: _bounded_postings(docs, max_postings)
@@ -427,7 +170,7 @@ def _doc_stats(docs: DataFrame, max_postings: int) -> DataFrame:
 def _shingle_table(docs: DataFrame) -> DataFrame:
     """(doc_id, sh): the persisted distinct-shingle table every exact
     verify joins against."""
-    return _plan_cached(
+    return plan_cached(
         docs,
         "shingles",
         lambda: docs.select("doc_id", shingles(F.col("text")).alias("sh")).persist(),
@@ -453,7 +196,7 @@ def _shingle_ints(docs: DataFrame) -> DataFrame:
     shingle sets -- p < 1e-10 per full corpus verify (~1e9 pairwise
     comparisons / 2^64), below any oracle-mismatch concern. transform
     preserves array length, so size(shi) == size(sh) exactly."""
-    return _plan_cached(
+    return plan_cached(
         docs,
         "shingle_ints",
         lambda: _shingle_table(docs)
@@ -504,7 +247,7 @@ def _bounded_postings(docs: DataFrame, max_postings: int) -> DataFrame:
             .persist()
         )
 
-    return _plan_cached(docs, f"postings:{max_postings}", build)
+    return plan_cached(docs, f"postings:{max_postings}", build)
 
 
 def _prefix_candidates(
@@ -615,7 +358,7 @@ def _prefix_candidates(
     # gate `hint` (merge) pins the spillable plan exactly as before --
     # at cluster scale both sides are corpus-sized and neither is
     # broadcastable.
-    if n <= BROADCAST_SAFE_ROWS:
+    if not at_scale(n):
         probe = F.broadcast(probe)
     index = bounded.select(
         F.col("doc_id").alias("_ix_doc"),
@@ -674,7 +417,7 @@ def _prefix_candidates(
         # 33.65M distinct pairs the join otherwise needs. Net at 10x:
         # -245 MB and one exchange fewer (measured via
         # tests/plancap exchanges; before/after in plans/r18/).
-        # Under the broadcast verify (`_verify_attach`, r18 third
+        # Under the broadcast verify (`physical.attach`, r18 third
         # pass) the join-sharing half of this rationale is moot --
         # but doc_b stays the right key anyway: the distinct still
         # needs ONE clustering exchange, and complete-mode by doc_b
@@ -693,30 +436,17 @@ def _prefix_candidates(
         # the SMJ's partitioning requirement -- packing there would
         # ADD an exchange, so the r18 shape stands.
         if (
-            n > BROADCAST_SAFE_ROWS
-            and _pair_key_packable(docs)
-            and _verify_broadcasts(docs, n)
+            at_scale(n)
+            and ids_packable(docs, _shingle_table(docs), "doc_id")
+            and broadcasts(n, lambda: _shingle_int_bytes(docs))[0]
         ):
             id_type = joined.schema["doc_id"].dataType.simpleString()
-            upk = (
-                F.shiftleft(
-                    F.least("doc_id", "_ix_doc").cast("long"), 32
-                )
-                .bitwiseOR(F.greatest("doc_id", "_ix_doc").cast("long"))
-                .alias("_pk")
-            )
+            upk = pack_pair(F.least("doc_id", "_ix_doc"), F.greatest("doc_id", "_ix_doc"))
+            doc_a, doc_b = unpack_pair(F.col("_pk"), id_type)
             return (
-                kept.select(upk)
+                kept.select(upk.alias("_pk"))
                 .distinct()
-                .select(
-                    F.shiftright(F.col("_pk"), 32)
-                    .cast(id_type)
-                    .alias("doc_a"),
-                    F.col("_pk")
-                    .bitwiseAND(F.lit(4294967295))
-                    .cast(id_type)
-                    .alias("doc_b"),
-                )
+                .select(doc_a.alias("doc_a"), doc_b.alias("doc_b"))
             )
         return (
             kept.select(
@@ -782,7 +512,7 @@ def _prefix_candidates(
     # round): the remaining 8.12 GB reduce-side spill was per-task
     # group-state pressure (69M groups / 32 partitions); the explicit
     # corpus-derived partition count below zeroes it entirely.
-    if n > BROADCAST_SAFE_ROWS and _pair_key_packable(docs):
+    if at_scale(n) and ids_packable(docs, _shingle_table(docs), "doc_id"):
         # r19 (r18 verdict item 3; guide 2.3 "narrower types"): this
         # exchange is the fleet's largest (1,713 MB at 10x, ~96% of
         # the query's footprint) and ships (doc_id, _ix_doc, _thr,
@@ -796,28 +526,24 @@ def _prefix_candidates(
         # _ix_doc has no bits above 30, so the OR is addition), so
         # groupBy(_pk) forms exactly the groups groupBy(doc_id,
         # _ix_doc) formed; _thr/_cmt and the count filter are
-        # byte-identical expressions; unpacking is the exact inverse
-        # (shiftright 32 / mask 2^32-1 on non-negative halves), cast
-        # back to the source id type so the output schema is
+        # byte-identical expressions; unpacking is the exact inverse,
+        # cast back to the source id type so the output schema is
         # unchanged. Below the gate (every sf<=0.1 fixture) and for
         # non-packable corpora the two-column form stands
         # bit-identical. Measured at 10x: see OPTIMIZATION_r19.md.
         id_type = joined.schema["doc_id"].dataType.simpleString()
-        pk = (
-            F.shiftleft(F.col("doc_id").cast("long"), 32)
-            .bitwiseOR(F.col("_ix_doc").cast("long"))
-            .alias("_pk")
-        )
-        hi = F.shiftright(F.col("_pk"), 32).cast(id_type)
-        lo = F.col("_pk").bitwiseAND(F.lit(4294967295)).cast(id_type)
-        parts = _pair_agg_partitions(docs.sparkSession, n)
+        pk = pack_pair(F.col("doc_id"), F.col("_ix_doc")).alias("_pk")
+        hi, lo = unpack_pair(F.col("_pk"), id_type)
+        parts = pair_agg_partitions(docs.sparkSession, n)
         # r19 second pass (guide 2.3 "project before the exchange" /
         # section 8 "shuffle keys and metadata, re-attach decisions"):
         # _thr and _cmt are functions of PAIR-LEVEL doc stats (n_sh,
         # n_capped of both docs) plus the row-level rank bound `core`
         # -- and the packed key already ENCODES both doc ids. So when
-        # the per-doc stats table (n rows x ~32 B) fits the family
-        # broadcast budget twice, the exchange ships only (_pk, core)
+        # the per-doc stats table (n rows x ~32 B, attached twice) fits
+        # what the caller's verify broadcast leaves of the per-query
+        # budget (the verify is the larger win, so it is decided
+        # first), the exchange ships only (_pk, core)
         # = 24 B/row instead of (_pk, _thr, _cmt) = 32, and the two
         # doubles are re-derived POST-aggregate by broadcast-joining
         # the stats back on the unpacked ids. EXACTNESS: thr is
@@ -832,7 +558,7 @@ def _prefix_candidates(
         # below-gate two-column form pair-for-pair). Past the stats
         # budget (the 100 TB regime: billions of docs) the doubles
         # ride the exchange as before -- memory-safe, no new joins.
-        if 2 * n * 32 <= _verify_broadcast_bytes():
+        if broadcasts(n, lambda: _shingle_int_bytes(docs), lambda: n * 32)[1]:
             pair_rows = joined.select(
                 pk, core.alias("_core")
             ).repartition(parts, "_pk")
@@ -851,16 +577,10 @@ def _prefix_candidates(
                 F.col("n_sh").alias("_n_ix"),
                 F.col("n_capped").alias("_nc_ix"),
             )
-            return (
-                agg.join(
-                    F.broadcast(sp),
-                    F.shiftright(F.col("_pk"), 32) == F.col("_p_id"),
-                )
-                .join(
-                    F.broadcast(si),
-                    F.col("_pk").bitwiseAND(F.lit(4294967295))
-                    == F.col("_i_id"),
-                )
+            p_id, i_id = unpack_pair(F.col("_pk"), "long")
+            pairs = (
+                agg.join(F.broadcast(sp), p_id == F.col("_p_id"))
+                .join(F.broadcast(si), i_id == F.col("_i_id"))
                 .filter(
                     (F.col("_c").cast("double") >= thr_c)
                     & (
@@ -868,42 +588,36 @@ def _prefix_candidates(
                         >= F.lit(0.0)
                     )
                 )
-                .select(
-                    F.least(hi, lo).alias("doc_a"),
-                    F.greatest(hi, lo).alias("doc_b"),
+            )
+        else:
+            pair_rows = joined.select(
+                pk,
+                thr_c.alias("_thr"),
+                (core.cast("double") - thr_pos).alias("_cmt"),
+            ).repartition(parts, "_pk")
+            pairs = (
+                pair_rows.groupBy("_pk")
+                .agg(
+                    F.count(F.lit(1)).alias("_c"),
+                    F.min("_thr").alias("_thr"),
+                    F.max("_cmt").alias("_mx"),
                 )
-                .distinct()
+                .filter(
+                    (F.col("_c").cast("double") >= F.col("_thr"))
+                    & (F.col("_mx") >= F.lit(0.0))
+                )
             )
-        pair_rows = joined.select(
-            pk,
-            thr_c.alias("_thr"),
-            (core.cast("double") - thr_pos).alias("_cmt"),
-        ).repartition(parts, "_pk")
-        return (
-            pair_rows.groupBy("_pk")
-            .agg(
-                F.count(F.lit(1)).alias("_c"),
-                F.min("_thr").alias("_thr"),
-                F.max("_cmt").alias("_mx"),
-            )
-            .filter(
-                (F.col("_c").cast("double") >= F.col("_thr"))
-                & (F.col("_mx") >= F.lit(0.0))
-            )
-            .select(
-                F.least(hi, lo).alias("doc_a"),
-                F.greatest(hi, lo).alias("doc_b"),
-            )
-            .distinct()
-        )
+        return pairs.select(
+            F.least(hi, lo).alias("doc_a"), F.greatest(hi, lo).alias("doc_b")
+        ).distinct()
     pair_rows = joined.select(
         "doc_id",
         "_ix_doc",
         thr_c.alias("_thr"),
         (core.cast("double") - thr_pos).alias("_cmt"),
     )
-    if n > BROADCAST_SAFE_ROWS:
-        # corpus-derived partition count (see _PAIR_DOCS_PER_PARTITION):
+    if at_scale(n):
+        # corpus-derived partition count (`physical.pair_agg_partitions`):
         # at 10x this is 250 partitions vs the session's 32 -- measured
         # (plancap walk, same session shape): agg spill 8.12 GB -> ZERO
         # at +12.8% exchange bytes (1,518.8 -> 1,713.4 MB compressed;
@@ -914,7 +628,7 @@ def _prefix_candidates(
         # (Reached past the gate only when the id-range probe refuses
         # the packed key above.)
         pair_rows = pair_rows.repartition(
-            _pair_agg_partitions(docs.sparkSession, n), "doc_id", "_ix_doc"
+            pair_agg_partitions(docs.sparkSession, n), "doc_id", "_ix_doc"
         )
     else:
         pair_rows = pair_rows.repartition("doc_id", "_ix_doc")
@@ -941,7 +655,7 @@ def _banded_sigs(docs: DataFrame, k: int, band_rows: int) -> DataFrame:
     """(doc_id, band_idx, band_hash, _bucket_n): exploded LSH bands
     with per-bucket occupancy, persisted (the index the self-join
     probes)."""
-    return _plan_cached(
+    return plan_cached(
         docs, f"band:{k}:{band_rows}", lambda: _build_banded(docs, k, band_rows)
     )
 
@@ -1038,7 +752,7 @@ def neardup_pairs(
         )
     a = banded.alias("a")
     b = banded.alias("b")
-    # size-gated SHUFFLE_HASH (see BROADCAST_SAFE_ROWS): the band
+    # size-gated SHUFFLE_HASH (see `physical.scale_hint`): the band
     # index, the candidate set and the shingle table are all
     # corpus-sized (the shingle table's array<string> payload
     # especially -- its size ESTIMATE reads broadcast-small while its
@@ -1051,30 +765,8 @@ def neardup_pairs(
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
     )
-    sh = _shingle_ints(docs)
-    pair = (
-        cand.join(
-            _verify_attach(
-                sh.withColumnRenamed("doc_id", "doc_a").withColumnRenamed(
-                    "shi", "sh_a"
-                ),
-                docs,
-                n,
-                scale_hint,
-            ),
-            "doc_a",
-        )
-        .join(
-            _verify_attach(
-                sh.withColumnRenamed("doc_id", "doc_b").withColumnRenamed(
-                    "shi", "sh_b"
-                ),
-                docs,
-                n,
-                scale_hint,
-            ),
-            "doc_b",
-        )
+    pair = cand.join(_verify_side(docs, n, "a", scale_hint), "doc_a").join(
+        _verify_side(docs, n, "b", scale_hint), "doc_b"
     )
     inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
     union = (F.size("sh_a") + F.size("sh_b")).cast("double") - inter
@@ -1144,7 +836,7 @@ def _label_components(
     has equal labels across every edge -- same fixpoint as plain
     propagation, reached exponentially faster.
 
-    All joins are size-gated SHUFFLE_HASH (see BROADCAST_SAFE_ROWS):
+    All joins are size-gated SHUFFLE_HASH (see `physical.scale_hint`):
     labels/neighbor-min are corpus-sized with broadcast-small per-round
     size ESTIMATES; an auto-broadcast of the label table OOMs the
     driver already at 50k docs (found by the 10x fixture) -- at real
@@ -1269,33 +961,18 @@ def ngram_jaccard_pairs(
     # faster intersect, identical counts modulo a <1e-10 xxhash64
     # collision); size-gated SHUFFLE_HASH: postings and shingle tables
     # are corpus-sized with broadcast-small size ESTIMATES (see
-    # neardup_pairs / BROADCAST_SAFE_ROWS). The finished plan HANDLE is
+    # neardup_pairs / `physical.scale_hint`). The finished plan HANDLE is
     # memoized like the index it probes (r8): rebuilding this tree is
     # ~0.2 s of pure Py4J/analysis chatter per call with zero new
     # information -- the cache stores only the immutable DataFrame, no
     # data beyond what the underlying persisted index already holds.
     def build():
-        shi = _shingle_ints(docs)
         n = corpus_count(docs)
         cand = _prefix_candidates(
             docs, threshold, max_postings, n, scale_hint, symmetric=True
         )
-        pair = cand.join(
-            _verify_attach(
-                shi.select(F.col("doc_id").alias("doc_a"), F.col("shi").alias("sh_a")),
-                docs,
-                n,
-                scale_hint,
-            ),
-            "doc_a",
-        ).join(
-            _verify_attach(
-                shi.select(F.col("doc_id").alias("doc_b"), F.col("shi").alias("sh_b")),
-                docs,
-                n,
-                scale_hint,
-            ),
-            "doc_b",
+        pair = cand.join(_verify_side(docs, n, "a", scale_hint), "doc_a").join(
+            _verify_side(docs, n, "b", scale_hint), "doc_b"
         )
         inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
         union = (F.size("sh_a") + F.size("sh_b")).cast("double") - inter
@@ -1304,7 +981,7 @@ def ngram_jaccard_pairs(
             F.col("jaccard") >= threshold
         )
 
-    return _plan_cached(docs, f"jaccard_plan:{threshold}:{max_postings}", build)
+    return plan_cached(docs, f"jaccard_plan:{threshold}:{max_postings}", build)
 
 
 def neardup_cluster_sizes(docs: DataFrame) -> DataFrame:
@@ -1624,7 +1301,7 @@ def containment_pairs(
     def build():
         return _containment_plan(docs, threshold, max_postings)
 
-    return _plan_cached(docs, f"containment_plan:{threshold}:{max_postings}", build)
+    return plan_cached(docs, f"containment_plan:{threshold}:{max_postings}", build)
 
 
 def containment_pairs_observed(
@@ -1668,7 +1345,6 @@ def _containment_plan(
 ) -> DataFrame:
     """Shared plan body for `containment_pairs` (memoized, untapped)
     and `containment_pairs_observed` (per-stage CollectMetrics)."""
-    shi = _shingle_ints(docs)
     n = corpus_count(docs)
     cand = _prefix_candidates(
         docs, threshold, max_postings, n, scale_hint_merge, symmetric=False
@@ -1688,22 +1364,8 @@ def _containment_plan(
     # `_prefix_candidates`). Join semantics are order-independent
     # (both are inner equi-joins on distinct-keyed shi), so the
     # emitted rows are unchanged.
-    pair = cand.join(
-        _verify_attach(
-            shi.select(F.col("doc_id").alias("doc_b"), F.col("shi").alias("sh_b")),
-            docs,
-            n,
-            scale_hint_merge,
-        ),
-        "doc_b",
-    ).join(
-        _verify_attach(
-            shi.select(F.col("doc_id").alias("doc_a"), F.col("shi").alias("sh_a")),
-            docs,
-            n,
-            scale_hint_merge,
-        ),
-        "doc_a",
+    pair = cand.join(_verify_side(docs, n, "b", scale_hint_merge), "doc_b").join(
+        _verify_side(docs, n, "a", scale_hint_merge), "doc_a"
     )
     inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
     scored = pair.select(

@@ -29,6 +29,17 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..physical import (
+    at_scale,
+    attach,
+    corpus_count,
+    ids_packable,
+    pack_pair,
+    plan_cached,
+    scale_hint,
+    unpack_pair,
+)
+
 
 # embeddings-table vector width (fixture and default corpus). Array
 # columns carry no length in the Spark schema, so the dim must be a
@@ -882,38 +893,6 @@ def pq_recall(
     return _recall_at_k(exact, approx)
 
 
-def _vec_pair_packable(embeddings: DataFrame, sigs: DataFrame) -> bool:
-    """True when every vec_id provably fits unsigned 31 bits, so the
-    ORDERED candidate pair (vec_a < vec_b) packs injectively into one
-    long -- the jaccard packed-pair-key gate, vector-family edition.
-    Integral id type required; the range probe is one cached agg over
-    the persisted signature table, only consulted past the
-    broadcast-safety gate."""
-    from pyspark.sql.types import (
-        ByteType,
-        IntegerType,
-        LongType,
-        ShortType,
-    )
-
-    try:
-        dt = sigs.schema["vec_id"].dataType
-    except Exception:
-        return False
-    if not isinstance(dt, (ByteType, ShortType, IntegerType, LongType)):
-        return False
-    from .dedup import _plan_cached
-
-    def measure():
-        row = sigs.agg(
-            F.min("vec_id").alias("lo"), F.max("vec_id").alias("hi")
-        ).collect()[0]
-        return (row["lo"], row["hi"])
-
-    lo, hi = _plan_cached(embeddings, "vec_id_range", measure)
-    return lo is not None and lo >= 0 and hi < (1 << 31)
-
-
 def embedding_neardup_pairs(
     embeddings: DataFrame,
     bands: int = DEFAULT_NEARDUP_BANDS,
@@ -944,7 +923,6 @@ def embedding_neardup_pairs(
     # local oracle suite would fail loudly if a future fixture broke
     # it). spread() fans the single-split scan across cores first.
     from ..tables import spread
-    from .dedup import _plan_cached
 
     sig_udf = _band_sigs_udf(planes, bands, rows_per_band)
 
@@ -963,23 +941,16 @@ def embedding_neardup_pairs(
     # family -- build-once-probe-many across emb_neardup_pairs,
     # doc_semantic_neardup and doc_curation_full (same keying
     # discipline as the doc-side band index: app + input plan + knobs)
-    sigs = _plan_cached(
+    sigs = plan_cached(
         embeddings, f"vecsigs:{bands}:{rows_per_band}:{seed}", _build_sigs
     )
     bands_df = sigs.select("vec_id", F.posexplode("sigs").alias("band", "sig"))
-    # size-gated SHUFFLE_HASH (dedup.BROADCAST_SAFE_ROWS): the band
+    # size-gated SHUFFLE_HASH (`physical.scale_hint`): the band
     # table and the vector tables are corpus-sized; their derived size
     # ESTIMATES read broadcast-small (same failure mode the 10x
     # fixture caught in the text family -- an auto-broadcast of a
     # corpus-sized side OOMs the driver); below the threshold the
     # Catalyst-planned broadcast is safe and faster
-    from .dedup import (
-        BROADCAST_SAFE_ROWS,
-        _verify_broadcast_bytes,
-        corpus_count,
-        scale_hint,
-    )
-
     n = corpus_count(embeddings)
     raw_pairs = bands_df.alias("a").join(
         scale_hint(bands_df.alias("b"), n),
@@ -997,19 +968,15 @@ def embedding_neardup_pairs(
     # distinct groups are identical and the unpack is the exact
     # inverse, cast back to the source id type. Fallback to the
     # two-column form on any other id type or range.
-    if n > BROADCAST_SAFE_ROWS and _vec_pair_packable(embeddings, sigs):
+    if at_scale(n) and ids_packable(embeddings, sigs, "vec_id"):
         id_type = dict(bands_df.dtypes)["vec_id"]
-        packed = (
+        vec_a, vec_b = unpack_pair(F.col("_pk"), id_type)
+        pairs = (
             raw_pairs.select(
-                F.shiftleft(F.col("a.vec_id").cast("long"), 32)
-                .bitwiseOR(F.col("b.vec_id").cast("long"))
-                .alias("_pk")
+                pack_pair(F.col("a.vec_id"), F.col("b.vec_id")).alias("_pk")
             )
             .distinct()
-        )
-        pairs = packed.select(
-            F.shiftright(F.col("_pk"), 32).cast(id_type).alias("vec_a"),
-            F.col("_pk").bitwiseAND(F.lit(4294967295)).cast(id_type).alias("vec_b"),
+            .select(vec_a.alias("vec_a"), vec_b.alias("vec_b"))
         )
     else:
         pairs = raw_pairs.select(
@@ -1032,16 +999,12 @@ def embedding_neardup_pairs(
     # verify exchange; past the budget (the 100 TB regime) the
     # memory-safe hint stands; below the safety gate plans stay
     # Catalyst-planned and bit-identical.
-    def _vec_attach(side: DataFrame) -> DataFrame:
-        if n <= BROADCAST_SAFE_ROWS:
-            return side
-        if 2 * n * (dim * 8 + 32) <= _verify_broadcast_bytes():
-            return F.broadcast(side)
-        return scale_hint(side, n)
+    def vec_bytes():
+        return n * (dim * 8 + 32)
 
     return (
-        pairs.join(_vec_attach(va), "vec_a")
-        .join(_vec_attach(vb), "vec_b")
+        pairs.join(attach(va, n, vec_bytes, scale_hint), "vec_a")
+        .join(attach(vb, n, vec_bytes, scale_hint), "vec_b")
         .select(
             "vec_a",
             "vec_b",

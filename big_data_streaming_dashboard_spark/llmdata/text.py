@@ -12,6 +12,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..physical import plan_cached
+
 TOKEN_RE = r"\s+"
 
 # tiny function-word lexicons for the language-ID heuristic
@@ -1071,17 +1073,15 @@ def _bpe_state(docs: DataFrame, n_merges: int):
     (w, enc, freq) DataFrame after ALL merges applied -- consumed by
     `bpe_train` (merge table) and `bpe_encode_stats` (tokenizer
     application). Memoized like the posting/banded indexes
-    (dedup._plan_cached keying): a trained tokenizer is THE canonical
+    (`physical.plan_cached` keying): a trained tokenizer is THE canonical
     build-once-apply-many artifact -- training it again for the same
     logical corpus and merge count answers nothing new -- and the
     result is k driver-side literals plus the final vocab handle."""
-    from .dedup import _plan_cached
-
-    holder = _plan_cached(
+    holder = plan_cached(
         docs, f"bpe_state:{n_merges}", lambda: [_bpe_state_build(docs, n_merges)]
     )
     # holder[0] = (merges, final_enc, persisted_words); the words frame
-    # rides in the holder so _plan_cached eviction can unpersist it
+    # rides in the holder so plan_cached eviction can unpersist it
     merges, cur, _words = holder[0]
     return merges, cur
 
@@ -1194,15 +1194,13 @@ def repeated_passages_exact(docs: DataFrame, window: int = RK_WINDOW) -> DataFra
     candidate occurrence. At 100 TB the hash prefilter is what keeps
     the text shuffle proportional to the REPEATED volume, not the
     corpus."""
-    from .dedup import _plan_cached
-
     toks = tokens(F.col("text"))
     codes = _token_codes(F.col("text"))
     # the (doc_id, pos, hash) position index feeds BOTH the candidate
     # aggregation and the verify join, and the rolling-hash HOFs defeat
     # exchange-reuse canonicalization (the r3 ReusedExchange gotcha) --
     # persist it once per corpus like the other probe indexes
-    narrow = _plan_cached(
+    narrow = plan_cached(
         docs,
         f"passage_pos:{window}",
         lambda: docs.select(

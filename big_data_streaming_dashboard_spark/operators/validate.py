@@ -34,6 +34,7 @@ from ..config import DEFAULT_CONFIG, PipelineConfig
 from ..functions.keys import dedup_key
 from ..functions.levels import critical_flag, level3, level5
 from ..functions.timeparse import normalize_event_time
+from ..physical import session_cached
 
 REQUIRED_FIELDS = ["captured_time", "latitude", "longitude", "value", "unit"]
 
@@ -50,15 +51,6 @@ def _missing_any(df_cols: list[str]) -> Column:
     return out
 
 
-# Column-expression cache: building the validator tree costs ~0.4 s of
-# py4j round trips, and a dozen queries build it per bench run. Column
-# objects are unresolved/immutable and safely reusable across selects;
-# the cache key carries the SparkContext id (a restarted context
-# invalidates JVM-side expression objects), the schema subset the tree
-# depends on, and the config repr.
-_COLS_CACHE: dict = {}
-
-
 def validate_enrich(bronze: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
     """Bronze (stringly) -> silver: status/error + enriched columns.
 
@@ -66,18 +58,22 @@ def validate_enrich(bronze: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> 
     (raw string), event_time (parsed), lat, lon, value (long), unit,
     level, level5, critical, dedup_key, raw_data, ingestion_timestamp.
     """
-    key = (
-        id(bronze.sparkSession.sparkContext),
-        tuple(
-            c
-            for c in ("event_id", "ingestion_timestamp", *REQUIRED_FIELDS)
-            if c in bronze.columns
-        ),
-        repr(cfg),
+    # session-cached column trees: building the validator tree costs
+    # ~0.4 s of py4j round trips, and a dozen queries build it per bench
+    # run. Column objects are unresolved/immutable and safely reusable
+    # across selects; the key carries the schema subset the tree
+    # depends on and the config repr (the session cache adds the
+    # application: a restarted context invalidates JVM-side objects).
+    present = tuple(
+        c
+        for c in ("event_id", "ingestion_timestamp", *REQUIRED_FIELDS)
+        if c in bronze.columns
     )
-    cols = _COLS_CACHE.get(key)
-    if cols is None:
-        cols = _COLS_CACHE[key] = _validator_columns(bronze.columns, cfg)
+    cols = session_cached(
+        bronze.sparkSession,
+        ("validator", present, repr(cfg)),
+        lambda: _validator_columns(bronze.columns, cfg),
+    )
     return bronze.select(*cols)
 
 

@@ -1667,14 +1667,14 @@ def _compact_parquet_dir(
 # kind -> ((subdir, partition column), ...) for `compact_serving_index`;
 # every listed dir holds per-row facts (rewrite-only compaction), and
 # bm25's stats log is special-cased to its SUM merge in the function.
+# A dense kind's layout is its spec row: the scan dir (cluster-
+# partitioned when ivf), plus the float vecs for every codec but raw.
 _INDEX_COMPACT_LAYOUT: dict = {
-    "pq": (("codes", None), ("vecs", None)),
-    "ivfpq": (("cells", "cluster"), ("vecs", None)),
-    "ivf": (("cells", "cluster"),),
-    "matryoshka": (("prefixes", None), ("vecs", None)),
-    "quant": (("codes", None), ("vecs", None)),
-    "ivfmat": (("cells", "cluster"), ("vecs", None)),
-    "ivfquant": (("cells", "cluster"), ("vecs", None)),
+    **{
+        kind: ((spec.scan, "cluster" if spec.ivf else None),)
+        + ((("vecs", None),) if spec.codec != "raw" else ())
+        for kind, spec in _DENSE_KINDS.items()
+    },
     "bm25": (("postings", "term_bucket"),),
     # r17: the formerly kind-less roots, now stamped -- bands/vecs/
     # corpus rows are per-row facts (append IS rebuild), so rewrite-
@@ -3186,7 +3186,7 @@ def curation_verdict_batches(
     # re-scans the artifact parquet (and re-runs the exact-log merge).
     # Persisted, the per-batch cost is a memory read; the artifacts are
     # index-sized, the same storage class the batch engine persists for
-    # its build-once-probe-many indexes (dedup._plan_cached).
+    # its build-once-probe-many indexes (physical.plan_cached).
     exact_idx = (
         spark.read.parquet(index_path + "/exact")
         .groupBy("text_hash")

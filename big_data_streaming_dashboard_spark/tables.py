@@ -21,6 +21,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .physical import session_cached
+
 TABLE_NAMES = [
     "region",
     "nation",
@@ -43,21 +45,16 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 _NANO_TS_COLUMNS = {"events": ["ts"]}
 
 
-# table-handle cache: what a real engine's CATALOG does -- the scan
-# DataFrame is an immutable plan, and re-deriving it costs a parquet
-# schema-inference round trip per call (a star query touches 5 tables).
-# Keyed on applicationId (never id(): Python ids are reused after a
-# stopped session is GC'd); entries from other applications are purged
-# on first miss, bounding growth across test sessions.
-_TABLE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir, name)
-    hit = _TABLE_CACHE.get(key)
-    if hit is not None:
-        return hit
+    # session-cached: what a real engine's CATALOG does -- the scan
+    # DataFrame is an immutable plan, and re-deriving it costs a parquet
+    # schema-inference round trip per call (a star query touches 5 tables)
+    return session_cached(
+        spark, ("table", sf_dir, name), lambda: _read_table(spark, sf_dir, name)
+    )
+
+
+def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name in _NANO_TS_COLUMNS:
         # runtime-set so it also holds on a caller-provided session (the
         # driver builds its own SparkSession without our factory config)
@@ -66,9 +63,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     for col in _NANO_TS_COLUMNS.get(name, []):
         if dict(df.dtypes).get(col) == "bigint":
             df = df.withColumn(col, F.timestamp_micros(F.expr(f"`{col}` div 1000")))
-    for stale in [k for k in _TABLE_CACHE if k[0] != app_id]:
-        del _TABLE_CACHE[stale]
-    _TABLE_CACHE[key] = df
     return df
 
 
@@ -97,13 +91,6 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
-# bronze DataFrames are immutable logical plans -- safe to reuse across
-# queries. Building one costs ~2.5 s (parquet schema read + the
-# spread() partition probe + the dirt-injection CASE trees) and ~15
-# registry queries start from it; cache per (SparkContext, sf_dir).
-_BRONZE_CACHE: dict = {}
-
-
 def bronze_radiation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Radiation-analog bronze table derived from ``events``.
 
@@ -114,10 +101,16 @@ def bronze_radiation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Must stay in lock-step with plans/fragments.py::BRONZE_SQL.
     """
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _BRONZE_CACHE.get(key)
-    if cached is not None:
-        return cached
+    # session-cached: an immutable logical plan, safe to reuse across
+    # queries. Building one costs ~2.5 s (parquet schema read + the
+    # spread() partition probe + the dirt-injection CASE trees) and ~15
+    # registry queries start from it
+    return session_cached(
+        spark, ("bronze", sf_dir), lambda: _derive_bronze(spark, sf_dir)
+    )
+
+
+def _derive_bronze(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = spread(load_table(spark, sf_dir, "events"), spark)
     ts_str = F.date_format("ts", "yyyy-MM-dd HH:mm:ss")
     lat = (((F.col("user_id") * 37 + F.col("event_id")) % 18000).cast("double") / 100.0) - 90.0
@@ -155,7 +148,7 @@ def bronze_radiation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("event_id") % 97 == 0, F.lit("CPM"))  # case-normalization test
         .otherwise(F.lit("cpm"))
     )
-    out = ev.select(
+    return ev.select(
         F.col("event_id"),
         captured_time.alias("captured_time"),
         latitude.alias("latitude"),
@@ -164,5 +157,3 @@ def bronze_radiation(spark: SparkSession, sf_dir: str) -> DataFrame:
         unit.alias("unit"),
         (F.unix_timestamp("ts") * 1000).alias("ingestion_timestamp"),
     )
-    _BRONZE_CACHE[key] = out
-    return out

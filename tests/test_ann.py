@@ -128,7 +128,7 @@ def test_emb_neardup_vec_attach_broadcast_gated_on_true_bytes(spark, monkeypatch
     """r19 optimization pin (r18 verdict item 4; guide section 3.1):
     the embedding near-dup exact-cosine verify attaches the vector
     table via the same measured-bytes policy as the text family's
-    `_verify_attach`, with the table size derived ARITHMETICALLY
+    verify (`physical.attach`), with the table size derived ARITHMETICALLY
     (rows x (dim x 8 + 32) -- no job): (a) past the broadcast-safety
     gate with the true bytes under the budget, both attachments are
     explicit broadcasts; (b) with the budget forced to zero, the
@@ -136,7 +136,7 @@ def test_emb_neardup_vec_attach_broadcast_gated_on_true_bytes(spark, monkeypatch
     same pairs (strategy-only change). Measured at the 20k-vec 10x
     fixture: total shuffle 10,267 -> 274.5 MB, identical 90,920 output
     rows / 26,858,727 candidates (plans/r19/emb_neardup_pairs_10x_*)."""
-    from big_data_streaming_dashboard_spark.llmdata import dedup as dd
+    from big_data_streaming_dashboard_spark import physical
     from big_data_streaming_dashboard_spark.llmdata.similarity import (
         embedding_neardup_pairs,
     )
@@ -149,7 +149,7 @@ def test_emb_neardup_vec_attach_broadcast_gated_on_true_bytes(spark, monkeypatch
     # (a) scale path, true bytes under the budget: explicit broadcast,
     # and the candidate distinct keys on the packed single long
     # (r19: the jaccard packed-pair-key recipe on this family's dedup)
-    monkeypatch.setattr(dd, "BROADCAST_SAFE_ROWS", 0)
+    monkeypatch.setattr(physical, "BROADCAST_SAFE_ROWS", 0)
     bcast = embedding_neardup_pairs(embs, threshold=0.3)
     plan = bcast._jdf.queryExecution().analyzed().toString()
     assert "strategy=broadcast" in plan

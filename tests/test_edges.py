@@ -79,7 +79,7 @@ def test_curation_stream_empty_batch_dir(spark, tmp_path):
 
 
 def test_index_cache_sees_in_place_corpus_rewrite(spark, tmp_path):
-    """The derived-index cache (dedup._plan_cached) must key on the
+    """The derived-index cache (physical.plan_cached) must key on the
     input FILES, not just the logical plan: an overwrite at the same
     path keeps the same analyzed plan, and before r8 the cache would
     keep serving the previous corpus's persisted index (the same

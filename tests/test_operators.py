@@ -512,11 +512,10 @@ def test_ngram_jaccard_count_filter_binds_without_recall_loss(spark):
     from big_data_streaming_dashboard_spark.llmdata.dedup import (
         DEFAULT_MAX_BUCKET,
         _prefix_candidates,
-        corpus_count,
         ngram_jaccard_pairs,
-        scale_hint,
         shingles,
     )
+    from big_data_streaming_dashboard_spark.physical import corpus_count, scale_hint
 
     rng = random.Random(18)
     vocab = [f"w{i}" for i in range(120)]
@@ -593,23 +592,26 @@ def test_jaccard_packed_pair_key_gate_and_fallback(spark, monkeypatch):
     on the exchange instead of stats-joining them back -- same pairs."""
     from big_data_streaming_dashboard_spark.llmdata.dedup import (
         DEFAULT_MAX_BUCKET,
-        _pair_key_packable,
         _prefix_candidates,
+        _shingle_table,
         ngram_jaccard_pairs,
-        scale_hint,
     )
+    from big_data_streaming_dashboard_spark.physical import ids_packable, scale_hint
+
+    def packable(docs):
+        return ids_packable(docs, _shingle_table(docs), "doc_id")
 
     texts = ["a b c d e f", "a b c d e g", "x y z w v u"]
     small = spark.createDataFrame(
         list(enumerate(texts)), ["doc_id", "text"]
     )
-    assert _pair_key_packable(small)
+    assert packable(small)
     # (a) ids >= 2^31: probe refuses, fallback path, same pairs
     shift = 1 << 31
     big_ids = spark.createDataFrame(
         [(i + shift, t) for i, t in enumerate(texts)], ["doc_id", "text"]
     )
-    assert not _pair_key_packable(big_ids)
+    assert not packable(big_ids)
     cand_big = _prefix_candidates(
         big_ids, 0.5, DEFAULT_MAX_BUCKET, 50_000, scale_hint, symmetric=True
     )
@@ -625,7 +627,7 @@ def test_jaccard_packed_pair_key_gate_and_fallback(spark, monkeypatch):
     sdocs = spark.createDataFrame(
         [("a", "a b c"), ("b", "a b d")], ["doc_id", "text"]
     )
-    assert not _pair_key_packable(sdocs)
+    assert not packable(sdocs)
     # (c) schema through the packed branch is unchanged: int ids stay
     # int (the unpack casts back to the source id type), and the
     # packed candidates match the below-gate form's on the same corpus
@@ -708,16 +710,16 @@ def test_jaccard_pair_agg_partitions_scale_derived(spark):
     gate (explicit-count repartition = REPARTITION_BY_NUM, which AQE
     must not coalesce; default = REPARTITION_BY_COL), and (c) result
     identity across the branch."""
-    from big_data_streaming_dashboard_spark.llmdata.dedup import (
+    from big_data_streaming_dashboard_spark.llmdata.dedup import _prefix_candidates
+    from big_data_streaming_dashboard_spark.physical import (
         _PAIR_DOCS_PER_PARTITION,
-        _pair_agg_partitions,
-        _prefix_candidates,
+        pair_agg_partitions,
         scale_hint,
     )
 
     default = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    assert _pair_agg_partitions(spark, 100) == default
-    assert _pair_agg_partitions(spark, 50_000) == max(
+    assert pair_agg_partitions(spark, 100) == default
+    assert pair_agg_partitions(spark, 50_000) == max(
         default, -(-50_000 // _PAIR_DOCS_PER_PARTITION)
     )
 
@@ -735,7 +737,7 @@ def test_jaccard_pair_agg_partitions_scale_derived(spark):
     # the scale branch): the pair exchange pins its derived count
     big = _prefix_candidates(docs, 0.5, 1000, 50_000, scale_hint, symmetric=True)
     s_big = plan_str(big)
-    parts = _pair_agg_partitions(spark, 50_000)
+    parts = pair_agg_partitions(spark, 50_000)
     # r19 ADVICE fix: match the marker and the derived count on the
     # same plan line rather than exact punctuation (Spark-version-
     # agnostic -- the formatted layout of the node line is not ours)
@@ -764,16 +766,21 @@ def test_verify_attach_broadcast_gated_on_measured_bytes(spark, monkeypatch):
     total shuffle 1,817 -> 444 MB, the 8.59 GB verify sort spill ->
     zero), and (c) the caller's memory-safe scale hint when it does
     not (the 100 TB shape). Estimates are never consulted."""
+    from big_data_streaming_dashboard_spark import physical
     from big_data_streaming_dashboard_spark.llmdata import dedup as dd
 
     docs = spark.createDataFrame(
         [(i, f"v{i} w{i} x{i} y{i} z{i}") for i in range(6)], ["doc_id", "text"]
     )
     side = dd._shingle_ints(docs).withColumnRenamed("doc_id", "doc_a")
+
+    def measured():
+        return dd._shingle_int_bytes(docs)
+
     # (a) below the gate: returned untouched
-    assert dd._verify_attach(side, docs, 5, dd.scale_hint) is side
+    assert physical.attach(side, 5, measured, physical.scale_hint) is side
     # (b) past the gate, measured bytes under the cap: broadcast hint
-    out = dd._verify_attach(side, docs, 50_000, dd.scale_hint)
+    out = physical.attach(side, 50_000, measured, physical.scale_hint)
     # r19 ADVICE fix: pin the strategy, not the node's exact
     # formatting (Spark-version-agnostic)
     assert "strategy=broadcast" in (
@@ -787,14 +794,14 @@ def test_verify_attach_broadcast_gated_on_measured_bytes(spark, monkeypatch):
         ["doc_id", "text"],
     )
     expect = [(1, 2, 0.5)]
-    monkeypatch.setattr(dd, "BROADCAST_SAFE_ROWS", 0)  # scale path
+    monkeypatch.setattr(physical, "BROADCAST_SAFE_ROWS", 0)  # scale path
     got_bcast = dd.ngram_jaccard_pairs(rows_a, threshold=0.5).collect()
     assert [(r["doc_a"], r["doc_b"], r["jaccard"]) for r in got_bcast] == expect
     # (c) past the gate, cap forced below the measured bytes: the
     # memory-safe fallback hint (never an estimate-driven broadcast)
     assert dd._shingle_int_bytes(docs) > 0
     monkeypatch.setenv("SPARK_GRAFT_VERIFY_BROADCAST_MB", "0")
-    out2 = dd._verify_attach(side, docs, 50_000, dd.scale_hint)
+    out2 = physical.attach(side, 50_000, measured, physical.scale_hint)
     assert "strategy=shuffle_hash" in (
         out2._jdf.queryExecution().analyzed().toString()
     )
@@ -813,6 +820,7 @@ def test_verify_broadcast_budget_read_at_decision_time(spark, monkeypatch):
     """SPARK_GRAFT_VERIFY_BROADCAST_MB is read when the broadcast
     decision is made, not frozen at import: setting it after the
     module loaded flips the gate both ways."""
+    from big_data_streaming_dashboard_spark import physical
     from big_data_streaming_dashboard_spark.llmdata import dedup as dd
 
     docs = spark.createDataFrame(
@@ -820,18 +828,77 @@ def test_verify_broadcast_budget_read_at_decision_time(spark, monkeypatch):
         ["doc_id", "text"],
     )
     side = dd._shingle_ints(docs).withColumnRenamed("doc_id", "doc_a")
+
+    def measured():
+        return dd._shingle_int_bytes(docs)
+
     monkeypatch.setenv("SPARK_GRAFT_VERIFY_BROADCAST_MB", "0")
-    assert not dd._verify_broadcasts(docs, 50_000)
+    assert physical.broadcasts(50_000, measured) == (False,)
     assert "strategy=shuffle_hash" in (
-        dd._verify_attach(side, docs, 50_000, dd.scale_hint)
+        physical.attach(side, 50_000, measured, physical.scale_hint)
         ._jdf.queryExecution().analyzed().toString()
     )
     monkeypatch.setenv("SPARK_GRAFT_VERIFY_BROADCAST_MB", "256")
-    assert dd._verify_broadcasts(docs, 50_000)
+    assert physical.broadcasts(50_000, measured) == (True,)
     assert "strategy=broadcast" in (
-        dd._verify_attach(side, docs, 50_000, dd.scale_hint)
+        physical.attach(side, 50_000, measured, physical.scale_hint)
         ._jdf.queryExecution().analyzed().toString()
     )
+
+
+def test_jaccard_stats_and_verify_broadcasts_share_one_budget(spark, monkeypatch):
+    """The packed jaccard branch's per-doc stats broadcast and the
+    caller's verify broadcast count against ONE per-query budget. The
+    verify is decided first (the larger win); the stats join runs only
+    in what it leaves, otherwise the doubles ride the pair exchange.
+    With the budget between the larger single relation and their sum,
+    the verify still broadcasts, the stats join leaves the plan, and
+    the candidate pairs are unchanged."""
+    import random
+
+    from big_data_streaming_dashboard_spark import physical
+    from big_data_streaming_dashboard_spark.llmdata import dedup as dd
+
+    rng = random.Random(37)
+    vocab = [f"b{i}" for i in range(120)]
+    texts = []
+    for _ in range(10):  # 10 families x 4 variants = 40 docs
+        base = [rng.choice(vocab) for _ in range(50)]
+        for n_mut in (0, 3, 10, 30):
+            doc = list(base)
+            for pos in rng.sample(range(50), n_mut):
+                doc[pos] = rng.choice(vocab)
+            texts.append(" ".join(doc))
+    docs = spark.createDataFrame(list(enumerate(texts)), ["doc_id", "text"])
+
+    def analyzed(df):
+        return df._jdf.queryExecution().analyzed().toString()
+
+    def candidates(n):
+        return dd._prefix_candidates(
+            docs, 0.5, dd.DEFAULT_MAX_BUCKET, n, physical.scale_hint, symmetric=True
+        )
+
+    n = 16_200  # past the gate; n stands in for the corpus size
+    verify = 2 * dd._shingle_int_bytes(docs)
+    stats = 2 * n * 32
+    budget = 1 << 20  # SPARK_GRAFT_VERIFY_BROADCAST_MB=1
+    assert max(verify, stats) <= budget < verify + stats
+    monkeypatch.setenv("SPARK_GRAFT_VERIFY_BROADCAST_MB", "1")
+    assert "strategy=broadcast" in analyzed(
+        dd._verify_side(docs, n, "a", physical.scale_hint)
+    )
+    joint = candidates(n)
+    plan = analyzed(joint)
+    assert "_pk" in plan and "_thr" in plan and "_p_id" not in plan, plan
+    got = sorted(map(tuple, joint.collect()))
+    monkeypatch.undo()
+    # at the default budget both fit: the stats join is back
+    alone = candidates(n)
+    assert "_p_id" in analyzed(alone)
+    below = sorted(map(tuple, candidates(2).collect()))
+    assert got == sorted(map(tuple, alone.collect())) == below
+    assert got, "the corpus lost its candidate pairs"
 
 
 def test_contamination_check_flags_shared_passage(spark):
@@ -1040,10 +1107,8 @@ def test_neardup_join_hints_size_gated(spark):
     proven at 50k docs by the 10x fixture)."""
     from pyspark.sql import functions as F
 
-    from big_data_streaming_dashboard_spark.llmdata.dedup import (
-        BROADCAST_SAFE_ROWS,
-        neardup_pairs,
-    )
+    from big_data_streaming_dashboard_spark.llmdata.dedup import neardup_pairs
+    from big_data_streaming_dashboard_spark.physical import BROADCAST_SAFE_ROWS
 
     def analyzed(df):
         return df._jdf.queryExecution().analyzed().toString()

@@ -613,3 +613,42 @@ def test_pareto_all_equal_revenues_degenerate_bucket(spark):
         "B": (1, 100.0),
         "C": (1, 100.0),
     }, got
+
+
+def test_one_owner_for_session_caches_and_scale_gates():
+    """Session caching and the scale-gate decisions have one owner,
+    `physical.py`: no other package module names the application id
+    (a cache key), the broadcast-safety gate or the broadcast budget,
+    so a copied cache or gate cannot come back unnoticed."""
+    import ast
+    import pathlib
+
+    import big_data_streaming_dashboard_spark as pkg
+
+    owned = ("applicationId", "BROADCAST_SAFE_ROWS", "_verify_broadcast_bytes")
+    root = pathlib.Path(pkg.__file__).parent
+    owner = root / "physical.py"
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        if path == owner:
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Name):
+                words = [node.id]
+            elif isinstance(node, ast.Attribute):
+                words = [node.attr]
+            elif isinstance(node, ast.alias):
+                words = [node.name, node.asname or ""]
+            elif isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                words = [node.name]
+            elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+                words = [node.value]
+            else:
+                continue
+            offenders += [
+                f"{path.relative_to(root)}:{node.lineno} {name}"
+                for name in owned
+                if any(name in w for w in words)
+            ]
+    assert owner.exists()
+    assert not offenders, offenders

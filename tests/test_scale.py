@@ -275,21 +275,60 @@ def test_ngram_jaccard_df_cap_bounds_template_shingles(spark):
 
 
 def test_clear_engine_caches(spark):
-    """Cache hygiene: after clearing, every engine-level cache is
-    empty and persisted stages are released; queries rebuild cleanly."""
-    from big_data_streaming_dashboard_spark.llmdata import dedup as _dedup
+    """Cache hygiene: every engine-level cache entry lives in the one
+    session cache (`physical`). Clearing it empties it, releases
+    persisted stages, and queries rebuild cleanly."""
+    from big_data_streaming_dashboard_spark import physical
     from big_data_streaming_dashboard_spark.plans import registry as _reg
     from big_data_streaming_dashboard_spark import tables as _tables
 
-    # populate: a stage-cached query + a table load + the band index
-    _reg.QUERIES["silver_validate"].fn(spark, "/root/testdata/sf0.001").count()
-    _tables.load_table(spark, "/root/testdata/sf0.001", "events")
-    assert _reg._STAGE_CACHE or _tables._TABLE_CACHE
+    from .conftest import SF_SMOKE as sf
+
+    # populate: a stage-cached query (bronze, validator columns, silver),
+    # a table load, a near-dup query (band index, plan cache) and a
+    # corpus count
+    _reg.QUERIES["silver_validate"].fn(spark, sf).count()
+    docs = _tables.load_table(spark, sf, "documents")
+    _reg.QUERIES["doc_neardup_pairs"].fn(spark, sf).count()
+    assert physical.corpus_count(docs) > 0
+    tags = {key[0] for _app, key, _version in physical._CACHE}
+    assert {"silver", "bronze", "validator", "table", "count"} <= tags, tags
+    assert any(t.startswith("band:") for t in tags), tags
+    silver = physical.session_cached(spark, ("silver", sf), lambda: None)
+    assert silver.is_cached
     n = _reg.clear_engine_caches()
-    assert n > 0
-    assert not _reg._STAGE_CACHE
-    assert not _tables._TABLE_CACHE
-    assert not _tables._BRONZE_CACHE
-    assert not _dedup._BANDED_CACHE
+    assert n >= len(tags)
+    assert not physical._CACHE
+    assert not silver.is_cached
     # rebuild works after the purge
-    assert _reg.QUERIES["silver_validate"].fn(spark, "/root/testdata/sf0.001").count() > 0
+    assert _reg.QUERIES["silver_validate"].fn(spark, sf).count() > 0
+
+
+def test_session_cache_drops_other_applications_and_rewrites(spark):
+    """An entry stamped with another applicationId is dropped on the
+    next miss without an unpersist (its session and JVM cache are
+    gone); an entry replaced by a rewrite of the same input (same key,
+    new version) is unpersisted; a hit never rebuilds."""
+    from unittest import mock
+
+    from pyspark.sql import DataFrame
+
+    from big_data_streaming_dashboard_spark import physical
+
+    foreign = mock.Mock(spec=DataFrame)
+    gone = ("app-of-a-stopped-session", ("stage", "sf"), None)
+    physical._CACHE[gone] = foreign
+    old = mock.Mock(spec=DataFrame)
+    key = ("cache-test", 1)
+    try:
+        assert physical.session_cached(spark, key, lambda: old, version=1) is old
+        assert gone not in physical._CACHE
+        foreign.unpersist.assert_not_called()
+        new = mock.Mock(spec=DataFrame)
+        assert physical.session_cached(spark, key, lambda: [new], version=2) == [new]
+        old.unpersist.assert_called_once()
+        assert physical.session_cached(spark, key, lambda: 1 / 0, version=2) == [new]
+        new.unpersist.assert_not_called()
+    finally:
+        for k in [k for k in physical._CACHE if k[1] == key]:
+            del physical._CACHE[k]

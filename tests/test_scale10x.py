@@ -504,9 +504,8 @@ def test_containment_prefix_bounded_on_low_entropy_corpus(spark, scale_dir):
         _bounded_postings,
         _prefix_candidates,
         containment_pairs,
-        corpus_count,
-        scale_hint_merge,
     )
+    from big_data_streaming_dashboard_spark.physical import corpus_count, scale_hint_merge
     from big_data_streaming_dashboard_spark.tables import spread
 
     docs = spread(
